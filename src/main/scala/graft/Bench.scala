@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main — runs every declared query twice at
   * SPARK_GRAFT_SF_DIR and prints ONE compact JSON line.
@@ -32,26 +31,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     // Sample the 1-min load average BEFORE any Spark work: during the
-    // run the bench's own local[32] tasks dominate the load, so only the
+    // run the bench's own local tasks dominate the load, so only the
     // entry-time reading reflects pre-existing machine contention.
     val loadAvgAtStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val cpuMhzAtStart = cpuMhzNow()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    // A/B hook for session-conf experiments (e.g. AQE coalesce policy):
-    // "k=v;k=v". Unset in driver runs — the shipped defaults above are
-    // the benched configuration.
-    SessionConfs.applyExtra(builder)
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     // Warm up session machinery (first-job scheduler + codegen init costs
     // ~5 s and belongs to the JVM, not to whichever query runs first).
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -164,7 +150,7 @@ object Bench {
       else { val m = results.maxBy(_._2._2); (m._1, m._2._2) }
     // Exit-time load sample (r14 verdict #8): the entry-time reading
     // can't classify a load spike that STARTS mid-run. This one is
-    // polluted by the bench's own just-finished local[32] work, so it
+    // polluted by the bench's own just-finished local work, so it
     // is only comparable ACROSS runs of the same binary — an idle
     // machine shows a stable self-load band; a reading far above that
     // band means external contention arrived during the window.

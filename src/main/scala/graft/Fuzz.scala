@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.Random
 
@@ -997,15 +996,7 @@ object Fuzz {
     val outDir = args(1)
     val n = if (args.length > 2) args(2).toInt else 40
     val seed = if (args.length > 3) args(3).toLong else 7L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     Seq("orders", "lineitem", "documents", "customer", "events", "part",
         "supplier").foreach(t =>
       spark.read.parquet(s"$sfDir/$t.parquet").createOrReplaceTempView(t))

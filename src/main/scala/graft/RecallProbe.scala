@@ -78,15 +78,7 @@ object RecallProbe {
     // planted variant from it.
     require(new java.io.File(srcDir).isDirectory,
       s"$srcDir absent — pass an existing corpus dir")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
 
     val sfDir =
       if (!plant) srcDir

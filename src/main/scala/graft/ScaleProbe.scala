@@ -34,15 +34,7 @@ object ScaleProbe {
     val out = args(1)
     val factor = args(2).toInt
     val names = args.drop(3)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     spark.range(1000).selectExpr("sum(id)").collect()
 
     if (!new java.io.File(s"$out/lineitem.parquet").exists()) {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** Dev tool (r14 verdict item 5): drive the streaming pipelines over an
@@ -27,22 +26,14 @@ object StreamProbe {
     require(new java.io.File(inDir).exists(),
       s"$inDir absent — pass an events.parquet file or directory")
     val nChunks = args.lift(1).map(_.toInt).getOrElse(16)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val spark = GraftSession.start(GraftSession.builder()
       // Totals below come from q.recentProgress, which is a ring buffer
       // capped by this conf (default 100): at nChunks > ~100 the
       // in/out/late figures would silently undercount while printed as
       // totals (r15 ADVICE). AvailableNow emits ~nChunks+1 progress
       // events plus idle ticks — keep the buffer comfortably above that.
       .config("spark.sql.streaming.numRecentProgressUpdates",
-        (nChunks + 16).max(128).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        (nChunks + 16).max(128).toString))
 
     val work = java.nio.file.Files.createTempDirectory("graft_stream_probe")
     // The work dir holds a re-chunked copy of a potentially 100× corpus

@@ -6,8 +6,9 @@ import org.apache.spark.sql.DataFrame
   * cut its lineage, so that N downstream consumers read the materialized
   * blocks instead of re-running the upstream fact scan per consumer (AQE
   * does NOT dedupe common subplans via exchange reuse across separate
-  * actions — measured with graft.IoAudit; ScanBudgetSpec pins the per-query
-  * fact-scan budgets that depend on these barriers).
+  * actions — records read per query show it in `perfbench.Harness run`'s
+  * traced records; ScanBudgetSpec pins the per-query fact-scan budgets
+  * that depend on these barriers).
   *
   * Two modes, selected per-session by `spark.graft.barrier.reliable`:
   *

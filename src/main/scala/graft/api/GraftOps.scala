@@ -4,7 +4,8 @@ import graft.api.Barrier._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.expressions.{BloomFns, CosineSimilarity, HilbertCode, KGrams, LshBucket, SimHash64}
+import graft.GraftExtensions
+import graft.expressions.LshBucket
 
 /** The library-facing API: every LLM-pipeline operator as a
   * DataFrame→DataFrame (or Column) function over ARBITRARY input — the
@@ -17,16 +18,6 @@ import graft.expressions.{BloomFns, CosineSimilarity, HilbertCode, KGrams, LshBu
   * so every operator here composes inside whole-stage codegen.
   */
 object GraftOps {
-
-  /** Ensure graft's native functions resolve in this session. */
-  private def ensureRegistered(df: DataFrame): Unit = {
-    val spark = df.sparkSession
-    CosineSimilarity.register(spark)
-    SimHash64.register(spark)
-    LshBucket.register(spark)
-    HilbertCode.register(spark)
-    KGrams.register(spark)
-  }
 
   // ---- text shaping ----------------------------------------------------
 
@@ -94,7 +85,7 @@ object GraftOps {
   /** 64-bit SimHash signature of a token-array column (native codegen
     * expression — xxhash64 bit-vote, no UDF, no explode). Column-level
     * helpers resolve through the function registry: sessions built with
-    * GraftExtensions have them; otherwise call `SimHash64.register`
+    * GraftExtensions have them; otherwise call `GraftExtensions.ensure`
     * (the DataFrame-level ops here do this automatically).
     */
   def simhash(tokens: Column): Column = call_function("simhash64", tokens)
@@ -120,7 +111,7 @@ object GraftOps {
     */
   def cosineTopK(embeddings: DataFrame, idCol: String, vecCol: String,
       probeId: Long, k: Int): DataFrame = {
-    ensureRegistered(embeddings)
+    GraftExtensions.ensure(embeddings.sparkSession)
     val probe = embeddings.filter(col(idCol) === probeId)
       .select(col(vecCol).as("__pv"))
     embeddings.filter(col(idCol) =!= probeId)
@@ -141,7 +132,7 @@ object GraftOps {
     */
   def cosineRange(embeddings: DataFrame, idCol: String, vecCol: String,
       probeId: Long, tau: Double): DataFrame = {
-    ensureRegistered(embeddings)
+    GraftExtensions.ensure(embeddings.sparkSession)
     val probe = embeddings.filter(col(idCol) === probeId)
       .select(col(vecCol).as("__pv"))
     embeddings.filter(col(idCol) =!= probeId)
@@ -157,7 +148,7 @@ object GraftOps {
     */
   def annTopK(embeddings: DataFrame, idCol: String, vecCol: String,
       probeId: Long, k: Int, n: Long): DataFrame = {
-    ensureRegistered(embeddings)
+    GraftExtensions.ensure(embeddings.sparkSession)
     val bits = bucketBitsFor(n)
     val e = embeddings.withColumn("__bucket", lshBucket(col(vecCol), bits))
     val probe = e.filter(col(idCol) === probeId)
@@ -187,7 +178,7 @@ object GraftOps {
     */
   def knnJoin(corpus: DataFrame, probes: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame = {
-    ensureRegistered(corpus)
+    GraftExtensions.ensure(corpus.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val p = probes.select(col(idCol).as("probe_id"), col(vecCol).as("__pv"))
     val w = Window.partitionBy(col("probe_id"))
@@ -211,7 +202,7 @@ object GraftOps {
     */
   def knnJoinLsh(corpus: DataFrame, probes: DataFrame, idCol: String,
       vecCol: String, k: Int, n: Long): DataFrame = {
-    ensureRegistered(corpus)
+    GraftExtensions.ensure(corpus.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val bits = bucketBitsFor(n)
     val c = corpus.withColumn("__bucket", lshBucket(col(vecCol), bits))
@@ -362,7 +353,7 @@ object GraftOps {
     */
   def bloomBuild(df: DataFrame, key: Column, items: Long,
       bits: Long): Array[Byte] = {
-    BloomFns.register(df.sparkSession)
+    GraftExtensions.ensure(df.sparkSession)
     df.select(call_function("bloom_filter_agg",
         xxhash64(key), lit(items), lit(bits)).as("bf"))
       .collect()(0).getAs[Array[Byte]](0)
@@ -378,7 +369,7 @@ object GraftOps {
     */
   def bloomMightContain(spark: org.apache.spark.sql.SparkSession,
       bf: Array[Byte], key: Column): Column = {
-    BloomFns.register(spark)
+    GraftExtensions.ensure(spark)
     call_function("might_contain", lit(bf), xxhash64(key))
   }
 
@@ -1121,7 +1112,7 @@ object GraftOps {
     */
   def bpeTrain(df: DataFrame, textCol: String, merges: Int): DataFrame = {
     require(merges > 0, s"merges $merges")
-    ensureRegistered(df)
+    GraftExtensions.ensure(df.sparkSession)
     def esc(s: String) = s.replace("\\", "\\\\").replace("'", "\\'")
     // kgrams(word, 1) = the char split in ONE byte walk — the
     // substring(word, i, 1)-per-position form re-scans to char i each
@@ -1195,7 +1186,7 @@ object GraftOps {
     */
   def bpeEncode(df: DataFrame, textCol: String,
       rules: Seq[(String, String)]): DataFrame = {
-    ensureRegistered(df)
+    GraftExtensions.ensure(df.sparkSession)
     def esc(s: String) = s.replace("\\", "\\\\").replace("'", "\\'")
     // char split of one word (linear one-pass kgrams — see bpeTrain),
     // then the rule chain folded over it
@@ -1580,7 +1571,7 @@ object GraftOps {
     */
   def writeHilbertOrdered(df: DataFrame, path: String, a: Column, b: Column,
       bits: Int = 16, filesTarget: Int = 8): Unit = {
-    ensureRegistered(df)
+    GraftExtensions.ensure(df.sparkSession)
     df.withColumn("__h", hilbertCode(a, b, bits))
       .repartitionByRange(filesTarget, col("__h"))
       .sortWithinPartitions(col("__h"))

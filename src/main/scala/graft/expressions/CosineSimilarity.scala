@@ -108,18 +108,3 @@ case class CosineSimilarity(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
 }
-
-object CosineSimilarity {
-  /** Register `cosine_sim(a, b)` in the session's function registry so
-    * it is usable from `expr(...)` / SQL text. Idempotent — operators
-    * call this before building plans so the library works on sessions
-    * built without GraftExtensions.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", args => {
-        if (args.length != 2) throw new IllegalArgumentException(
-          s"cosine_sim requires exactly 2 arguments, got ${args.length}")
-        CosineSimilarity(args(0), args(1))
-      }, "built-in")
-}

@@ -59,13 +59,6 @@ object HilbertCode {
         s"hilbert_code bits must be an integer literal, got $other")
     }
   }
-
-  /** Register `hilbert_code(x, y, bits)` for `expr(...)` / SQL text;
-    * idempotent.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hilbert_code", build, "built-in")
 }
 
 /** The d = xy2d iteration (Hilbert 1891, iterative form): walk levels

@@ -65,11 +65,6 @@ object KGrams {
         s"kgrams k must be a positive integer literal, got $other")
     }
   }
-
-  /** Register `kgrams(text, k)` for `expr(...)` / SQL text; idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kgrams", build, "built-in")
 }
 
 /** One-pass gram extraction. A standalone object so Scala emits a

@@ -196,9 +196,4 @@ object LshBucket {
     }
     LshBucket(args.head, lits.head, if (lits.length > 1) lits(1) else 0)
   }
-
-  /** Register the `lsh_bucket` SQL function. Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_bucket", build, "built-in")
 }

@@ -1,5 +1,6 @@
 package graft.expressions
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -128,14 +129,19 @@ object PqEncodeExpr {
   /** Register `pq_encode(vec)` bound to THIS codebook in the session.
     * Re-registering with a new codebook replaces the binding (the
     * caller encodes immediately after registering — see Pq.codesTable).
+    * The old binding is dropped first: rebinding is intended, so it is
+    * not logged as a replaced function.
     */
   def register(spark: org.apache.spark.sql.SparkSession,
-      codebook: Array[Array[Array[Float]]]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      codebook: Array[Array[Array[Float]]]): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    reg.dropFunction(FunctionIdentifier("pq_encode"))
+    reg.createOrReplaceTempFunction(
       "pq_encode",
       args => {
         require(args.length == 1, s"pq_encode takes 1 argument, got ${args.length}")
         PqEncodeExpr(args.head, codebook)
       },
       "built-in")
+  }
 }

@@ -105,13 +105,7 @@ case class SignedProject(child: Expression, outDims: Int)
 }
 
 object SignedProject {
-  /** Register `signed_project(vec, k)` (k a foldable int literal) for
-    * `expr(...)` / SQL use. Idempotent.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "signed_project", args => build(args), "built-in")
-
+  /** Build from SQL-text arguments `(vec, k)`; `k` must be a foldable int. */
   def build(args: Seq[Expression]): SignedProject = {
     if (args.length != 2) throw new IllegalArgumentException(
       s"signed_project requires exactly 2 arguments, got ${args.length}")

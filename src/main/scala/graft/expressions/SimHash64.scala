@@ -90,14 +90,3 @@ case class SimHash64(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
 }
-
-object SimHash64 {
-  /** Register `simhash64(tokens)` for `expr(...)` / SQL text; idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", args => {
-        if (args.length != 1) throw new IllegalArgumentException(
-          s"simhash64 requires exactly 1 argument, got ${args.length}")
-        SimHash64(args(0))
-      }, "built-in")
-}

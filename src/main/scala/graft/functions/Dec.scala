@@ -51,7 +51,7 @@ object Dec {
     * OPTIMIZATION_r16.md). Long sums are associative and exact — the
     * same any-cluster-size determinism property as the decimal path —
     * at ~3× less scan-stage CPU (Spark's double→decimal cast pays a
-    * Double.toString per row; ScratchPerf: revenue pass 1016→364 ms on
+    * Double.toString per row; a revenue pass measured 1016→364 ms on
     * 600 k rows). NOT for columns that can be negative: floor(x+0.5)
     * rounds exact negative half-cents toward +∞ where HALF_UP rounds
     * away from zero.

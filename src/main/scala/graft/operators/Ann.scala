@@ -1,9 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
-import graft.expressions.{CosineSimilarity, LshBucket}
+import graft.expressions.LshBucket
 import graft.sources.Tables
 
 /** Approximate nearest-neighbour search over the embedding column
@@ -35,28 +34,6 @@ object Ann {
   /** Signature bits for this table size (see LshBucket.bitsFor). */
   def bucketBits(n: Long): Int = LshBucket.bitsFor(n)
 
-  /** Retired UDF formulation, kept ONLY as the cross-check oracle for
-    * the native expression (AnnSpec pins bit-identical buckets); the
-    * declared queries use the `lsh_bucket` codegen expression.
-    */
-  private[graft] def lshBucketUdf(nbits: Int): UserDefinedFunction = {
-    val planes = LshBucket.planesFor(nbits)
-    udf { (v: Seq[Float]) =>
-      var sig = 0
-      var i = 0
-      while (i < planes.length) {
-        val p = planes(i)
-        var d = 0.0
-        var j = 0
-        val n = math.min(v.length, p.length)
-        while (j < n) { d += v(j) * p(j); j += 1 }
-        if (d >= 0) sig |= (1 << i)
-        i += 1
-      }
-      sig
-    }
-  }
-
   /** Memoized signature sizing per corpus — the sizing count is one
     * metadata-cheap job, but repeated callers (knn_ann, dedup_embed,
     * bench warm runs) shouldn't re-pay it; at scale this is a catalog
@@ -75,8 +52,6 @@ object Ann {
     * lookups (knn_ann) may use the bucket alone.
     */
   private[graft] def bucketed(spark: SparkSession, sfDir: String): (DataFrame, Int) = {
-    CosineSimilarity.register(spark)
-    LshBucket.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val fp = graft.sources.DataFingerprint.ofTable(sfDir, "embeddings")
     val (bits, bandBits) = bitsMemo.getOrElseUpdate(fp, {
@@ -385,7 +360,6 @@ object Ann {
     */
   def knnAnnPruned(spark: SparkSession, bucketDir: String,
       buckets: Array[Int]): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = spark.read.parquet(bucketDir)
     val probe = e.filter(col("vec_id") === 0)
       .select(col("embedding")).collect()(0)
@@ -579,7 +553,6 @@ object Ann {
     * runs at three scales to keep that claim honest.
     */
   def knnLshBucketVerify(spark: SparkSession, sfDir: String): DataFrame = {
-    LshBucket.register(spark)
     Tables.embeddings(spark, sfDir)
       .select(col("vec_id"),
         expr("CAST(lsh_bucket(embedding, 8) AS BIGINT)").as("bucket"),

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.expressions.CosineSimilarity
 import graft.sources.Tables
 
 /** IVF (inverted-file) approximate nearest-neighbour search — the
@@ -139,7 +138,6 @@ object Ivf {
 
   private[operators] def quantized(spark: SparkSession,
       sfDir: String): (Array[Array[Double]], DataFrame, Int) = {
-    CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val fp = graft.sources.DataFingerprint.ofTable(sfDir, "embeddings")
     val n = e.count()
@@ -263,7 +261,7 @@ object Ivf {
         round(call_function("cosine_sim", col("embedding"), typedlit(probe)), 6)
           .as("sim"))
       .orderBy(col("sim").desc, col("vec_id"))
-      .limit(10)
+      .limit(Ann.K)
   }
 
   /** `knn_ivf` — `defaultNprobe(cells)` of the `cellCount(n)` cells
@@ -368,7 +366,6 @@ object Ivf {
     * aggregate — no window over the corpus, no all-pairs.
     */
   def knnIvfProbeVerify(spark: SparkSession, sfDir: String): DataFrame = {
-    CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"),
         col("embedding").cast("array<double>").as("v"))

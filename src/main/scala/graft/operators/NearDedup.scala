@@ -124,7 +124,6 @@ object NearDedup {
     * pinned in NearDedupSpec, codegen parity in SimHashExprSpec.
     */
   def dedupSimhash(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.expressions.SimHash64.register(spark)
     Tables.documents(spark, sfDir)
       .select(col("lang"), expr("simhash64(split(text, ' '))").as("sig"))
       .groupBy(col("lang"))
@@ -396,7 +395,6 @@ object NearDedup {
     * join of dedup_embed instead of the id ladder.
     */
   def dedupEmbedVerify(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.expressions.CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
     val b = e.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
@@ -487,7 +485,7 @@ object NearDedup {
     * false positives only cost verify work, bounded by the fpp.
     * Simulated split here: doc_id ≤ mid is "history", the rest is the
     * new batch. Uses Spark's own BloomFilterAggregate/MightContain
-    * expressions (registered via BloomFns) — codegen membership, no
+    * expressions (in GraftExtensions' function table) — codegen membership, no
     * custom sketch code. No oracle (bloom layout is engine-specific);
     * n_true_dups is exact arithmetic and the no-false-negative and
     * fpp-bound properties are pinned.

@@ -155,7 +155,7 @@ object Pca {
         round(call_function("cosine_sim", col("embedding"), col("pv")), 6)
           .as("sim"))
       .orderBy(col("sim").desc, col("vec_id"))
-      .limit(10)
+      .limit(Ann.K)
   }
 
   /** `embed_pca_project_verify` — the PROJECTION stage of PCA,

@@ -107,7 +107,6 @@ object Pipeline {
     * bit-identical in CosineExprSpec, so the oracle covers both.
     */
   def embedRproject(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.expressions.SignedProject.register(spark)
     // Flattened to 16 scalar DOUBLE columns (p0..p15): gated outputs
     // must carry scalars only — the driver's pandas-based checker
     // cannot sort/hash array columns (demonstrated in r8).
@@ -163,7 +162,6 @@ object Pipeline {
   def pipelineBpePairs(spark: SparkSession, sfDir: String): DataFrame = {
     // same linear one-pass char split bpeTrain round 1 uses — this twin
     // mirrors that algebra, so it must stay in lockstep
-    graft.expressions.KGrams.register(spark)
     val chars = expr("kgrams(word, 1)")
     Tables.documents(spark, sfDir)
       .select(explode(graft.api.GraftOps.tokens(col("text"))).as("word"))
@@ -458,7 +456,6 @@ object Pipeline {
     * (knn_ann/knn_ivf) unchanged downstream of the rank columns.
     */
   def knnHybrid(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.expressions.CosineSimilarity.register(spark)
     import org.apache.spark.sql.expressions.Window
     val bmTop = graft.api.GraftOps.bm25(Tables.documents(spark, sfDir),
         "doc_id", "text", Seq("data", "merge", "vector"))

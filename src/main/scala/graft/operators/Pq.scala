@@ -84,7 +84,6 @@ object Pq {
     * then rescore the pool on original floats fetched by id.
     */
   def knnPq(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.expressions.CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     val (codes, cb) = codesTable(spark, sfDir)
     val probe = e.filter(col("vec_id") === 0)
@@ -102,7 +101,7 @@ object Pq {
         round(call_function("cosine_sim", col("embedding"), typedlit(probe)), 6)
           .as("sim"))
       .orderBy(col("sim").desc, col("vec_id"))
-      .limit(10)
+      .limit(Ann.K)
   }
 
   /** IVF-PQ codes-table paths already written by this JVM. */
@@ -242,7 +241,6 @@ object Pq {
     * the in-cell top-10 (pinned at test scale).
     */
   def knnIvfPq(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.expressions.CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, sfDir)
     // bind the model once — re-invoking Ivf.quantized for the center
     // count re-pays its e.count() sizing job (ADVICE r13)
@@ -294,7 +292,7 @@ object Pq {
         round(call_function("cosine_sim", col("embedding"), typedlit(probe)), 6)
           .as("sim"))
       .orderBy(col("sim").desc, col("vec_id"))
-      .limit(10)
+      .limit(Ann.K)
   }
 
   /** `knn_pq_verify` — the RESIDUAL encode + corrected-ADC arithmetic

@@ -111,7 +111,6 @@ object Scans {
     * integer shift/mask/xor both engines evaluate identically.
     */
   def layoutHilbert(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.expressions.HilbertCode.register(spark)
     Tables.orders(spark, sfDir)
       .select(col("o_orderkey"),
         graft.api.GraftOps.hilbertCode(

@@ -1,11 +1,34 @@
 package graft
 
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import graft.expressions.LshBucket
 import graft.operators.{Ann, Pipeline}
 
 /** Structural guarantees of the LSH-bucketed ANN path (no SQL oracle). */
 class AnnSpec extends SparkTestBase {
+
+  /** Retired UDF formulation of `lsh_bucket`, kept ONLY as the
+    * cross-check oracle for the native expression; the declared queries
+    * use the codegen expression.
+    */
+  private def lshBucketUdf(nbits: Int): UserDefinedFunction = {
+    val planes = LshBucket.planesFor(nbits)
+    udf { (v: Seq[Float]) =>
+      var sig = 0
+      var i = 0
+      while (i < planes.length) {
+        val p = planes(i)
+        var d = 0.0
+        var j = 0
+        val n = math.min(v.length, p.length)
+        while (j < n) { d += v(j) * p(j); j += 1 }
+        if (d >= 0) sig |= (1 << i)
+        i += 1
+      }
+      sig
+    }
+  }
 
   test("knn_ann returns a full, ladder-confined, sim-ordered top-k") {
     val rows = Ann.knnAnn(spark, sf).collect()
@@ -45,11 +68,10 @@ class AnnSpec extends SparkTestBase {
   }
 
   test("native lsh_bucket expression is bit-identical to the retired UDF") {
-    LshBucket.register(spark)
     val e = sources.Tables.embeddings(spark, sf)
     val bad = e.select(
         expr("lsh_bucket(embedding, 6)").as("native"),
-        Ann.lshBucketUdf(6)(col("embedding")).as("viaUdf"))
+        lshBucketUdf(6)(col("embedding")).as("viaUdf"))
       .filter(col("native") =!= col("viaUdf"))
     assert(bad.count() === 0)
   }
@@ -58,7 +80,6 @@ class AnnSpec extends SparkTestBase {
     // cosine_sim's contract (ADVICE round 3): reading a null slot via
     // ArrayData.getFloat is undefined data — a representation-dependent
     // bucket would diverge between eval paths. NULL instead, in both.
-    LshBucket.register(spark)
     val df = spark.range(2).selectExpr(
       "id",
       "CASE WHEN id = 0 THEN array(cast(1.0 as float), cast(null as float)) " +
@@ -118,7 +139,6 @@ class AnnSpec extends SparkTestBase {
     val p20 = LshBucket.planesFor(20)
     assert(p6.zip(p20.take(6)).forall { case (a, b) => a.sameElements(b) })
     // consequence: a k-bit bucket is the low-k-bit prefix of the K-bit bucket
-    LshBucket.register(spark)
     val bad = sources.Tables.embeddings(spark, sf)
       .select(expr("lsh_bucket(embedding, 6)").as("b6"),
         expr("lsh_bucket(embedding, 12)").as("b12"))
@@ -170,7 +190,6 @@ class AnnSpec extends SparkTestBase {
   }
 
   test("post-cap (bucket, band) self-join: subset of bucket-only pairs, exact dups survive") {
-    LshBucket.register(spark)
     val base = sources.Tables.embeddings(spark, sf)
     // plant an exact duplicate of vec 0 under id -1
     val e = base.unionAll(
@@ -312,7 +331,6 @@ class AnnSpec extends SparkTestBase {
       val dup = base.map(x => x + 0.01f * rnd.nextGaussian().toFloat)
       Seq((i.toLong * 2, base.toSeq), (i.toLong * 2 + 1, dup.toSeq))
     }
-    LshBucket.register(spark)
     val sig = rows.toDF("id", "vec")
       .select(col("id"), expr("lsh_bucket(vec, 24)").as("bucket"),
         expr("lsh_bucket(vec, 24, 24)").as("band"))

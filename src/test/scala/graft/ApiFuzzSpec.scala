@@ -1004,7 +1004,6 @@ class ApiFuzzSpec extends SparkTestBase {
         vocab(rnd.nextInt(vocab.size))).mkString(" ")
       val texts = (0 until 15).map(i => (i.toLong, t()))
       val df = texts.toDF("id", "text")
-      graft.expressions.KGrams.register(spark)
       // gram hashes FROM the engine (hash function not under test);
       // the window-minimum cascade algebra is what the brute replays
       val hashes = df.select(col("id"),

@@ -59,7 +59,6 @@ class ApiSpec extends SparkTestBase {
   }
 
   test("simhash: exact dups collide, unrelated texts differ") {
-    graft.expressions.SimHash64.register(spark)
     val sigs = docs.select(col("id"), GraftOps.simhash(GraftOps.tokens(col("body"))).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sigs(1L) === sigs(2L), "identical texts must share a signature")
@@ -550,7 +549,6 @@ class ApiSpec extends SparkTestBase {
   }
 
   test("int8 quantization: 4x smaller codes, cosine preserved within 1e-2, top-1 stable") {
-    graft.expressions.CosineSimilarity.register(spark)
     val e = sources.Tables.embeddings(spark, sf)
       .withColumn("q", GraftOps.quantizeInt8(col("embedding")))
       .withColumn("deq", GraftOps.dequantizeInt8(col("q")))

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.expressions.CosineSimilarity
 import graft.functions.VectorFns
 import graft.sources.Tables
 
@@ -11,7 +10,6 @@ import graft.sources.Tables
 class CosineExprSpec extends SparkTestBase {
 
   test("cosine_sim expression is bit-identical to the UDF") {
-    CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, sf)
     val probe = e.filter(col("vec_id") === 0).select(col("embedding").as("pv"))
     val bad = e.crossJoin(broadcast(probe))
@@ -23,7 +21,6 @@ class CosineExprSpec extends SparkTestBase {
   }
 
   test("cosine_sim runs inside WholeStageCodegen (no ScalaUDF in the plan)") {
-    CosineSimilarity.register(spark)
     val e = Tables.embeddings(spark, sf)
     val df = e.select(expr("cosine_sim(embedding, embedding)").as("s"))
     // `*(n)` prefixes mark operators fused into a WholeStageCodegen stage
@@ -36,7 +33,6 @@ class CosineExprSpec extends SparkTestBase {
   }
 
   test("degenerate inputs yield NULL, not a truncated cosine (expr and UDF agree)") {
-    CosineSimilarity.register(spark)
     // mismatched lengths: DuckDB errors on these; we return null rather
     // than silently truncating to min-length (ADVICE round 2)
     val r = spark.sql(
@@ -56,7 +52,6 @@ class CosineExprSpec extends SparkTestBase {
   }
 
   test("signed_project expression is bit-identical to the HOF form, codegen and interpreted") {
-    graft.expressions.SignedProject.register(spark)
     val e = Tables.embeddings(spark, sf)
     def mismatches() = e.select(
         graft.api.GraftOps.signedProjection(col("embedding"), 16).as("h"),
@@ -80,7 +75,6 @@ class CosineExprSpec extends SparkTestBase {
   }
 
   test("interpreted (non-codegen) eval matches codegen eval") {
-    CosineSimilarity.register(spark)
     val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     try {
       val e = Tables.embeddings(spark, sf).limit(50)

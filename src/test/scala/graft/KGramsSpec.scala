@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.expressions.{KGrams, KGramsUtil}
+import graft.expressions.KGramsUtil
 
 /** Pins the native one-pass kgrams expression: exact value-equality
   * with the substr-per-position form it replaces (including unicode,
@@ -18,7 +18,6 @@ class KGramsSpec extends SparkTestBase {
   }
 
   test("kgrams == substr form on corpus text and adversarial edges") {
-    KGrams.register(spark)
     val spark2 = spark
     import spark2.implicits._
     val edges = Seq(
@@ -89,7 +88,6 @@ class KGramsSpec extends SparkTestBase {
   }
 
   test("interpreted (non-codegen) eval matches codegen eval") {
-    KGrams.register(spark)
     val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     try {
       sources.Tables.documents(spark, sf).createOrReplaceTempView("kgdocs")

@@ -5,17 +5,20 @@ package graft
   * not see — nothing bounded per-query WARM time. This spec is the
   * tripwire: it times the historically-heaviest declared queries at
   * sf0.1 on the shared test session and fails any query over a budget
-  * set ~6× above its healthy warm time (local[4] runs ~2-3× the
-  * bench's local[32]; healthy heavy queries sit at 1-3 s here, the
+  * set ~6× above its healthy warm time (local[4] runs ~2-3× a
+  * 32-core bench; healthy heavy queries sit at 1-3 s here, the
   * r10 winnow regression would read ~20 s+). Budgets are deliberately
   * loose — this is a blown-plan detector (single-task serialization,
   * lost broadcast, O(n²) expression), not a micro-benchmark; keep
   * them generous enough that machine noise never trips it.
   *
   * Companion discipline (SURVEY §3): any commit touching
-  * SparkEntry-reachable plan code re-runs TimeQuery on the touched
-  * queries, and a round's final commit must BE the recorded closing
-  * bench pair.
+  * SparkEntry-reachable plan code times the touched queries with
+  * `perfbench.Harness run <cores> <sfDir> <namesFile> <seed>
+  * <warmPasses> <traceParity> <out>` (classpath: the
+  * `perfbench/target/scala-2.13/classes` dir plus every jar in
+  * `$SPARK_HOME/jars`), and a round's final commit must BE the
+  * recorded closing bench pair.
   */
 class PerfTripwireSpec extends SparkTestBase {
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.expressions.SimHash64
 
 /** Pins the native simhash64 expression: golden signatures, the
   * xxhash64 single-token identity, codegen/interpreted parity, and the
@@ -11,7 +10,6 @@ import graft.expressions.SimHash64
 class SimHashExprSpec extends SparkTestBase {
 
   test("golden signatures (fixed inputs, stable across JVMs)") {
-    SimHash64.register(spark)
     val r = spark.sql(
       "SELECT simhash64(array('a')) AS s1, " +
         "simhash64(cast(array() as array<string>)) AS s0, " +
@@ -24,7 +22,6 @@ class SimHashExprSpec extends SparkTestBase {
   }
 
   test("single-token simhash IS xxhash64 of the token (+1 vote per set bit)") {
-    SimHash64.register(spark)
     val bad = sources.Tables.documents(spark, sf)
       .select(explode(split(col("text"), " ")).as("t"))
       .filter(length(col("t")) > 0).limit(200)
@@ -34,7 +31,6 @@ class SimHashExprSpec extends SparkTestBase {
   }
 
   test("equals the explode → xxhash64 → bit-vote SQL plan it replaces") {
-    SimHash64.register(spark)
     sources.Tables.documents(spark, sf).createOrReplaceTempView("shdocs")
     val viaExpr = spark.sql(
       "SELECT doc_id, simhash64(split(text, ' ')) AS sig FROM shdocs")
@@ -55,7 +51,6 @@ class SimHashExprSpec extends SparkTestBase {
   }
 
   test("interpreted (non-codegen) eval matches codegen eval") {
-    SimHash64.register(spark)
     val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     try {
       def run(): Array[Long] = sources.Tables.documents(spark, sf)
@@ -70,7 +65,6 @@ class SimHashExprSpec extends SparkTestBase {
   }
 
   test("null array yields null; null tokens are skipped") {
-    SimHash64.register(spark)
     val r = spark.sql(
       "SELECT simhash64(cast(null as array<string>)) AS sn, " +
         "simhash64(array('a', cast(null as string))) AS sskip, " +

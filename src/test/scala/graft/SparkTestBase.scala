@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs — one JVM-wide session (sbt forks a
-  * single test JVM), sf0.001 fixtures for speed. Config mirrors the
-  * driver's Verify session so semantics pinned here hold at the gate.
+  * single test JVM), sf0.001 fixtures for speed. Built by GraftSession like
+  * every main, at 4 cores, so semantics pinned here hold at the gate.
   */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
@@ -17,17 +17,6 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession =
+    GraftSession.start(GraftSession.builder(cpus = 4).appName("graft-tests"))
 }

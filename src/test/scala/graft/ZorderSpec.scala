@@ -90,7 +90,6 @@ class ZorderSpec extends SparkTestBase {
   }
 
   test("hilbert_code codegen expression agrees with the static loop on corpus keys") {
-    graft.expressions.HilbertCode.register(spark)
     import graft.expressions.HilbertCurve
     val rows = Tables.orders(spark, sf)
       .select((col("o_custkey") % 65536L).as("x"),
