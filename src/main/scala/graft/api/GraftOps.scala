@@ -105,6 +105,21 @@ object GraftOps {
   /** The bucket-count sizing rule: ~log2(n/1024), floor 6, cap 24. */
   def bucketBitsFor(n: Long): Int = LshBucket.bitsFor(n)
 
+  /** The exact-cosine refine every top-k of the similarity family ends
+    * in: (idCol, keep…, sim) for the `k` candidates most similar to
+    * `probe` — a vector literal or a column the candidates carry — with
+    * sim the ROUND-6 cosine, ordered by sim descending, then id. A
+    * TakeOrderedAndProject, never a full sort. Scoping the candidates
+    * and excluding the probe row are the caller's.
+    */
+  def refineTopK(candidates: DataFrame, idCol: String, vecCol: String,
+      probe: Column, k: Int, keep: String*): DataFrame =
+    candidates
+      .select((col(idCol) +: keep.map(col)) :+
+        round(cosine(col(vecCol), probe), 6).as("sim"): _*)
+      .orderBy(col("sim").desc, col(idCol))
+      .limit(k)
+
   /** Exact top-k cosine neighbours of one probe row, over any
     * embeddings DataFrame: broadcast 1-row probe, map-side cosine,
     * TakeOrderedAndProject — no shuffle of the vector table.
@@ -114,11 +129,8 @@ object GraftOps {
     GraftExtensions.ensure(embeddings.sparkSession)
     val probe = embeddings.filter(col(idCol) === probeId)
       .select(col(vecCol).as("__pv"))
-    embeddings.filter(col(idCol) =!= probeId)
-      .crossJoin(broadcast(probe))
-      .select(col(idCol), round(cosine(col(vecCol), col("__pv")), 6).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
+    refineTopK(embeddings.filter(col(idCol) =!= probeId).crossJoin(broadcast(probe)),
+      idCol, vecCol, col("__pv"), k)
   }
 
   /** Radius (range) search: ALL neighbours of one probe row whose
@@ -153,11 +165,9 @@ object GraftOps {
     val e = embeddings.withColumn("__bucket", lshBucket(col(vecCol), bits))
     val probe = e.filter(col(idCol) === probeId)
       .select(col("__bucket").as("__pb"), col(vecCol).as("__pv"))
-    e.join(broadcast(probe), col("__bucket") === col("__pb"))
-      .filter(col(idCol) =!= probeId)
-      .select(col(idCol), round(cosine(col(vecCol), col("__pv")), 6).as("sim"))
-      .orderBy(col("sim").desc, col(idCol))
-      .limit(k)
+    refineTopK(e.join(broadcast(probe), col("__bucket") === col("__pb"))
+        .filter(col(idCol) =!= probeId),
+      idCol, vecCol, col("__pv"), k)
   }
 
   /** Exact batch k-NN JOIN: top-k cosine neighbours in `corpus` for

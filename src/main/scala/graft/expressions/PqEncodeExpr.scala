@@ -128,7 +128,9 @@ object PqEncodeExpr {
 
   /** Register `pq_encode(vec)` bound to THIS codebook in the session.
     * Re-registering with a new codebook replaces the binding (the
-    * caller encodes immediately after registering — see Pq.codesTable).
+    * caller encodes immediately after registering, on this object's
+    * lock — see Pq.encoded, which writes the codes through
+    * Materialize.once).
     * The old binding is dropped first: rebinding is intended, so it is
     * not logged as a replaced function.
     */

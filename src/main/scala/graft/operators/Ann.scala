@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.api.GraftOps.refineTopK
 import graft.expressions.LshBucket
-import graft.sources.Tables
+import graft.sources.{Materialize, Tables}
 
 /** Approximate nearest-neighbour search over the embedding column
   * (random-hyperplane LSH). Brute-force cosine top-k is the baseline
@@ -34,15 +35,32 @@ object Ann {
   /** Signature bits for this table size (see LshBucket.bitsFor). */
   def bucketBits(n: Long): Int = LshBucket.bitsFor(n)
 
-  /** Memoized signature sizing per corpus — the sizing count is one
-    * metadata-cheap job, but repeated callers (knn_ann, dedup_embed,
-    * bench warm runs) shouldn't re-pay it; at scale this is a catalog
-    * statistic, not a scan. Keyed by the table's content fingerprint
-    * (file listing + sizes + mtimes), not its path, so rewriting the
-    * data invalidates the memo within a JVM lifetime. Value =
-    * (primary bits, second-level band bits).
+  /** The embeddings row count, once per corpus snapshot — the one
+    * count the family sizes from (signature bits, IVF cells, rescore
+    * pools, training samples). Parquet count() reads row-group
+    * metadata, not data; at scale this is a catalog statistic.
     */
-  private val bitsMemo = scala.collection.concurrent.TrieMap.empty[String, (Int, Int)]
+  private[graft] def embedCount(spark: SparkSession, sfDir: String): Long =
+    Materialize.model(sfDir, Seq("embeddings"), "embeddings_count")(
+      Tables.embeddings(spark, sfDir).count())
+
+  /** The probe every single-probe tier ranks against: vec_id 0's
+    * embedding, fetched once per corpus snapshot.
+    */
+  private[graft] def probeVec(spark: SparkSession, sfDir: String): Seq[Float] =
+    Materialize.model(sfDir, Seq("embeddings"), "probe_vec0")(
+      Tables.embeddings(spark, sfDir).filter(col("vec_id") === 0)
+        .select(col("embedding")).collect()(0).getSeq[Float](0))
+
+  /** The candidate scope of a vec_id-0 probe: rows whose `scopeCol` is
+    * in `ids` — an empty set means the whole table, the tiny-corpus
+    * exact-scan degradation — with the probe itself excluded.
+    */
+  private[graft] def candidates(df: DataFrame, scopeCol: String,
+      ids: Array[Int]): DataFrame =
+    (if (ids.isEmpty) df
+     else df.filter(col(scopeCol).isin(ids.toIndexedSeq.map(Integer.valueOf): _*)))
+      .filter(col("vec_id") =!= 0)
 
   /** Embeddings with their LSH `bucket` (primary signature) and `band`
     * (second-level signature over DISJOINT planes — constant 0 until n
@@ -52,48 +70,34 @@ object Ann {
     * lookups (knn_ann) may use the bucket alone.
     */
   private[graft] def bucketed(spark: SparkSession, sfDir: String): (DataFrame, Int) = {
-    val e = Tables.embeddings(spark, sfDir)
-    val fp = graft.sources.DataFingerprint.ofTable(sfDir, "embeddings")
-    val (bits, bandBits) = bitsMemo.getOrElseUpdate(fp, {
-      val n = e.count()
-      (bucketBits(n), LshBucket.bandBitsFor(n))
-    })
-    val banded = e.withColumn("bucket", expr(s"lsh_bucket(embedding, $bits)"))
+    val n = embedCount(spark, sfDir)
+    val (bits, bandBits) = (bucketBits(n), LshBucket.bandBitsFor(n))
+    val banded = Tables.embeddings(spark, sfDir)
+      .withColumn("bucket", expr(s"lsh_bucket(embedding, $bits)"))
       .withColumn("band",
         if (bandBits == 0) lit(0)
         else expr(s"lsh_bucket(embedding, $bandBits, ${LshBucket.MaxBits})"))
     (banded, bits)
   }
 
-  /** Probe state for the auto-widening `knn_ann` path, memoized per
-    * corpus fingerprint: the vec_id=0 probe vector, the full
-    * margin-ordered probe ladder (primary bucket + every single-bit
-    * flip, closest hyperplanes first), and the cumulative non-probe
-    * candidate count along that ladder. The count query touches only
-    * the ≤ bits+1 ladder buckets and returns ≤ bits+1 rows — a catalog
-    * statistic, not a scan result; memoizing it makes warm re-builds
-    * job-free (same class as [[bitsMemo]]).
+  /** The probe ladder of the auto-widening `knn_ann` path, once per
+    * corpus snapshot: the full margin-ordered ladder (primary bucket +
+    * every single-bit flip, closest hyperplanes first) and the
+    * cumulative non-probe candidate count along it. The count query
+    * touches only the ≤ bits+1 ladder buckets and returns ≤ bits+1
+    * rows — a catalog statistic, not a scan result, so warm re-builds
+    * are job-free.
     */
-  private val widenMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (Seq[Float], Array[Int], Array[Long])]
-
   private[graft] def probeState(spark: SparkSession,
-      sfDir: String): (Seq[Float], Array[Int], Array[Long]) = {
-    val (e, bits) = bucketed(spark, sfDir)
-    val fp = graft.sources.DataFingerprint.ofTable(sfDir, "embeddings")
-    widenMemo.getOrElseUpdate(fp, {
-      val pv = e.filter(col("vec_id") === 0)
-        .select(col("embedding")).collect()(0).getSeq[Float](0)
-      val ladder = probeBuckets(pv, bits, nprobe = bits + 1)
-      val cnts = e.filter(col("bucket")
-            .isin(ladder.toIndexedSeq.map(Integer.valueOf): _*) &&
-            col("vec_id") =!= 0)
+      sfDir: String): (Array[Int], Array[Long]) =
+    Materialize.model(sfDir, Seq("embeddings"), "lsh_probe_ladder") {
+      val (e, bits) = bucketed(spark, sfDir)
+      val ladder = probeBuckets(probeVec(spark, sfDir), bits, nprobe = bits + 1)
+      val cnts = candidates(e, "bucket", ladder)
         .groupBy(col("bucket")).count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val cum = ladder.scanLeft(0L)((a, b) => a + cnts.getOrElse(b, 0L)).tail
-      (pv, ladder, cum)
-    })
-  }
+      (ladder, ladder.scanLeft(0L)((a, b) => a + cnts.getOrElse(b, 0L)).tail)
+    }
 
   /** Multiprobe floor for the default LSH scope (r15 verdict item 6):
     * the count-minimal prefix can stop at 1 rung, and a near-duplicate
@@ -116,7 +120,7 @@ object Ann {
     */
   private[graft] def selectedBuckets(spark: SparkSession, sfDir: String,
       k: Int = K): Array[Int] = {
-    val (_, ladder, cum) = probeState(spark, sfDir)
+    val (ladder, cum) = probeState(spark, sfDir)
     ladder.indices.find(cum(_) >= k) match {
       case Some(i) => ladder.take((i + 1).max(MinProbe.min(ladder.length)))
       case None    => Array.empty
@@ -140,23 +144,14 @@ object Ann {
 
   /** Exact cosine top-K over an explicit bucket selection (empty =
     * whole table — the tiny-corpus degradation). The shared tail of
-    * knnAnn and the AnnSpec quality baselines: any candidate-scoping
-    * policy (ladder prefix, rescore-pool widen) composes with the same
-    * exact ranking.
+    * knnAnn, knnAnnProbing and the AnnSpec quality baselines: any
+    * candidate-scoping policy (ladder prefix, rescore-pool widen,
+    * multi-probe) composes with the same exact ranking.
     */
   private[graft] def knnAnnOverBuckets(spark: SparkSession, sfDir: String,
-      sel: Array[Int]): DataFrame = {
-    val (e, _) = bucketed(spark, sfDir)
-    val (pv, _, _) = probeState(spark, sfDir)
-    val scoped =
-      if (sel.isEmpty) e
-      else e.filter(col("bucket").isin(sel.toIndexedSeq.map(Integer.valueOf): _*))
-    scoped.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("bucket"),
-        round(call_function("cosine_sim", col("embedding"), typedlit(pv)), 6).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(K)
-  }
+      sel: Array[Int]): DataFrame =
+    refineTopK(candidates(bucketed(spark, sfDir)._1, "bucket", sel),
+      "vec_id", "embedding", typedlit(probeVec(spark, sfDir)), K, "bucket")
 
   /** Candidate pool for the quantized rescore stage: rank this many on
     * int8 codes, rescore them on originals. 5× the final k absorbs any
@@ -165,20 +160,6 @@ object Ann {
     * is [[rescorePoolFor]](n, RescorePool), which grows as √n.
     */
   val RescorePool = 50
-
-  /** Memoized embeddings row count per corpus fingerprint — the same
-    * catalog-statistic class as [[bitsMemo]] (parquet count() reads
-    * row-group metadata, not data; memoized so warm paths are
-    * job-free).
-    */
-  private val countMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  private[graft] def embedCount(spark: SparkSession, sfDir: String): Long = {
-    val fp = graft.sources.DataFingerprint.ofTable(sfDir, "embeddings")
-    countMemo.getOrElseUpdate(fp,
-      Tables.embeddings(spark, sfDir).count())
-  }
 
   /** Scale-aware rescore-pool depth: `max(floor, ⌈√n⌉)`. The r13 100×
     * recall ladder showed the fixed-knob decay class twice (IVF nprobe,
@@ -218,14 +199,10 @@ object Ann {
     * top-k-overlap-vs-exact and exact-dup properties pinned in AnnSpec.
     */
   def knnQuant(spark: SparkSession, sfDir: String): DataFrame = {
-    val (e, _) = bucketed(spark, sfDir)
-    val (pv, _, _) = probeState(spark, sfDir)
+    val pv = typedlit(probeVec(spark, sfDir))
     val pool = rescorePoolFor(embedCount(spark, sfDir), RescorePool)
-    val sel = knnQuantBuckets(spark, sfDir)
-    val scoped =
-      if (sel.isEmpty) e
-      else e.filter(col("bucket").isin(sel.toIndexedSeq.map(Integer.valueOf): _*))
-    val candidates = scoped.filter(col("vec_id") =!= 0)
+    val ranked = candidates(bucketed(spark, sfDir)._1, "bucket",
+      knnQuantBuckets(spark, sfDir))
       // quantize AFTER the bucket filter (Project stays above Filter in
       // the optimized plan), so the two HOF passes run only over the
       // selected buckets, not the whole table (measured 0.96 s vs
@@ -237,14 +214,10 @@ object Ann {
       // the rescore pool per partition, never a full sort
       .withColumn("qsim",
         call_function("cosine_sim",
-          graft.api.GraftOps.dequantizeInt8(col("q")), typedlit(pv)))
+          graft.api.GraftOps.dequantizeInt8(col("q")), pv))
       .orderBy(col("qsim").desc, col("vec_id"))
       .limit(pool)
-    candidates
-      .select(col("vec_id"), col("bucket"),
-        round(call_function("cosine_sim", col("embedding"), typedlit(pv)), 6).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(K)
+    refineTopK(ranked, "vec_id", "embedding", pv, K, "bucket")
   }
 
   /** knn_quant's candidate-bucket selection — the ladder prefix that
@@ -269,7 +242,7 @@ object Ann {
     */
   private[graft] def knnQuantBuckets(spark: SparkSession,
       sfDir: String): Array[Int] = {
-    val (_, ladder, cum) = probeState(spark, sfDir)
+    val (ladder, cum) = probeState(spark, sfDir)
     clampedLadderSelection(ladder, cum,
       pool = rescorePoolFor(embedCount(spark, sfDir), RescorePool),
       floor = RescorePool)
@@ -318,18 +291,9 @@ object Ann {
     * writeBucketed layout, so cost is nprobe/2^bits of the corpus.
     */
   private[graft] def knnAnnProbing(spark: SparkSession, sfDir: String,
-      nprobe: Int): DataFrame = {
-    val (e, bits) = bucketed(spark, sfDir)
-    val pv = e.filter(col("vec_id") === 0)
-      .select(col("embedding")).collect()(0).getSeq[Float](0)
-    val buckets = probeBuckets(pv, bits, nprobe)
-    e.filter(col("bucket").isin(buckets.toIndexedSeq.map(Integer.valueOf): _*) &&
-        col("vec_id") =!= 0)
-      .select(col("vec_id"), col("bucket"),
-        round(call_function("cosine_sim", col("embedding"), typedlit(pv)), 6).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(K)
-  }
+      nprobe: Int): DataFrame =
+    knnAnnOverBuckets(spark, sfDir, probeBuckets(probeVec(spark, sfDir),
+      bucketBits(embedCount(spark, sfDir)), nprobe))
 
   /** `knn_ann_multi` — multi-probe variant of knn_ann (4 buckets:
     * primary + 3 lowest-margin bit flips). No oracle; recall
@@ -361,17 +325,10 @@ object Ann {
   def knnAnnPruned(spark: SparkSession, bucketDir: String,
       buckets: Array[Int]): DataFrame = {
     val e = spark.read.parquet(bucketDir)
-    val probe = e.filter(col("vec_id") === 0)
-      .select(col("embedding")).collect()(0)
-    val pv = typedlit(probe.getSeq[Float](0))
-    val scoped =
-      if (buckets.isEmpty) e
-      else e.filter(col("bucket").isin(buckets.toIndexedSeq.map(Integer.valueOf): _*))
-    scoped.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("bucket"),
-        round(call_function("cosine_sim", col("embedding"), pv), 6).as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(K)
+    val pv = e.filter(col("vec_id") === 0)
+      .select(col("embedding")).collect()(0).getSeq[Float](0)
+    refineTopK(candidates(e, "bucket", buckets), "vec_id", "embedding",
+      typedlit(pv), K, "bucket")
   }
 
   /** Probe-batch split for the k-NN join queries: the first
@@ -405,11 +362,10 @@ object Ann {
     */
   def knnJoinAnn(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
-    val n = e.count()
     graft.api.GraftOps.knnJoinLsh(
       e.filter(col("vec_id") >= JoinProbes),
       e.filter(col("vec_id") < JoinProbes),
-      "vec_id", "embedding", k = 5, n = n)
+      "vec_id", "embedding", k = 5, n = embedCount(spark, sfDir))
       .orderBy(col("probe_id"), col("sim").desc, col("vec_id"))
   }
 

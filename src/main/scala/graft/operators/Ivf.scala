@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.api.GraftOps.refineTopK
+import graft.sources.{Materialize, Tables}
 
 /** IVF (inverted-file) approximate nearest-neighbour search — the
   * data-adaptive complement to the random-hyperplane LSH path (Ann):
@@ -123,33 +124,29 @@ object Ivf {
         .repartition(16)
     }
 
-  /** One trained quantizer per (corpus content, k) per JVM — training
-    * is a batch job, not a per-query cost (like the signature table in
-    * NearDedup.dedupMinhash). Keyed by content fingerprint, not path,
-    * so a rewritten corpus retrains instead of serving a stale model.
-    * The model IS the centroid matrix (k×d doubles) — r16 replaced the
-    * MLlib KMeans fit with the native [[Lloyd]] trainer (same budget:
-    * 5 iterations, deterministic init, seed 42), and the assignment
-    * stage with Lloyd.assignCell's codegen argmin — zero
-    * `org.apache.spark.ml` left in src/main.
+  /** The trained quantizer and every vector's cell. The quantizer is
+    * trained once per corpus snapshot (`ivf_centers`) — training is a
+    * batch job, not a per-query cost (like the signature table in
+    * NearDedup.dedupMinhash). The model IS the centroid matrix
+    * (`cellCount(n)`×d doubles) — r16 replaced the MLlib KMeans fit
+    * with the native [[Lloyd]] trainer (same budget: 5 iterations,
+    * deterministic init, seed 42), and the assignment stage with
+    * Lloyd.assignCell's codegen argmin — zero `org.apache.spark.ml`
+    * left in src/main.
     */
-  private val modelMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Array[Array[Double]]]
-
   private[operators] def quantized(spark: SparkSession,
-      sfDir: String): (Array[Array[Double]], DataFrame, Int) = {
+      sfDir: String): (Array[Array[Double]], DataFrame) = {
     val e = Tables.embeddings(spark, sfDir)
-    val fp = graft.sources.DataFingerprint.ofTable(sfDir, "embeddings")
-    val n = e.count()
-    val k = cellCount(n)
     // Training input sized by `trainInput`: coalesced below 1M rows
     // (task overhead dominates), a ~256k deterministic sample above
     // (centroids don't need the full corpus; 5 iterations suffice for
     // a COARSE quantizer — cells only need to be roughly Voronoi,
     // recall comes from nprobe).
-    val centers = modelMemo.getOrElseUpdate((fp, k),
-      Lloyd.fit(trainInput(e, n, "vec_id"), "embedding", k))
-    (centers, e.withColumn("cell", Lloyd.assignCell(col("embedding"), centers)), k)
+    val centers = Materialize.model(sfDir, Seq("embeddings"), "ivf_centers") {
+      val n = Ann.embedCount(spark, sfDir)
+      Lloyd.fit(trainInput(e, n, "vec_id"), "embedding", cellCount(n))
+    }
+    (centers, e.withColumn("cell", Lloyd.assignCell(col("embedding"), centers)))
   }
 
   /** Rank centroids by squared euclidean distance to the probe, keep
@@ -198,25 +195,19 @@ object Ivf {
     if (centers.length <= DriverRankMax) rankCellsDriver(centers, probe, nprobe)
     else rankCellsDistributed(spark, centers, probe, nprobe)
 
-  /** Per-cell member counts EXCLUDING the probe (vec 0), memoized per
-    * corpus fingerprint — the IVF twin of Ann.probeState's ladder
-    * counts: one k-row aggregate per (JVM, corpus snapshot), a catalog
-    * statistic a real deployment stores next to the trained quantizer
-    * (k is capped at 65536 by [[cellCount]], so the collected map is
-    * bounded by the MODEL size, never the data size).
+  /** Per-cell member counts EXCLUDING the probe (vec 0), once per
+    * corpus snapshot — the IVF twin of Ann.probeState's ladder counts:
+    * one k-row aggregate, a catalog statistic a real deployment stores
+    * next to the trained quantizer (k is capped at 65536 by
+    * [[cellCount]], so the collected map is bounded by the MODEL size,
+    * never the data size).
     */
-  private val cellCountsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Map[Int, Long]]
-
   private[graft] def cellCounts(spark: SparkSession,
-      sfDir: String): Map[Int, Long] = {
-    val (_, assigned, _) = quantized(spark, sfDir)
-    val fp = graft.sources.DataFingerprint.ofTable(sfDir, "embeddings")
-    cellCountsMemo.getOrElseUpdate(fp,
-      assigned.filter(col("vec_id") =!= 0)
+      sfDir: String): Map[Int, Long] =
+    Materialize.model(sfDir, Seq("embeddings"), "ivf_cell_counts")(
+      quantized(spark, sfDir)._2.filter(col("vec_id") =!= 0)
         .groupBy(col("cell")).count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap)
-  }
 
   /** The distance-ranked cell prefix a k-NN probe must read to hold at
     * least `k` candidates, floored at the tier's configured `nprobe` —
@@ -230,7 +221,7 @@ object Ivf {
     */
   private[graft] def selectedCells(spark: SparkSession, sfDir: String,
       probe: Seq[Float], nprobe: Int, k: Int): Array[Int] = {
-    val (centers, _, _) = quantized(spark, sfDir)
+    val centers = quantized(spark, sfDir)._1
     val ranked = probeCells(spark, centers, probe, centers.length)
     val cnts = cellCounts(spark, sfDir)
     val cum = ranked.scanLeft(0L)((a, c) => a + cnts.getOrElse(c, 0L)).tail
@@ -247,21 +238,10 @@ object Ivf {
     */
   private[graft] def knnIvfProbing(spark: SparkSession, sfDir: String,
       nprobe: Int): DataFrame = {
-    val (_, assigned, _) = quantized(spark, sfDir)
-    val probe = Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") === 0)
-      .select(col("embedding")).collect()(0).getSeq[Float](0)
-    val cells = selectedCells(spark, sfDir, probe, nprobe, k = 10)
-    val scoped =
-      if (cells.isEmpty) assigned
-      else assigned.filter(
-        col("cell").isin(cells.toIndexedSeq.map(Integer.valueOf): _*))
-    scoped.filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("cell"),
-        round(call_function("cosine_sim", col("embedding"), typedlit(probe)), 6)
-          .as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(Ann.K)
+    val probe = Ann.probeVec(spark, sfDir)
+    val cells = selectedCells(spark, sfDir, probe, nprobe, k = Ann.K)
+    refineTopK(Ann.candidates(quantized(spark, sfDir)._2, "cell", cells),
+      "vec_id", "embedding", typedlit(probe), Ann.K, "cell")
   }
 
   /** `knn_ivf` — `defaultNprobe(cells)` of the `cellCount(n)` cells
@@ -270,8 +250,8 @@ object Ivf {
     * structural guarantees pinned in IvfSpec.
     */
   def knnIvf(spark: SparkSession, sfDir: String): DataFrame = {
-    val (centers, _, _) = quantized(spark, sfDir)
-    knnIvfProbing(spark, sfDir, nprobe = defaultNprobe(centers.length))
+    knnIvfProbing(spark, sfDir,
+      nprobe = defaultNprobe(quantized(spark, sfDir)._1.length))
   }
 
   /** `embed_kmeans` — k-means clustering of the embedding corpus as a
@@ -280,8 +260,8 @@ object Ivf {
     * profile a corpus-curation dashboard reads (topic balance, outlier
     * cells) and the within-cluster-SS the elbow criterion plots.
     *
-    * Reuses the IVF coarse quantizer verbatim (same memoized model per
-    * corpus fingerprint — clustering is a per-snapshot batch artifact,
+    * Reuses the IVF coarse quantizer verbatim (same model per corpus
+    * snapshot — clustering is a per-snapshot batch artifact,
     * never a per-query cost). Distances are one map-side zip_with per
     * row against the k-row broadcast center table; the profile is a
     * k-row 2-phase aggregate. No oracle (k-means is engine-specific);
@@ -290,7 +270,7 @@ object Ivf {
     * mean — the inequality k-means exists to tighten).
     */
   def embedKmeans(spark: SparkSession, sfDir: String): DataFrame = {
-    val (model, assigned, _) = quantized(spark, sfDir)
+    val (model, assigned) = quantized(spark, sfDir)
     val s2 = spark
     import s2.implicits._
     val centers = model.zipWithIndex

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.api.GraftOps.refineTopK
+import graft.sources.{Materialize, Tables}
 
 /** Principal component analysis over the embedding corpus — the
   * dimensionality-reduction complement to the JL signed random
@@ -30,28 +31,33 @@ import graft.sources.Tables
   *
   * Determinism: eigenvector SIGN is canonicalized (largest-magnitude
   * entry forced positive) so the projection is unique; eigenvalues are
-  * sorted descending with the index as tie-break. The model is
-  * memoized per (corpus fingerprint) — it is the per-snapshot artifact
-  * a pipeline trains once and applies everywhere (the IVF/PQ codebook
-  * policy). No SQL oracle exists for an eigenproblem — gated as
+  * sorted descending with the index as tie-break. The model is fit
+  * once per corpus snapshot at full rank (`pca_full_rank`), and every
+  * rank-k consumer takes its top-k prefix — it is the per-snapshot
+  * artifact a pipeline trains once and applies everywhere (the IVF/PQ
+  * codebook policy). No SQL oracle exists for an eigenproblem — gated as
   * no_oracle with PcaSpec pinning orthonormality, descending explained
   * variance, per-component projected variance ≈ eigenvalue, and
   * centered-projection mean ≈ 0.
   */
 object Pca {
-  private val modelMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (Array[Double], Array[Array[Double]], Array[Double])]
 
   /** (means, components (k rows of length d), eigenvalues desc). */
   private[graft] def pcaModel(spark: SparkSession, sfDir: String,
       k: Int): (Array[Double], Array[Array[Double]], Array[Double]) = {
-    val fp = graft.sources.DataFingerprint.ofTable(sfDir, "embeddings") + s"_$k"
-    modelMemo.getOrElseUpdate(fp, {
+    val (means, comps, eig) = fullRank(spark, sfDir)
+    require(k <= comps.length, s"d=${comps.length} k=$k")
+    (means, comps.take(k), eig.take(k))
+  }
+
+  private def fullRank(spark: SparkSession,
+      sfDir: String): (Array[Double], Array[Array[Double]], Array[Double]) =
+    Materialize.model(sfDir, Seq("embeddings"), "pca_full_rank") {
       val emb = Tables.embeddings(spark, sfDir)
         .select(col("embedding").cast("array<double>").as("e"))
       val d = emb.select(size(col("e"))).head.getInt(0)
-      val n = emb.count()
-      require(n > 1 && k <= d, s"n=$n d=$d k=$k")
+      val n = Ann.embedCount(spark, sfDir)
+      require(n > 1, s"n=$n")
       // sufficient statistics in one pass: i <= j upper triangle
       val ex = emb.select(posexplode(col("e")).as(Seq("i", "xi")),
         col("e"))
@@ -75,8 +81,8 @@ object Pca {
         (sxy(i)(j) - sx(i) * sx(j) / n) / (n - 1)
       }
       val es = breeze.linalg.eigSym(cov)
-      // breeze returns eigenvalues ascending; take top-k descending
-      val order = (0 until d).sortBy(i => (-es.eigenvalues(i), i)).take(k)
+      // breeze returns eigenvalues ascending; order them descending
+      val order = (0 until d).sortBy(i => (-es.eigenvalues(i), i))
       val comps = order.map { c =>
         val v = Array.tabulate(d)(r => es.eigenvectors(r, c))
         // canonical sign: the largest-|entry| coordinate is positive
@@ -84,8 +90,7 @@ object Pca {
         if (v(m) < 0) v.map(-_) else v
       }.toArray
       (means, comps, order.map(es.eigenvalues(_)).toArray)
-    })
-  }
+    }
 
   /** `embed_pca` — every vector's coordinates in the top-8 principal
     * axes (ROUND-6): the decorrelated low-rank representation.
@@ -142,7 +147,7 @@ object Pca {
       .select(col("vec_id"), col("embedding"), sketch.as("sketch"))
     val probe = e.filter(col("vec_id") === 0)
       .select(col("sketch").as("probe_sketch"), col("embedding").as("pv"))
-    e.filter(col("vec_id") =!= 0)
+    val pool = e.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(probe))
       .withColumn("d2", aggregate(
         zip_with(col("sketch"), col("probe_sketch"), (a, b) => (a - b) * (a - b)),
@@ -151,11 +156,7 @@ object Pca {
       // 200-floor √n-scaled pool (Ann.rescorePoolFor scaladoc): fixed
       // pools are the 100×-measured decay class; gated sfs unchanged
       .limit(Ann.rescorePoolFor(Ann.embedCount(spark, sfDir), 200))
-      .select(col("vec_id"),
-        round(call_function("cosine_sim", col("embedding"), col("pv")), 6)
-          .as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(Ann.K)
+    refineTopK(pool, "vec_id", "embedding", col("pv"), Ann.K)
   }
 
   /** `embed_pca_project_verify` — the PROJECTION stage of PCA,

@@ -3,7 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.api.GraftOps
-import graft.sources.Tables
+import graft.api.GraftOps.refineTopK
+import graft.expressions.PqEncodeExpr
+import graft.sources.{Materialize, Tables}
 
 /** Product-quantization ANN — the compressed-domain scan tier of the
   * similarity-search family (exact top-k → LSH bucket → IVF cells →
@@ -16,11 +18,10 @@ import graft.sources.Tables
   * by id — a point lookup against the full-precision store).
   *
   * Train/encode are batch-ingest costs, not per-query costs: the
-  * codebook is memoized per corpus fingerprint and the codes table is
-  * materialized once per (JVM, corpus), exactly like the minhash
-  * signature table. No oracle (codebooks are engine-specific);
-  * overlap-vs-exact, determinism, and exact-dup properties pinned in
-  * PqSpec.
+  * codebook is trained and the codes table written once per corpus
+  * snapshot (Materialize), exactly like the minhash signature table.
+  * No oracle (codebooks are engine-specific); overlap-vs-exact,
+  * determinism, and exact-dup properties pinned in PqSpec.
   */
 object Pq {
 
@@ -42,41 +43,33 @@ object Pq {
     */
   val PqRescorePool = 200
 
-  /** Codebooks per (corpus fingerprint) — training is an action. */
-  private val cbMemo = scala.collection.concurrent.TrieMap
-    .empty[String, Array[Array[Array[Float]]]]
-
-  /** Codes-table parquet paths already written by this JVM. */
-  private val writtenCodes = scala.collection.mutable.Set.empty[String]
-
-  private lazy val codesRoot: java.nio.file.Path = {
-    val p = java.nio.file.Files.createTempDirectory("graft_pq_")
-    p.toFile.deleteOnExit()
-    p
-  }
+  /** The codes table `kind` over `rows`: `keep` plus `pq_encode(vecCol)`
+    * as `codes`, written once per corpus snapshot. The ingest path uses
+    * the codegen encoder (PqEncodeExpr) — the pure-HOF GraftOps.pqEncode
+    * is its portable cross-check, pinned code-identical in PqSpec. Both
+    * codebooks bind the one session function name `pq_encode`, so the
+    * registration and the encode that follows it hold one lock.
+    */
+  private def encoded(spark: SparkSession, sfDir: String, kind: String,
+      cb: Array[Array[Array[Float]]], rows: => DataFrame, vecCol: String,
+      keep: Seq[String], partitionBy: Seq[String] = Nil): DataFrame =
+    PqEncodeExpr.synchronized {
+      Materialize.once(spark, sfDir, Seq("embeddings"), kind, partitionBy) {
+        PqEncodeExpr.register(spark, cb)
+        rows.select(keep.map(col) :+ expr(s"pq_encode($vecCol)").as("codes"): _*)
+      }
+    }
 
   /** The (codes table, codebook) for a corpus: trained + encoded once
-    * per (JVM, corpus content), then served from parquet — the ingest/
-    * query split a production pipeline would have.
+    * per corpus snapshot, then served from parquet — the ingest/query
+    * split a production pipeline would have.
     */
   private[graft] def codesTable(spark: SparkSession,
       sfDir: String): (DataFrame, Array[Array[Array[Float]]]) = {
-    val fp = graft.sources.DataFingerprint.ofTable(sfDir, "embeddings")
     val e = Tables.embeddings(spark, sfDir)
-    val cb = cbMemo.getOrElseUpdate(fp, GraftOps.pqTrain(e, "embedding", k = K))
-    val path = codesRoot.resolve(s"pq_codes_$fp").toString
-    Pq.synchronized {
-      if (!writtenCodes.contains(path)) {
-        // ingest path uses the codegen encoder (PqEncodeExpr) — the
-        // pure-HOF GraftOps.pqEncode is its portable cross-check,
-        // pinned code-identical in PqSpec
-        graft.expressions.PqEncodeExpr.register(spark, cb)
-        e.select(col("vec_id"), expr("pq_encode(embedding)").as("codes"))
-          .coalesce(4).write.mode("overwrite").parquet(path)
-        writtenCodes += path
-      }
-    }
-    (spark.read.parquet(path), cb)
+    val cb = Materialize.model(sfDir, Seq("embeddings"), "pq_codebook_k32")(
+      GraftOps.pqTrain(e, "embedding", k = K))
+    (encoded(spark, sfDir, "pq_codes_k32", cb, e, "embedding", Seq("vec_id")), cb)
   }
 
   /** `knn_pq` — top-10 cosine neighbours of vec_id=0: ADC scan over the
@@ -84,10 +77,8 @@ object Pq {
     * then rescore the pool on original floats fetched by id.
     */
   def knnPq(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
     val (codes, cb) = codesTable(spark, sfDir)
-    val probe = e.filter(col("vec_id") === 0)
-      .select(col("embedding")).collect()(0).getSeq[Float](0)
+    val probe = Ann.probeVec(spark, sfDir)
     val (ip, n2) = GraftOps.pqAdcTables(probe, cb)
     val probeNorm = math.sqrt(probe.map(x => x.toDouble * x).sum)
     val pool = codes.filter(col("vec_id") =!= 0)
@@ -96,23 +87,9 @@ object Pq {
       .orderBy(col("adc").desc, col("vec_id"))
       .limit(Ann.rescorePoolFor(Ann.embedCount(spark, sfDir), PqRescorePool))
     // the pool-row set broadcasts; originals are fetched by id only for it
-    broadcast(pool).join(e, "vec_id")
-      .select(col("vec_id"),
-        round(call_function("cosine_sim", col("embedding"), typedlit(probe)), 6)
-          .as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(Ann.K)
+    refineTopK(broadcast(pool).join(Tables.embeddings(spark, sfDir), "vec_id"),
+      "vec_id", "embedding", typedlit(probe), Ann.K)
   }
-
-  /** IVF-PQ codes-table paths already written by this JVM. */
-  private val writtenIvfPq = scala.collection.mutable.Set.empty[String]
-
-  /** RESIDUAL codebooks per corpus fingerprint (the IVF-PQ quantizer —
-    * trained on v − centroid[cell(v)], distinct from the raw-vector
-    * codebook knn_pq's full-scan tier keeps).
-    */
-  private val cbResMemo = scala.collection.concurrent.TrieMap
-    .empty[String, Array[Array[Array[Float]]]]
 
   /** Every vector with its IVF cell and residual (v − centroid[cell]).
     * The residual is what IVF-PQ quantizes (FAISS form): inside one
@@ -126,7 +103,7 @@ object Pq {
     */
   private[graft] def residuals(spark: SparkSession, sfDir: String,
       forTrain: Boolean = false): DataFrame = {
-    val (model, assignedFull, _) = Ivf.quantized(spark, sfDir)
+    val (model, assignedFull) = Ivf.quantized(spark, sfDir)
     // forTrain: sample the BASE rows before the per-row cell/residual
     // arithmetic. Residual computation commutes with row sampling, but
     // pqTrain's internal Bernoulli sample sits ABOVE this transform —
@@ -141,8 +118,7 @@ object Pq {
     // entry: SAMPLE/FILTER BELOW THE EXPENSIVE MAP, NOT ABOVE IT.
     val assigned =
       if (!forTrain) assignedFull
-      else Ivf.trainInput(assignedFull,
-        Tables.embeddings(spark, sfDir).count(), "vec_id")
+      else Ivf.trainInput(assignedFull, Ann.embedCount(spark, sfDir), "vec_id")
     val s2 = spark
     import s2.implicits._
     val centers = model.zipWithIndex
@@ -241,27 +217,17 @@ object Pq {
     * the in-cell top-10 (pinned at test scale).
     */
   def knnIvfPq(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-    // bind the model once — re-invoking Ivf.quantized for the center
-    // count re-pays its e.count() sizing job (ADVICE r13)
-    val (ivfCenters, _, _) = Ivf.quantized(spark, sfDir)
-    val fp = graft.sources.DataFingerprint.ofTable(sfDir, "embeddings")
-    val cbR = cbResMemo.getOrElseUpdate(fp,
+    val ivfCenters = Ivf.quantized(spark, sfDir)._1
+    // RESIDUAL codebook (the IVF-PQ quantizer — trained on
+    // v − centroid[cell(v)], distinct from the raw-vector codebook
+    // knn_pq's full-scan tier keeps); the codes are laid out by cell
+    val cbR = Materialize.model(sfDir, Seq("embeddings"), "ivfpq_codebook_k32")(
       GraftOps.pqTrain(residuals(spark, sfDir, forTrain = true),
         "residual", k = K))
-    val path = codesRoot.resolve(s"ivfpq_codes_$fp").toString
-    Pq.synchronized {
-      if (!writtenIvfPq.contains(path)) {
-        graft.expressions.PqEncodeExpr.register(spark, cbR)
-        residuals(spark, sfDir)
-          .select(col("vec_id"), col("cell"), expr("pq_encode(residual)").as("codes"))
-          .write.partitionBy("cell").mode("overwrite").parquet(path)
-        writtenIvfPq += path
-      }
-    }
-    val codes = spark.read.parquet(path)
-    val probe = e.filter(col("vec_id") === 0)
-      .select(col("embedding")).collect()(0).getSeq[Float](0)
+    val codes = encoded(spark, sfDir, "ivfpq_codes_k32", cbR,
+      residuals(spark, sfDir), "residual", Seq("vec_id", "cell"),
+      partitionBy = Seq("cell"))
+    val probe = Ann.probeVec(spark, sfDir)
     // same auto-widened selection as knn_ivf (k = the final top-10, NOT
     // the ADC pool; same defaultNprobe(cells) rule) so the two tiers
     // scan the SAME cells and the "identical to knn_ivf when the pool
@@ -269,7 +235,7 @@ object Pq {
     // the r13 widen + scale-aware default
     val cells = Ivf.selectedCells(spark, sfDir, probe,
       nprobe = Ivf.defaultNprobe(ivfCenters.length),
-      k = 10)
+      k = Ann.K)
     val centersArr = ivfCenters.map(_.map(_.toFloat))
     // state covers exactly the scanned cells (all of them only in the
     // n−1 < k degradation, where cellCount caps the model at 4 cells)
@@ -277,22 +243,13 @@ object Pq {
     val st = residualAdcState(probe,
       stateCells.map(c => c -> centersArr(c)).toMap, cbR)
     val probeNorm = math.sqrt(probe.map(x => x.toDouble * x).sum)
-    val scoped =
-      if (cells.isEmpty) codes
-      else codes.filter(
-        col("cell").isin(cells.toIndexedSeq.map(Integer.valueOf): _*))
-    val pool = scoped
-      .filter(col("vec_id") =!= 0)
+    val pool = Ann.candidates(codes, "cell", cells)
       .select(col("vec_id"),
         pqCosineAdcResidual(col("codes"), col("cell"), st, probeNorm).as("adc"))
       .orderBy(col("adc").desc, col("vec_id"))
       .limit(Ann.rescorePoolFor(Ann.embedCount(spark, sfDir), PqRescorePool))
-    broadcast(pool).join(e, "vec_id")
-      .select(col("vec_id"),
-        round(call_function("cosine_sim", col("embedding"), typedlit(probe)), 6)
-          .as("sim"))
-      .orderBy(col("sim").desc, col("vec_id"))
-      .limit(Ann.K)
+    refineTopK(broadcast(pool).join(Tables.embeddings(spark, sfDir), "vec_id"),
+      "vec_id", "embedding", typedlit(probe), Ann.K)
   }
 
   /** `knn_pq_verify` — the RESIDUAL encode + corrected-ADC arithmetic

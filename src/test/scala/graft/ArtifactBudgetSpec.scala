@@ -22,8 +22,20 @@ import graft.sources.Materialize
   */
 class ArtifactBudgetSpec extends SparkTestBase {
 
-  test("artifact registry pinned at 24 kinds (r13) — grow it deliberately") {
-    assert(Materialize.Kinds.size === 24,
+  /** The similarity family's models and codes tables and the bucketed
+    * join tables: built once per corpus before the registry covered
+    * in-memory state, registered when their caches moved into
+    * Materialize — their builds now count against the budget.
+    */
+  private val DerivedStateKinds = Seq(
+    "embeddings_count", "probe_vec0", "lsh_probe_ladder", "ivf_centers",
+    "ivf_cell_counts", "pca_full_rank", "pq_codebook_k32",
+    "ivfpq_codebook_k32", "pq_codes_k32", "ivfpq_codes_k32",
+    "bucketed_join_b16")
+
+  test("artifact registry pinned at 35 kinds — grow it deliberately") {
+    assert(DerivedStateKinds.filterNot(Materialize.Kinds.contains).isEmpty)
+    assert(Materialize.Kinds.size === 35,
       s"artifact registry changed (${Materialize.Kinds.size} kinds): " +
         "if intentional, move this pin, note the build cost in " +
         "target/artifact_builds.json, and keep the closing cold total " +

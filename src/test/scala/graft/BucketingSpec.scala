@@ -92,6 +92,34 @@ class BucketingSpec extends SparkTestBase {
       s"bucketed gated join must not shuffle either input:\n$plan")
   }
 
+  test("join_bucketed rebuilds its bucketed tables when orders is rewritten") {
+    val dir = Files.createTempDirectory("graft_bkt_sf")
+    val tmp = Files.createTempDirectory("graft_bkt_orders")
+    try {
+      Seq("orders", "customer").foreach(t => Files.copy(
+        java.nio.file.Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet")))
+      def plainCount() = Tables.customer(spark, dir.toString)
+        .join(Tables.orders(spark, dir.toString), col("c_custkey") === col("o_custkey"))
+        .count()
+      def bucketedCount() = graft.operators.Joins.joinBucketed(spark, dir.toString)
+        .agg(sum(col("n_orders"))).collect()(0).getLong(0)
+      assert(bucketedCount() === plainCount())
+      // rewrite orders with a subset of its rows and a new mtime
+      Tables.orders(spark, dir.toString).filter(col("o_orderkey") % 3 === 0)
+        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = Files.list(tmp).filter(_.toString.endsWith(".parquet")).findFirst().get()
+      val orders = dir.resolve("orders.parquet")
+      Files.move(part, orders, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(orders, java.nio.file.attribute.FileTime
+        .fromMillis(System.currentTimeMillis() + 60000))
+      val plain = plainCount()
+      assert(bucketedCount() === plain,
+        "join_bucketed must join the rewritten orders, not the tables built before")
+      assert(plain < Tables.orders(spark, sf).count(), "the rewrite dropped rows")
+    } finally Seq(dir, tmp).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+  }
+
   test("dynamic partition pruning: a dim filter prunes the fact's partition scan at runtime") {
     // The other half of the layout story beside bucketing: a fact table
     // partitioned on a join-correlated column must NOT read every
