@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one place a graft session is built. Bench, Verify, Explain, Fuzz,
-  * the probes and the test base all start from [[builder]], so every
+/** The one place a graft session is built. Bench, Verify, Explain,
+  * ScaleProbe, the test-side mains under `src/test` (Fuzz, RecallProbe,
+  * StreamProbe) and the test base all start from [[builder]], so every
   * surface runs under the same configuration:
   *   - `local[cpus]` with `cpus` shuffle partitions;
   *   - UTC session time zone;

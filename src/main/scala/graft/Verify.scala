@@ -1,7 +1,10 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each declared query's result → parquet
+  * (`SparkEntry.queries`, derived from the one `SparkEntry.registry`),
+  * plus oracle_sql.json (`SparkEntry.oracleSql`: name → DuckDB SQL for
+  * the queries whose `Query` declares an oracle), for the DuckDB oracle
+  * compare (tools/compare.py). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)

@@ -17,14 +17,6 @@ object Dec {
   /** Cast to DECIMAL(18,2) — money columns, pre-aggregation. */
   def dec2(c: Column): Column = c.cast("decimal(18,2)")
 
-  /** Cast to DECIMAL(18,6) — rates/ratios, pre-aggregation. */
-  def dec6(c: Column): Column = c.cast("decimal(18,6)")
-
-  /** Final-result cast: both engines widen decimal avg/sum differently;
-    * an explicit outer cast makes them agree.
-    */
-  def asDec(c: Column, p: Int, s: Int): Column = c.cast(s"decimal($p,$s)")
-
   /** Final OUTPUT cast for decimal aggregates: pin scale via an explicit
     * decimal cast, then convert to DOUBLE. Decimal→double of the same
     * exact decimal value is bit-identical in Spark and DuckDB, and float

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Query
 import graft.api.Barrier._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1090,46 +1091,8 @@ object Aggregates {
       .orderBy(col("l_returnflag"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "agg_trimmed_mean" -> aggTrimmedMean _,
-    "agg_theil" -> aggTheil _,
-    "agg_weighted_median" -> aggWeightedMedian _,
-    "agg_hhi" -> aggHhi _,
-    "agg_corr_matrix" -> aggCorrMatrix _,
-    "agg_pricing" -> aggPricing _,
-    "agg_histogram" -> aggHistogram _,
-    "agg_equidepth" -> aggEquidepth _,
-    "agg_salted" -> aggSalted _,
-    "agg_mode" -> aggMode _,
-    "agg_unpivot" -> aggUnpivot _,
-    "agg_distinct" -> aggDistinct _,
-    "agg_rollup" -> aggRollup _,
-    "agg_cube" -> aggCube _,
-    "agg_having" -> aggHaving _,
-    "agg_groupingsets" -> aggGroupingSets _,
-    "agg_approx" -> aggApprox _,
-    "agg_sketch_reagg" -> aggSketchReagg _,
-    "agg_hll_intersect" -> aggHllIntersect _,
-    "agg_decay" -> aggDecay _,
-    "agg_approx_quantile" -> aggApproxQuantile _,
-    "agg_approx_freq" -> aggApproxFreq _,
-    "agg_argmax" -> aggArgmax _,
-    "agg_skew_kurt" -> aggSkewKurt _,
-    "agg_group_by_all" -> aggGroupByAll _,
-    "agg_quantile" -> aggQuantile _,
-    "agg_quantile_disc" -> aggQuantileDisc _,
-    "agg_winsorize" -> aggWinsorize _,
-    "agg_stats" -> aggStats _,
-    "agg_regression" -> aggRegression _,
-    "agg_entropy" -> aggEntropy _,
-    "agg_gini" -> aggGini _,
-    "agg_filter" -> aggFilter _,
-    "agg_stringagg" -> aggStringagg _,
-    "agg_pivot" -> aggPivot _
-  )
-
-  val oracle: Map[String, String] = Map(
-    "agg_weighted_median" ->
+  val registry: Seq[Query] = Seq(
+    Query("agg_weighted_median", aggWeightedMedian _, Some(
       """WITH bp AS (
         |  SELECT l_returnflag, l_extendedprice AS price,
         |    SUM(CAST(CAST(l_quantity AS DECIMAL(7,2)) * 100 AS BIGINT)) AS w
@@ -1144,8 +1107,8 @@ object Aggregates {
         |  CAST(MAX(total_w) AS BIGINT) AS total_weight_cents,
         |  MIN(price) AS wmedian_price
         |FROM c WHERE cum * 2 >= total_w
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "agg_trimmed_mean" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Query("agg_trimmed_mean", aggTrimmedMean _, Some(
       """WITH bp AS (
         |  SELECT l_returnflag, CAST(l_extendedprice AS DECIMAL(9,2))
         |    AS price, COUNT(*) AS w
@@ -1168,8 +1131,8 @@ object Aggregates {
         |  CAST(MAX(lo) AS BIGINT) AS n_trimmed_each,
         |  ROUND(CAST(SUM(price * kept) AS DOUBLE) /
         |    CAST(MAX(hi - lo) AS DOUBLE), 6) AS trimmed_mean
-        |FROM k GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "agg_theil" ->
+        |FROM k GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Query("agg_theil", aggTheil _, Some(
       """WITH pc AS (
         |  SELECT c_mktsegment, c_custkey,
         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -1186,8 +1149,8 @@ object Aggregates {
         |  ROUND(SUM((CAST(cents AS DOUBLE) * n_seg / CAST(seg_cents AS DOUBLE)) *
         |    ln(CAST(cents AS DOUBLE) * n_seg / CAST(seg_cents AS DOUBLE))) /
         |    MAX(n_seg), 6) AS theil
-        |FROM s GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "agg_hhi" ->
+        |FROM s GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+    Query("agg_hhi", aggHhi _, Some(
       """WITH pc AS (
         |  SELECT c_mktsegment, c_custkey,
         |    CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -1203,8 +1166,8 @@ object Aggregates {
         |  ROUND(SUM((CAST(cents AS DOUBLE) / CAST(seg_cents AS DOUBLE)) *
         |    (CAST(cents AS DOUBLE) / CAST(seg_cents AS DOUBLE))) * 10000.0, 6)
         |    AS hhi
-        |FROM s GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "agg_corr_matrix" ->
+        |FROM s GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
+    Query("agg_corr_matrix", aggCorrMatrix _, Some(
       """WITH m AS (
         |  SELECT CAST(l_quantity AS DECIMAL(9,2)) AS q,
         |    CAST(l_extendedprice AS DECIMAL(9,2)) AS p,
@@ -1237,8 +1200,8 @@ object Aggregates {
         |  ROUND((n * s_pd - s_p * s_d) / sqrt((n * s_pp - s_p * s_p) * (n * s_dd - s_d * s_d)), 6) AS corr_p_d,
         |  ROUND((n * s_pt - s_p * s_t) / sqrt((n * s_pp - s_p * s_p) * (n * s_tt - s_t * s_t)), 6) AS corr_p_t,
         |  ROUND((n * s_dt - s_d * s_t) / sqrt((n * s_dd - s_d * s_d) * (n * s_tt - s_t * s_t)), 6) AS corr_d_t
-        |FROM s""".stripMargin,
-    "agg_histogram" ->
+        |FROM s""".stripMargin)),
+    Query("agg_histogram", aggHistogram _, Some(
       """SELECT CAST(bin * 10000.0 AS DOUBLE) AS bin_lo,
         |  CAST((bin + 1) * 10000.0 AS DOUBLE) AS bin_hi,
         |  n_orders, sum_price
@@ -1247,13 +1210,13 @@ object Aggregates {
         |    COUNT(*) AS n_orders,
         |    CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS DOUBLE) AS sum_price
         |  FROM orders GROUP BY bin)
-        |ORDER BY bin_lo""".stripMargin,
-    "agg_unpivot" ->
+        |ORDER BY bin_lo""".stripMargin)),
+    Query("agg_unpivot", aggUnpivot _, Some(
       """SELECT user_id, event_type, COUNT(*) AS n_events
         |FROM events
         |GROUP BY user_id, event_type
-        |ORDER BY user_id, event_type""".stripMargin,
-    "agg_mode" ->
+        |ORDER BY user_id, event_type""".stripMargin)),
+    Query("agg_mode", aggMode _, Some(
       """SELECT o_orderstatus, mode_priority, n_orders FROM (
         |  SELECT o_orderstatus, o_orderpriority AS mode_priority,
         |    COUNT(*) AS n_orders,
@@ -1262,8 +1225,8 @@ object Aggregates {
         |  FROM orders
         |  GROUP BY o_orderstatus, o_orderpriority)
         |WHERE rn = 1
-        |ORDER BY o_orderstatus""".stripMargin,
-    "agg_equidepth" ->
+        |ORDER BY o_orderstatus""".stripMargin)),
+    Query("agg_equidepth", aggEquidepth _, Some(
       """WITH p AS (
         |  SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price
         |  FROM orders),
@@ -1272,8 +1235,8 @@ object Aggregates {
         |SELECT CAST(1 + len(list_filter(cuts, x -> price > x)) AS BIGINT) AS bucket,
         |  COUNT(*) AS n_orders, MIN(price) AS lo, MAX(price) AS hi
         |FROM p CROSS JOIN c
-        |GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "agg_decay" ->
+        |GROUP BY bucket ORDER BY bucket""".stripMargin)),
+    Query("agg_decay", aggDecay _, Some(
       """WITH e AS (
         |  SELECT user_id, value, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us
         |  FROM events),
@@ -1287,14 +1250,14 @@ object Aggregates {
         |  ROUND(SUM(w), 6) AS decayed_weight,
         |  ROUND(SUM(w * value) / SUM(w), 6) AS recency_score,
         |  COUNT(*) AS n_events
-        |FROM w GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "agg_salted" ->
+        |FROM w GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    Query("agg_salted", aggSalted _, Some(
       """SELECT event_type,
         |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total_value
         |FROM events
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-    "agg_winsorize" ->
+        |ORDER BY event_type""".stripMargin)),
+    Query("agg_winsorize", aggWinsorize _, Some(
       """WITH d AS (SELECT lang, CAST(n_chars AS DOUBLE) AS v FROM documents),
         |c AS (SELECT lang, quantile_cont(v, 0.05) AS p05,
         |             quantile_cont(v, 0.95) AS p95
@@ -1305,16 +1268,16 @@ object Aggregates {
         |  CAST(SUM(CASE WHEN v > p95 THEN 1 ELSE 0 END) AS BIGINT) AS n_clip_hi,
         |  COUNT(*) AS n_docs
         |FROM d JOIN c USING (lang)
-        |GROUP BY d.lang ORDER BY d.lang""".stripMargin,
-    "agg_quantile" ->
+        |GROUP BY d.lang ORDER BY d.lang""".stripMargin)),
+    Query("agg_quantile", aggQuantile _, Some(
       """SELECT l_returnflag,
         |  quantile_cont(l_quantity, 0.5) AS median_qty,
         |  quantile_cont(l_quantity, 0.9) AS p90_qty,
         |  COUNT(*) AS n_rows
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "agg_skew_kurt" ->
+        |ORDER BY l_returnflag""".stripMargin)),
+    Query("agg_skew_kurt", aggSkewKurt _, Some(
       """WITH p AS (
         |  SELECT event_type,
         |    CAST(value AS DECIMAL(7,2)) AS v,
@@ -1335,15 +1298,15 @@ object Aggregates {
         |  ROUND((s4/n - 4*(s1/n)*(s3/n) + 6*(s1/n)*(s1/n)*(s2/n)
         |      - 3*(s1/n)*(s1/n)*(s1/n)*(s1/n)) /
         |    pow(s2/n - (s1/n)*(s1/n), 2) - 3, 6) AS kurtosis_excess
-        |FROM s ORDER BY event_type""".stripMargin,
-    "agg_group_by_all" ->
+        |FROM s ORDER BY event_type""".stripMargin)),
+    Query("agg_group_by_all", aggGroupByAll _, Some(
       // deliberately IDENTICAL query text modulo the table name
       """SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
         |  CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
         |FROM lineitem
         |GROUP BY ALL
-        |ORDER BY ALL""".stripMargin,
-    "agg_argmax" ->
+        |ORDER BY ALL""".stripMargin)),
+    Query("agg_argmax", aggArgmax _, Some(
       """WITH e AS (
         |  SELECT event_type, event_id, value,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -1355,8 +1318,8 @@ object Aggregates {
         |  arg_min(event_id, k) AS bottom_event_id,
         |  MIN(value) AS bottom_value,
         |  COUNT(*) AS n_events
-        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-    "agg_quantile_disc" ->
+        |FROM e GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("agg_quantile_disc", aggQuantileDisc _, Some(
       // identical nearest-rank formula, NOT quantile_disc: pinning the
       // construction keeps the oracle engine-dialect-free
       """WITH r AS (
@@ -1370,8 +1333,8 @@ object Aggregates {
         |  MAX(CASE WHEN rn = CEIL(n * 0.5) THEN l_quantity END) AS median_qty,
         |  MAX(CASE WHEN rn = CEIL(n * 0.9) THEN l_quantity END) AS p90_qty,
         |  CAST(MAX(n) AS BIGINT) AS n_rows
-        |FROM r GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "agg_filter" ->
+        |FROM r GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
+    Query("agg_filter", aggFilter _, Some(
       """SELECT l_returnflag,
         |  COUNT(*) AS n_rows,
         |  COUNT(*) FILTER (WHERE l_linestatus = 'F') AS n_finished,
@@ -1383,8 +1346,8 @@ object Aggregates {
         |    AS qty_lowtax
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "agg_entropy" ->
+        |ORDER BY l_returnflag""".stripMargin)),
+    Query("agg_entropy", aggEntropy _, Some(
       """WITH c AS (
         |  SELECT lang, source, COUNT(*) AS c
         |  FROM documents GROUP BY 1, 2)
@@ -1392,8 +1355,8 @@ object Aggregates {
         |  ROUND(ln(CAST(SUM(c) AS DOUBLE)) -
         |    SUM(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))) /
         |      CAST(SUM(c) AS DOUBLE), 6) AS entropy
-        |FROM c GROUP BY lang ORDER BY lang""".stripMargin,
-    "agg_gini" ->
+        |FROM c GROUP BY lang ORDER BY lang""".stripMargin)),
+    Query("agg_gini", aggGini _, Some(
       """WITH r AS (
         |  SELECT event_type, CAST(value AS DECIMAL(18,2)) AS v,
         |    ROW_NUMBER() OVER (PARTITION BY event_type
@@ -1403,8 +1366,8 @@ object Aggregates {
         |  ROUND(2.0 * CAST(SUM(i * v) AS DOUBLE) /
         |      (CAST(COUNT(*) AS DOUBLE) * CAST(SUM(v) AS DOUBLE)) -
         |    CAST(COUNT(*) + 1 AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS gini
-        |FROM r GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "agg_regression" ->
+        |FROM r GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Query("agg_regression", aggRegression _, Some(
       """WITH t AS (
         |  SELECT event_type, value,
         |    CAST(epoch_us(CAST(ts AS TIMESTAMP)) - 1704067200000000 AS DOUBLE)
@@ -1415,23 +1378,23 @@ object Aggregates {
         |  ROUND(regr_intercept(value, x), 6) AS intercept,
         |  ROUND(regr_r2(value, x), 6) AS r2,
         |  COUNT(*) AS n_events
-        |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "agg_stats" ->
+        |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Query("agg_stats", aggStats _, Some(
       """SELECT l_returnflag,
         |  ROUND(stddev_samp(l_quantity), 6) AS sd_qty,
         |  ROUND(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price,
         |  COUNT(*) AS n_rows
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "agg_stringagg" ->
+        |ORDER BY l_returnflag""".stripMargin)),
+    Query("agg_stringagg", aggStringagg _, Some(
       """SELECT o_orderpriority,
         |  string_agg(DISTINCT o_orderstatus, ',' ORDER BY o_orderstatus) AS statuses,
         |  COUNT(*) AS n_orders
         |FROM orders
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "agg_pricing" ->
+        |ORDER BY o_orderpriority""".stripMargin)),
+    Query("agg_pricing", aggPricing _, Some(
       """SELECT l_returnflag, l_linestatus,
         |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_qty,
         |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_base_price,
@@ -1440,16 +1403,16 @@ object Aggregates {
         |  COUNT(*) AS count_order
         |FROM lineitem
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "agg_distinct" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    Query("agg_distinct", aggDistinct _, Some(
       """SELECT l_returnflag,
         |  COUNT(DISTINCT l_suppkey) AS n_supp,
         |  COUNT(DISTINCT l_partkey) AS n_part,
         |  COUNT(*) AS n_rows
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "agg_rollup" ->
+        |ORDER BY l_returnflag""".stripMargin)),
+    Query("agg_rollup", aggRollup _, Some(
       """SELECT COALESCE(r_name, 'ALL') AS r_label,
         |  COALESCE(n_name, 'ALL') AS n_label,
         |  COUNT(*) AS n_cust,
@@ -1458,23 +1421,23 @@ object Aggregates {
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
         |GROUP BY ROLLUP(r_name, n_name)
-        |ORDER BY r_label, n_label""".stripMargin,
-    "agg_cube" ->
+        |ORDER BY r_label, n_label""".stripMargin)),
+    Query("agg_cube", aggCube _, Some(
       """SELECT COALESCE(o_orderstatus, 'ALL') AS status_label,
         |  COALESCE(o_orderpriority, 'ALL') AS priority_label,
         |  COUNT(*) AS n_orders,
         |  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total_price
         |FROM orders
         |GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY status_label, priority_label""".stripMargin,
-    "agg_having" ->
+        |ORDER BY status_label, priority_label""".stripMargin)),
+    Query("agg_having", aggHaving _, Some(
       """SELECT o_custkey, COUNT(*) AS n_orders,
         |  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total_price
         |FROM orders
         |GROUP BY o_custkey
         |HAVING COUNT(*) >= 12
-        |ORDER BY n_orders DESC, o_custkey""".stripMargin,
-    "agg_groupingsets" ->
+        |ORDER BY n_orders DESC, o_custkey""".stripMargin)),
+    Query("agg_groupingsets", aggGroupingSets _, Some(
       """SELECT COALESCE(lang, 'ALL') AS lang_label,
         |  COALESCE(source, 'ALL') AS source_label,
         |  COUNT(*) AS n_docs,
@@ -1482,8 +1445,8 @@ object Aggregates {
         |  MAX(n_chars) AS max_chars
         |FROM documents
         |GROUP BY GROUPING SETS ((lang), (source), ())
-        |ORDER BY lang_label, source_label""".stripMargin,
-    "agg_pivot" ->
+        |ORDER BY lang_label, source_label""".stripMargin)),
+    Query("agg_pivot", aggPivot _, Some(
       """SELECT user_id,
         |  CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
         |  CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS error,
@@ -1492,6 +1455,11 @@ object Aggregates {
         |  CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view
         |FROM events
         |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin
+        |ORDER BY user_id""".stripMargin)),
+    Query("agg_approx", aggApprox _),
+    Query("agg_sketch_reagg", aggSketchReagg _),
+    Query("agg_hll_intersect", aggHllIntersect _),
+    Query("agg_approx_quantile", aggApproxQuantile _),
+    Query("agg_approx_freq", aggApproxFreq _)
   )
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Query
 import graft.api.Barrier._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1765,46 +1766,6 @@ object Analytics {
         round(col("max_sr"), 6).as("max_abs_std_resid"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "analytics_chi2" -> chi2Independence _,
-    "analytics_ab_sequential" -> abSequential _,
-    "analytics_eb_smooth" -> ebSmooth _,
-    "analytics_new_vs_returning" -> newVsReturning _,
-    "analytics_rfm_migration" -> rfmMigration _,
-    "analytics_rolling_retention" -> rollingRetention _,
-    "analytics_seasonal_index" -> seasonalIndex _,
-    "analytics_lead_time" -> leadTime _,
-    "analytics_gains" -> gains _,
-    "analytics_funnel_windowed" -> funnelWindowed _,
-    "analytics_power_mde" -> powerMde _,
-    "analytics_calibration" -> calibration _,
-    "analytics_auc" -> auc _,
-    "analytics_ratio_delta" -> ratioDelta _,
-    "analytics_did" -> did _,
-    "analytics_ci_bootstrap" -> ciBootstrap _,
-    "analytics_anova" -> anova _,
-    "analytics_ab_cuped" -> abCuped _,
-    "analytics_conversion_window" -> conversionWindow _,
-    "analytics_survival_km" -> survivalKm _,
-    "analytics_elasticity" -> elasticity _,
-    "analytics_ab_srm" -> abSrm _,
-    "analytics_attribution" -> attribution _,
-    "analytics_churn" -> churn _,
-    "analytics_stickiness" -> stickiness _,
-    "analytics_mutual_info" -> mutualInfo _,
-    "analytics_forecast_naive" -> forecastNaive _,
-    "analytics_cohort_ltv" -> cohortLtv _,
-    "analytics_basket" -> basket _,
-    "analytics_rfm" -> rfm _,
-    "analytics_pareto" -> pareto _,
-    "analytics_mom" -> mom _,
-    "analytics_ttest" -> ttest _,
-    "funnel_stages" -> funnelStages _,
-    "cohort_retention" -> cohortRetention _,
-    "analytics_skyline" -> skyline _,
-    "analytics_markov" -> markov _
-  )
-
   /** DuckDB lacks conv(): 8-hex md5 prefix → integer by per-digit
     * strpos arithmetic over a column named `h` (the Pipeline idiom).
     */
@@ -1812,8 +1773,8 @@ object Analytics {
     s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1) * ${math.pow(16, 8 - i).toLong}"
   }.mkString("(", " + ", ")")
 
-  val oracle: Map[String, String] = Map(
-    "analytics_chi2" ->
+  val registry: Seq[Query] = Seq(
+    Query("analytics_chi2", chi2Independence _, Some(
       """WITH e AS (
         |  SELECT event_type AS typ,
         |    CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 4)
@@ -1847,8 +1808,8 @@ object Analytics {
         |    * CAST(LEAST(COUNT(DISTINCT typ) - 1, COUNT(DISTINCT arm) - 1)
         |      AS DOUBLE))), 6) AS cramers_v,
         |  ROUND(MAX(ABS(sr6)), 6) AS max_abs_std_resid
-        |FROM s""".stripMargin,
-    "analytics_ab_sequential" ->
+        |FROM s""".stripMargin)),
+    Query("analytics_ab_sequential", abSequential _, Some(
       """WITH d0 AS (
         |  SELECT MIN(CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS d0
         |  FROM events),
@@ -1886,8 +1847,8 @@ object Analytics {
         |  ROUND(mean_diff, 6) AS mean_diff, ROUND(z, 6) AS z,
         |  ROUND(obf, 6) AS obf_boundary,
         |  abs(ROUND(z, 6)) > ROUND(obf, 6) AS significant
-        |FROM f ORDER BY look_days""".stripMargin,
-    "analytics_eb_smooth" ->
+        |FROM f ORDER BY look_days""".stripMargin)),
+    Query("analytics_eb_smooth", ebSmooth _, Some(
       """WITH per AS (
         |  SELECT user_id, COUNT(*) AS n,
         |    SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS k
@@ -1914,8 +1875,8 @@ object Analytics {
         |  CAST(k AS BIGINT) AS n_purchases,
         |  ROUND(r, 6) AS raw_rate,
         |  ROUND((k + alpha) / (n + alpha + beta), 6) AS smoothed_rate
-        |FROM r, ab ORDER BY user_id""".stripMargin,
-    "analytics_new_vs_returning" ->
+        |FROM r, ab ORDER BY user_id""".stripMargin)),
+    Query("analytics_new_vs_returning", newVsReturning _, Some(
       """WITH f AS (
         |  SELECT o_custkey AS ck,
         |    MIN(CAST(o_orderdate AS DATE)) AS first_day
@@ -1936,8 +1897,8 @@ object Analytics {
         |  CAST(CAST(SUM(CASE WHEN NOT is_new THEN p
         |    ELSE CAST(0 AS DECIMAL(18,2)) END) AS DECIMAL(18,2))
         |    AS DOUBLE) AS rev_returning
-        |FROM j GROUP BY day ORDER BY day_ts""".stripMargin,
-    "analytics_rfm_migration" ->
+        |FROM j GROUP BY day ORDER BY day_ts""".stripMargin)),
+    Query("analytics_rfm_migration", rfmMigration _, Some(
       """WITH b AS (
         |  SELECT (MIN(date_diff('day', DATE '1970-01-01',
         |      CAST(o_orderdate AS DATE))) +
@@ -1968,8 +1929,8 @@ object Analytics {
         |  COALESCE(tier_h2, 'none') AS to_tier,
         |  COUNT(*) AS n_customers
         |FROM h1 FULL JOIN h2 ON ck1 = ck2
-        |GROUP BY 1, 2 ORDER BY from_tier, to_tier""".stripMargin,
-    "analytics_rolling_retention" ->
+        |GROUP BY 1, 2 ORDER BY from_tier, to_tier""".stripMargin)),
+    Query("analytics_rolling_retention", rollingRetention _, Some(
       """WITH act AS (
         |  SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE)
         |    AS day
@@ -1986,8 +1947,8 @@ object Analytics {
         |  CASE WHEN j.day + 7 <= mx.max_day THEN
         |    ROUND(CAST(SUM(ret) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
         |  END AS d7_retention
-        |FROM j, mx GROUP BY j.day, mx.max_day ORDER BY day_ts""".stripMargin,
-    "analytics_seasonal_index" ->
+        |FROM j, mx GROUP BY j.day, mx.max_day ORDER BY day_ts""".stripMargin)),
+    Query("analytics_seasonal_index", seasonalIndex _, Some(
       """WITH ym AS (
         |  SELECT year(o_orderdate) AS y, month(o_orderdate) AS m,
         |    SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
@@ -2002,8 +1963,8 @@ object Analytics {
         |SELECT CAST(m AS BIGINT) AS month, n_years,
         |  ROUND(month_avg, 6) AS month_avg,
         |  ROUND(month_avg / overall_avg, 6) AS seasonal_index
-        |FROM mo, ov ORDER BY month""".stripMargin,
-    "analytics_lead_time" ->
+        |FROM mo, ov ORDER BY month""".stripMargin)),
+    Query("analytics_lead_time", leadTime _, Some(
       """WITH j AS (
         |  SELECT o_orderpriority AS prio,
         |    date_diff('day', CAST(o_orderdate AS DATE),
@@ -2025,8 +1986,8 @@ object Analytics {
         |    AS p50_days,
         |  CAST(MIN(CASE WHEN cumw * 10 >= n * 9 THEN days END) AS BIGINT)
         |    AS p90_days
-        |FROM c GROUP BY prio ORDER BY prio""".stripMargin,
-    "analytics_gains" ->
+        |FROM c GROUP BY prio ORDER BY prio""".stripMargin)),
+    Query("analytics_gains", gains _, Some(
       """WITH b AS (
         |  SELECT (epoch_us(MIN(CAST(ts AS TIMESTAMP))) +
         |          epoch_us(MAX(CAST(ts AS TIMESTAMP)))) // 2 AS mid
@@ -2058,8 +2019,8 @@ object Analytics {
         |    AS response_rate,
         |  ROUND(CAST(cum_resp AS DOUBLE) / CAST(tot_resp AS DOUBLE), 6)
         |    AS cum_gain
-        |FROM c ORDER BY decile""".stripMargin,
-    "analytics_funnel_windowed" ->
+        |FROM c ORDER BY decile""".stripMargin)),
+    Query("analytics_funnel_windowed", funnelWindowed _, Some(
       """WITH s AS (
         |  SELECT user_id,
         |    MIN(CASE WHEN event_type = 'view'
@@ -2084,8 +2045,8 @@ object Analytics {
         |    AS n_click_72h,
         |  CAST(sum(CASE WHEN s3 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_purchase_72h
-        |FROM f""".stripMargin,
-    "analytics_power_mde" ->
+        |FROM f""".stripMargin)),
+    Query("analytics_power_mde", powerMde _, Some(
       """WITH u0 AS (
         |  SELECT user_id,
         |    SUM(CASE WHEN event_type = 'purchase'
@@ -2110,8 +2071,8 @@ object Analytics {
         |  ROUND(f.m, 6) AS baseline_mean, ROUND(sqrt(f.v), 6) AS sd,
         |  CAST(CEIL(16.0 * f.v /
         |    (g.mde_rel * f.m * (g.mde_rel * f.m))) AS BIGINT) AS n_per_arm
-        |FROM f, g ORDER BY g.mde_rel""".stripMargin,
-    "analytics_calibration" ->
+        |FROM f, g ORDER BY g.mde_rel""".stripMargin)),
+    Query("analytics_calibration", calibration _, Some(
       """WITH sc AS (
         |  SELECT label = 0 AS pos,
         |    ROUND(CAST(embedding[1] AS DOUBLE), 6) AS s
@@ -2127,8 +2088,8 @@ object Analytics {
         |  ROUND(AVG(s), 6) AS mean_score,
         |  ROUND(CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS DOUBLE) /
         |    CAST(COUNT(*) AS DOUBLE), 6) AS pos_rate
-        |FROM x GROUP BY bin ORDER BY bin""".stripMargin,
-    "analytics_auc" ->
+        |FROM x GROUP BY bin ORDER BY bin""".stripMargin)),
+    Query("analytics_auc", auc _, Some(
       """WITH sc AS (
         |  SELECT label = 0 AS pos,
         |    ROUND(CAST(embedding[1] AS DOUBLE), 6) AS s
@@ -2153,8 +2114,8 @@ object Analytics {
         |  CAST(n_scores AS BIGINT) AS n_scores,
         |  ROUND((rsum - n_pos0 * (n_pos0 + 1) / 2.0) /
         |    CAST(n_pos0 * (n_total - n_pos0) AS DOUBLE), 6) AS auc
-        |FROM t, tot""".stripMargin,
-    "analytics_ratio_delta" ->
+        |FROM t, tot""".stripMargin)),
+    Query("analytics_ratio_delta", ratioDelta _, Some(
       """WITH u0 AS (
         |  SELECT user_id,
         |    SUM(CASE WHEN event_type = 'purchase'
@@ -2187,8 +2148,8 @@ object Analytics {
         |SELECT CAST(n AS BIGINT) AS n_users, ROUND(r, 6) AS ratio,
         |  ROUND(se, 6) AS se, ROUND(r - 1.96 * se, 6) AS ci_lo,
         |  ROUND(r + 1.96 * se, 6) AS ci_hi
-        |FROM g""".stripMargin,
-    "analytics_did" ->
+        |FROM g""".stripMargin)),
+    Query("analytics_did", did _, Some(
       """WITH b AS (
         |  SELECT (epoch_us(MIN(CAST(ts AS TIMESTAMP))) +
         |          epoch_us(MAX(CAST(ts AS TIMESTAMP)))) // 2 AS mid
@@ -2219,8 +2180,8 @@ object Analytics {
         |  ROUND(s_bq / c_bq, 6) AS mean_b_post,
         |  ROUND((s_bq / c_bq - s_bp / c_bp) -
         |    (s_aq / c_aq - s_ap / c_ap), 6) AS did
-        |FROM s""".stripMargin,
-    "analytics_ci_bootstrap" ->
+        |FROM s""".stripMargin)),
+    Query("analytics_ci_bootstrap", ciBootstrap _, Some(
       s"""WITH o AS (
         |  SELECT o_orderkey, CAST(o_totalprice AS DECIMAL(18,2)) AS p
         |  FROM orders),
@@ -2257,8 +2218,8 @@ object Analytics {
         |  CAST(100 AS BIGINT) AS n_resamples,
         |  ROUND(point_mean, 6) AS point_mean,
         |  ROUND(ci_lo, 6) AS ci_lo, ROUND(ci_hi, 6) AS ci_hi
-        |FROM pt, ci""".stripMargin,
-    "analytics_anova" ->
+        |FROM pt, ci""".stripMargin)),
+    Query("analytics_anova", anova _, Some(
       """WITH a AS (
         |  SELECT event_type, CAST(value AS DECIMAL(9,2)) AS v
         |  FROM events WHERE value BETWEEN -9999999.99 AND 9999999.99),
@@ -2277,8 +2238,8 @@ object Analytics {
         |    ((s2t - a) / (n_total - k)), 6) AS f_stat,
         |  ROUND((a - s1t * s1t / n_total) /
         |    (s2t - s1t * s1t / n_total), 6) AS eta_sq
-        |FROM t""".stripMargin,
-    "analytics_ab_cuped" ->
+        |FROM t""".stripMargin)),
+    Query("analytics_ab_cuped", abCuped _, Some(
       """WITH b AS (
         |  SELECT (epoch_us(MIN(CAST(ts AS TIMESTAMP))) +
         |          epoch_us(MAX(CAST(ts AS TIMESTAMP)))) // 2 AS mid
@@ -2317,8 +2278,8 @@ object Analytics {
         |    ((sx - sx_a) / n_b - sx_a / n_a), 6) AS diff_cuped,
         |  ROUND((n * sxy - sx * sy) * (n * sxy - sx * sy) /
         |    ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) AS var_reduction
-        |FROM s""".stripMargin,
-    "analytics_conversion_window" ->
+        |FROM s""".stripMargin)),
+    Query("analytics_conversion_window", conversionWindow _, Some(
       """WITH fs AS (
         |  SELECT user_id,
         |    MIN(CASE WHEN event_type = 'signup'
@@ -2340,8 +2301,8 @@ object Analytics {
         |  CAST(SUM(conv) AS BIGINT) AS n_converted_7d,
         |  ROUND(CAST(SUM(conv) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
         |    AS conv_rate_7d
-        |FROM c""".stripMargin,
-    "analytics_survival_km" ->
+        |FROM c""".stripMargin)),
+    Query("analytics_survival_km", survivalKm _, Some(
       """WITH pu AS (
         |  SELECT user_id,
         |    MIN(CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS first_day,
@@ -2376,8 +2337,8 @@ object Analytics {
         |  CAST(d AS BIGINT) AS d_churned,
         |  CASE WHEN hit_zero = 1 THEN 0.0
         |    ELSE ROUND(exp(lsum), 6) END AS km_survival
-        |FROM k ORDER BY t_days""".stripMargin,
-    "analytics_elasticity" ->
+        |FROM k ORDER BY t_days""".stripMargin)),
+    Query("analytics_elasticity", elasticity _, Some(
       """WITH m AS (
         |  SELECT p_brand,
         |    ln(l_extendedprice / l_quantity) AS x, ln(l_quantity) AS y
@@ -2391,8 +2352,8 @@ object Analytics {
         |  FROM m GROUP BY 1)
         |SELECT p_brand, CAST(n AS BIGINT) AS n_lines,
         |  ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS elasticity
-        |FROM s ORDER BY p_brand""".stripMargin,
-    "analytics_ab_srm" ->
+        |FROM s ORDER BY p_brand""".stripMargin)),
+    Query("analytics_ab_srm", abSrm _, Some(
       """WITH u AS (
         |  SELECT DISTINCT user_id FROM events),
         |a AS (
@@ -2409,8 +2370,8 @@ object Analytics {
         |    AS chi2,
         |  (n_a - n_b) * (n_a - n_b) > 3.841 * CAST(n_users AS DOUBLE)
         |    AS srm_detected
-        |FROM s""".stripMargin,
-    "analytics_attribution" ->
+        |FROM s""".stripMargin)),
+    Query("analytics_attribution", attribution _, Some(
       """WITH t AS (
         |  SELECT event_type, value,
         |    COALESCE(LAST_VALUE(
@@ -2423,8 +2384,8 @@ object Analytics {
         |SELECT channel, COUNT(*) AS n_purchases,
         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM t WHERE event_type = 'purchase'
-        |GROUP BY channel ORDER BY channel""".stripMargin,
-    "analytics_churn" ->
+        |GROUP BY channel ORDER BY channel""".stripMargin)),
+    Query("analytics_churn", churn _, Some(
       """WITH am AS (
         |  SELECT DISTINCT o_custkey,
         |    CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1 AS BIGINT) AS ym
@@ -2448,8 +2409,8 @@ object Analytics {
         |  CAST(n_retained AS BIGINT) AS n_retained,
         |  CAST(COALESCE(n_churned, 0) AS BIGINT) AS n_churned
         |FROM pm LEFT JOIN ch ON pm.ym = ch.ym
-        |ORDER BY year, month""".stripMargin,
-    "analytics_stickiness" ->
+        |ORDER BY year, month""".stripMargin)),
+    Query("analytics_stickiness", stickiness _, Some(
       """WITH du AS (
         |  SELECT DISTINCT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, user_id
         |  FROM events),
@@ -2468,8 +2429,8 @@ object Analytics {
         |  ROUND(CAST(sum_dau AS DOUBLE) / CAST(n_days * wau AS DOUBLE), 6)
         |    AS stickiness
         |FROM agg JOIN weekly ON agg.week = weekly.week
-        |ORDER BY week_ts""".stripMargin,
-    "analytics_mutual_info" ->
+        |ORDER BY week_ts""".stripMargin)),
+    Query("analytics_mutual_info", mutualInfo _, Some(
       """WITH cells AS (
         |  SELECT event_type AS x,
         |    CAST(FLOOR(hour(CAST(ts AS TIMESTAMP)) / 6.0) AS BIGINT) AS y,
@@ -2487,8 +2448,8 @@ object Analytics {
         |SELECT ROUND(mi, 6) AS mi_nats, ROUND(h_x, 6) AS h_x,
         |  ROUND(h_y, 6) AS h_y,
         |  ROUND(mi / sqrt(h_x * h_y), 6) AS nmi
-        |FROM mi, hx, hy""".stripMargin,
-    "analytics_forecast_naive" ->
+        |FROM mi, hx, hy""".stripMargin)),
+    Query("analytics_forecast_naive", forecastNaive _, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    SUM(CAST(value AS DECIMAL(18,2))) AS total_dec
@@ -2511,8 +2472,8 @@ object Analytics {
         |  CAST(err_dec AS DOUBLE) AS abs_err,
         |  n_scored, mae, mape_pct
         |FROM e CROSS JOIN v
-        |ORDER BY day_ts""".stripMargin,
-    "analytics_cohort_ltv" ->
+        |ORDER BY day_ts""".stripMargin)),
+    Query("analytics_cohort_ltv", cohortLtv _, Some(
       """WITH fy AS (
         |  SELECT o_custkey, MIN(year(o_orderdate)) AS cy
         |  FROM orders GROUP BY 1),
@@ -2533,8 +2494,8 @@ object Analytics {
         |  ROUND(CAST(cum_dec AS DOUBLE) / CAST(n_cust AS DOUBLE), 6)
         |    AS ltv_per_cust
         |FROM c JOIN sz ON c.cy = sz.cy
-        |ORDER BY cohort_year, year_offset""".stripMargin,
-    "analytics_basket" ->
+        |ORDER BY cohort_year, year_offset""".stripMargin)),
+    Query("analytics_basket", basket _, Some(
       """WITH items AS (
         |  SELECT DISTINCT l.l_orderkey AS okey, p.p_brand AS brand
         |  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
@@ -2553,8 +2514,8 @@ object Analytics {
         |FROM pairs
         |  JOIN per pa ON pairs.brand_a = pa.brand
         |  JOIN per pb ON pairs.brand_b = pb.brand, tot
-        |ORDER BY brand_a, brand_b""".stripMargin,
-    "analytics_rfm" ->
+        |ORDER BY brand_a, brand_b""".stripMargin)),
+    Query("analytics_rfm", rfm _, Some(
       """WITH cust AS (
         |  SELECT o_custkey, MAX(o_orderdate) AS last_order,
         |    COUNT(*) AS frequency,
@@ -2577,8 +2538,8 @@ object Analytics {
         |  r_score, f_score, m_score,
         |  CAST(r_score AS VARCHAR) || CAST(f_score AS VARCHAR) ||
         |    CAST(m_score AS VARCHAR) AS segment
-        |FROM s ORDER BY o_custkey""".stripMargin,
-    "analytics_pareto" ->
+        |FROM s ORDER BY o_custkey""".stripMargin)),
+    Query("analytics_pareto", pareto _, Some(
       """WITH rev AS (
         |  SELECT l_partkey, CAST(SUM(
         |    CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) *
@@ -2597,8 +2558,8 @@ object Analytics {
         |  ROUND(CAST(cum_i AS DOUBLE) * 100.0 / CAST(total_i AS DOUBLE), 6) AS cum_pct
         |FROM w
         |WHERE (cum_i - rev_i) * 5 < total_i * 4
-        |ORDER BY rnk""".stripMargin,
-    "analytics_mom" ->
+        |ORDER BY rnk""".stripMargin)),
+    Query("analytics_mom", mom _, Some(
       """WITH m AS (
         |  SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month_ts,
         |    CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS revenue
@@ -2607,8 +2568,8 @@ object Analytics {
         |  LAG(revenue) OVER w AS prev_revenue,
         |  ROUND((revenue - LAG(revenue) OVER w) / LAG(revenue) OVER w * 100.0, 6) AS mom_pct
         |FROM m WINDOW w AS (ORDER BY month_ts)
-        |ORDER BY month_ts""".stripMargin,
-    "analytics_ttest" ->
+        |ORDER BY month_ts""".stripMargin)),
+    Query("analytics_ttest", ttest _, Some(
       """WITH s AS (
         |  SELECT event_type, COUNT(*) AS n, AVG(value) AS m,
         |    var_samp(value) AS v
@@ -2619,8 +2580,8 @@ object Analytics {
         |  ROUND(pow(a.v / a.n + b.v / b.n, 2) /
         |    (pow(a.v / a.n, 2) / (a.n - 1) + pow(b.v / b.n, 2) / (b.n - 1)), 6) AS df
         |FROM s a JOIN s b ON a.event_type < b.event_type
-        |ORDER BY type_a, type_b""".stripMargin,
-    "funnel_stages" ->
+        |ORDER BY type_a, type_b""".stripMargin)),
+    Query("funnel_stages", funnelStages _, Some(
       """WITH s AS (
         |  SELECT user_id,
         |    min(CASE WHEN event_type = 'view' THEN CAST(ts AS TIMESTAMP) END) AS t_view,
@@ -2636,8 +2597,8 @@ object Analytics {
         |  CAST(sum(CASE WHEN s1 THEN 1 ELSE 0 END) AS BIGINT) AS n_view,
         |  CAST(sum(CASE WHEN s2 THEN 1 ELSE 0 END) AS BIGINT) AS n_click_after,
         |  CAST(sum(CASE WHEN s3 THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase_after
-        |FROM f""".stripMargin,
-    "cohort_retention" ->
+        |FROM f""".stripMargin)),
+    Query("cohort_retention", cohortRetention _, Some(
       """WITH fy AS (
         |  SELECT o_custkey, min(year(o_orderdate)) AS cy
         |  FROM orders GROUP BY o_custkey),
@@ -2646,8 +2607,8 @@ object Analytics {
         |  FROM orders o JOIN fy USING (o_custkey))
         |SELECT CAST(cy AS BIGINT) AS cohort_year,
         |  CAST(off AS BIGINT) AS year_offset, count(*) AS n_active
-        |FROM a GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "analytics_skyline" ->
+        |FROM a GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("analytics_skyline", skyline _, Some(
       """WITH m AS (
         |  SELECT p_retailprice AS price, MIN(p_size) AS size
         |  FROM part GROUP BY 1),
@@ -2658,8 +2619,8 @@ object Analytics {
         |  FROM m)
         |SELECT price, size FROM s
         |WHERE best_before IS NULL OR size < best_before
-        |ORDER BY price""".stripMargin,
-    "analytics_markov" ->
+        |ORDER BY price""".stripMargin)),
+    Query("analytics_markov", markov _, Some(
       """WITH t AS (
         |  SELECT user_id, event_type,
         |    LAG(event_type) OVER (PARTITION BY user_id
@@ -2671,6 +2632,6 @@ object Analytics {
         |SELECT from_type, to_type, n_trans,
         |  ROUND(CAST(n_trans AS DOUBLE) /
         |    CAST(SUM(n_trans) OVER (PARTITION BY from_type) AS DOUBLE), 6) AS prob
-        |FROM c ORDER BY from_type, to_type""".stripMargin
+        |FROM c ORDER BY from_type, to_type""".stripMargin))
   )
 }

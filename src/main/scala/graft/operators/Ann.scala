@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.api.GraftOps.refineTopK
 import graft.expressions.LshBucket
 import graft.sources.{Materialize, Tables}
@@ -537,26 +538,13 @@ object Ann {
        |FROM e ORDER BY vec_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "knn_mips" -> knnMips _,
-    "knn_lsh_bucket_verify" -> knnLshBucketVerify _,
-    "knn_sq8_verify" -> knnSq8Verify _,
-    "knn_recall_eval" -> knnRecallEval _,
-    "knn_range" -> knnRange _,
-    "knn_ann" -> knnAnn _,
-    "knn_ann_multi" -> knnAnnMulti _,
-    "knn_quant" -> knnQuant _,
-    "knn_join" -> knnJoin _,
-    "knn_join_ann" -> knnJoinAnn _
-  )
-
-  val oracle: Map[String, String] = Map(
-    "knn_lsh_bucket_verify" -> lshBucketOracle,
+  val registry: Seq[Query] = Seq(
+    Query("knn_lsh_bucket_verify", knnLshBucketVerify _, Some(lshBucketOracle)),
     // DuckDB twin of the SQ8 encode + ADC algebra — same DOUBLE ops:
     // scale = max|x|/127 (Float.MinNormal floor), codes = round(x/s)
     // (both engines round doubles half-away-from-zero), ADC cosine from
     // the codes, reconstruction L2 from codes·s − x.
-    "knn_sq8_verify" ->
+    Query("knn_sq8_verify", knnSq8Verify _, Some(
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
         |s AS (SELECT vec_id, v,
@@ -581,8 +569,8 @@ object Ann {
         |  ROUND(sqrt(list_sum([(c.codes[i]*c.sc - c.v[i])
         |      * (c.codes[i]*c.sc - c.v[i])
         |      for i in range(1, len(c.v)+1)])), 6) AS q_err
-        |FROM c, p, pn ORDER BY c.vec_id""".stripMargin,
-    "knn_mips" ->
+        |FROM c, p, pn ORDER BY c.vec_id""".stripMargin)),
+    Query("knn_mips", knnMips _, Some(
       """WITH probe AS (
         |  SELECT CAST(embedding AS DOUBLE[]) AS pv FROM embeddings
         |  WHERE vec_id = 0)
@@ -591,8 +579,8 @@ object Ann {
         |    ROUND(list_inner_product(CAST(embedding AS DOUBLE[]), pv), 6)
         |      AS ip
         |  FROM embeddings, probe WHERE vec_id <> 0)
-        |ORDER BY ip DESC, vec_id LIMIT 10""".stripMargin,
-    "knn_range" ->
+        |ORDER BY ip DESC, vec_id LIMIT 10""".stripMargin)),
+    Query("knn_range", knnRange _, Some(
       """WITH probe AS (
         |  SELECT CAST(embedding AS DOUBLE[]) AS pv FROM embeddings
         |  WHERE vec_id = 0)
@@ -602,8 +590,8 @@ object Ann {
         |      AS sim
         |  FROM embeddings, probe WHERE vec_id <> 0)
         |WHERE sim >= 0.25
-        |ORDER BY sim DESC, vec_id""".stripMargin,
-    "knn_join" ->
+        |ORDER BY sim DESC, vec_id""".stripMargin)),
+    Query("knn_join", knnJoin _, Some(
       """SELECT probe_id, vec_id, sim FROM (
         |  SELECT p.vec_id AS probe_id, c.vec_id AS vec_id,
         |    ROUND(list_cosine_similarity(CAST(c.embedding AS DOUBLE[]),
@@ -616,6 +604,11 @@ object Ann {
         |  FROM embeddings c CROSS JOIN embeddings p
         |  WHERE p.vec_id < 8 AND c.vec_id >= 8)
         |WHERE rn <= 5
-        |ORDER BY probe_id, sim DESC, vec_id""".stripMargin
+        |ORDER BY probe_id, sim DESC, vec_id""".stripMargin)),
+    Query("knn_recall_eval", knnRecallEval _),
+    Query("knn_ann", knnAnn _),
+    Query("knn_ann_multi", knnAnnMulti _),
+    Query("knn_quant", knnQuant _),
+    Query("knn_join_ann", knnJoinAnn _)
   )
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Query
 import graft.api.Barrier._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -724,34 +725,12 @@ object Etl {
       .orderBy(col("fd"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dq_fd_audit" -> dqFdAudit _,
-    "dq_id_gaps" -> dqIdGaps _,
-    "dq_value_drift" -> dqValueDrift _,
-    "etl_checksum" -> etlChecksum _,
-    "dq_partition_skew" -> dqPartitionSkew _,
-    "etl_late_data" -> etlLateData _,
-    "join_pit" -> joinPit _,
-    "dq_dup_keys" -> dqDupKeys _,
-    "dq_outlier_mad" -> dqOutlierMad _,
-    "dq_freshness" -> dqFreshness _,
-    "etl_dq_quarantine" -> dqQuarantine _,
-    "etl_scd2" -> scd2 _,
-    "etl_merge" -> merge _,
-    "etl_snapshot_diff" -> snapshotDiff _,
-    "etl_incr_rollup" -> incrRollup _,
-    "dq_benford" -> dqBenford _,
-    "dq_profile" -> dqProfile _,
-    "dq_orphans" -> dqOrphans _,
-    "dq_anomaly" -> dqAnomaly _
-  )
-
   private val TierCase =
     "CASE WHEN value < 50 THEN 'low' WHEN value < 200 THEN 'mid' " +
       "ELSE 'high' END"
 
-  val oracle: Map[String, String] = Map(
-    "dq_fd_audit" ->
+  val registry: Seq[Query] = Seq(
+    Query("dq_fd_audit", dqFdAudit _, Some(
       """WITH a1 AS (
         |  SELECT l_partkey AS k, COUNT(DISTINCT
         |      (CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
@@ -779,8 +758,8 @@ object Etl {
         |    / CAST(COUNT(*) AS DOUBLE), 6) AS violation_rate,
         |  CAST(MAX(nv) AS BIGINT) AS max_distinct_rhs,
         |  ROUND(AVG(nv), 6) AS avg_distinct_rhs
-        |FROM s GROUP BY fd ORDER BY fd""".stripMargin,
-    "dq_id_gaps" ->
+        |FROM s GROUP BY fd ORDER BY fd""".stripMargin)),
+    Query("dq_id_gaps", dqIdGaps _, Some(
       """SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
         |  MIN(event_id) AS min_id, MAX(event_id) AS max_id,
         |  CAST(MAX(event_id) - MIN(event_id) + 1 -
@@ -788,8 +767,8 @@ object Etl {
         |  CAST(COUNT(*) - COUNT(DISTINCT event_id) AS BIGINT)
         |    AS n_dup_ids,
         |  MAX(event_id) - MIN(event_id) + 1 = COUNT(*) AS is_contiguous
-        |FROM events""".stripMargin,
-    "dq_value_drift" ->
+        |FROM events""".stripMargin)),
+    Query("dq_value_drift", dqValueDrift _, Some(
       """WITH base AS (
         |  SELECT o_totalprice AS x,
         |    CASE WHEN o_orderkey % 2 = 0 THEN 'a' ELSE 'b' END AS half
@@ -814,8 +793,8 @@ object Etl {
         |  CAST(n_b AS BIGINT) AS n_b,
         |  ROUND(pa, 6) AS share_a, ROUND(pb, 6) AS share_b,
         |  ROUND(SUM((pa - pb) * ln(pa / pb)) OVER (), 6) AS psi
-        |FROM sh ORDER BY bin""".stripMargin,
-    "etl_checksum" -> {
+        |FROM sh ORDER BY bin""".stripMargin)),
+    Query("etl_checksum", etlChecksum _, Some({
       def hex8(keyExpr: String) = (1 to 8).map { i =>
         s"(strpos('0123456789abcdef', substr(md5($keyExpr), $i, 1)) - 1) * ${math.pow(16, 8 - i).toLong}"
       }.mkString("(", " + ", ")")
@@ -838,8 +817,8 @@ object Etl {
         |UNION ALL
         |SELECT 'orders', n_rows, CAST(checksum AS BIGINT) FROM o
         |ORDER BY table_name""".stripMargin
-    },
-    "dq_partition_skew" ->
+    })),
+    Query("dq_partition_skew", dqPartitionSkew _, Some(
       """WITH d AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    COUNT(*) AS n_rows
@@ -852,8 +831,8 @@ object Etl {
         |  ROUND(n_rows / total, 6) AS share,
         |  ROUND(n_rows / mean_rows, 6) AS skew_ratio,
         |  n_rows > 2.0 * mean_rows AS is_hot
-        |FROM d, t ORDER BY day_ts""".stripMargin,
-    "etl_late_data" ->
+        |FROM d, t ORDER BY day_ts""".stripMargin)),
+    Query("etl_late_data", etlLateData _, Some(
       """WITH e AS (
         |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS tsu
         |  FROM events),
@@ -870,8 +849,8 @@ object Etl {
         |  CAST(SUM(CASE WHEN late_us > 0 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_late,
         |  CAST(MAX(late_us) AS BIGINT) AS max_lateness_us
-        |FROM l GROUP BY 1 ORDER BY day_ts""".stripMargin,
-    "join_pit" ->
+        |FROM l GROUP BY 1 ORDER BY day_ts""".stripMargin)),
+    Query("join_pit", joinPit _, Some(
       s"""WITH e AS (
          |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS tsu,
          |         event_type, value, $TierCase AS tier
@@ -894,8 +873,8 @@ object Etl {
          |  FROM f JOIN v ON f.user_id = v.user_id AND v.valid_from <= f.tsu)
          |SELECT user_id, purchase_id, value, tier AS tier_at_purchase,
          |  version_id, valid_from
-         |FROM j WHERE rn = 1 ORDER BY purchase_id""".stripMargin,
-    "dq_dup_keys" ->
+         |FROM j WHERE rn = 1 ORDER BY purchase_id""".stripMargin)),
+    Query("dq_dup_keys", dqDupKeys _, Some(
       """SELECT * FROM (
         |  SELECT 'customer' AS table_name, COUNT(*) AS n_rows,
         |    COUNT(DISTINCT c_custkey) AS n_keys,
@@ -912,8 +891,8 @@ object Etl {
         |  UNION ALL
         |  SELECT 'supplier', COUNT(*), COUNT(DISTINCT s_suppkey),
         |    COUNT(*) - COUNT(DISTINCT s_suppkey) FROM supplier)
-        |ORDER BY table_name""".stripMargin,
-    "dq_outlier_mad" ->
+        |ORDER BY table_name""".stripMargin)),
+    Query("dq_outlier_mad", dqOutlierMad _, Some(
       """WITH m AS (
         |  SELECT event_type, quantile_cont(value, 0.5) AS med
         |  FROM events GROUP BY 1),
@@ -930,8 +909,8 @@ object Etl {
         |  CAST(SUM(CASE WHEN abs(z) > 3.5 THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_outliers,
         |  ROUND(MAX(abs(z)), 6) AS max_abs_z
-        |FROM z GROUP BY 1 ORDER BY 1""".stripMargin,
-    "dq_freshness" ->
+        |FROM z GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("dq_freshness", dqFreshness _, Some(
       """WITH per AS (
         |  SELECT event_type, MAX(ts) AS last_seen, COUNT(*) AS n_events
         |  FROM events GROUP BY 1),
@@ -940,8 +919,8 @@ object Etl {
         |  n_events,
         |  CAST(epoch_us(frontier) - epoch_us(last_seen) AS BIGINT)
         |    AS staleness_us
-        |FROM per, f ORDER BY event_type""".stripMargin,
-    "etl_dq_quarantine" ->
+        |FROM per, f ORDER BY event_type""".stripMargin)),
+    Query("etl_dq_quarantine", dqQuarantine _, Some(
       """WITH e AS (
         |  SELECT event_id, user_id, value,
         |    CAST(props->>'$.k' AS BIGINT) AS k
@@ -961,15 +940,15 @@ object Etl {
         |  FROM j)
         |SELECT event_id, user_id, value, k, errors
         |FROM r WHERE errors <> ''
-        |ORDER BY event_id""".stripMargin,
-    "etl_incr_rollup" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("etl_incr_rollup", incrRollup _, Some(
       // the maintenance CONTRACT: incremental merge ≡ full recompute
       """SELECT CAST(CAST(CAST(ts AS TIMESTAMP) AS DATE) AS TIMESTAMP) AS day_ts,
         |  event_type, COUNT(*) AS n_events,
         |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total_value
         |FROM events
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "dq_benford" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("dq_benford", dqBenford _, Some(
       """WITH d AS (
         |  SELECT CAST(SUBSTR(CAST(CAST(FLOOR(o_totalprice) AS BIGINT) AS VARCHAR), 1, 1)
         |    AS BIGINT) AS digit
@@ -979,8 +958,8 @@ object Etl {
         |  ROUND(CAST(n AS DOUBLE) /
         |    CAST(SUM(n) OVER () AS DOUBLE), 6) AS observed,
         |  ROUND(log10(1.0 + 1.0 / CAST(digit AS DOUBLE)), 6) AS expected
-        |FROM c ORDER BY digit""".stripMargin,
-    "dq_anomaly" ->
+        |FROM c ORDER BY digit""".stripMargin)),
+    Query("dq_anomaly", dqAnomaly _, Some(
       """WITH e AS (
         |  SELECT event_type, CAST(value AS DECIMAL(18,2)) AS vd FROM events),
         |st AS (
@@ -996,8 +975,8 @@ object Etl {
         |SELECT event_type, MAX(n) AS n_events,
         |  CAST(SUM(CASE WHEN abs(z) > 3.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
         |  ROUND(MAX(abs(z)), 6) AS max_abs_z
-        |FROM z GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "etl_snapshot_diff" ->
+        |FROM z GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Query("etl_snapshot_diff", snapshotDiff _, Some(
       """WITH e AS (
         |  SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS tsu FROM events),
         |s1 AS (SELECT user_id, event_type, count(*) AS n FROM e
@@ -1014,8 +993,8 @@ object Etl {
         |FROM s1 FULL OUTER JOIN s2
         |  ON s1.user_id = s2.user_id AND s1.event_type = s2.event_type
         |WHERE s1.user_id IS NULL OR s2.user_id IS NULL OR s1.n != s2.n
-        |ORDER BY user_id, event_type""".stripMargin,
-    "etl_scd2" ->
+        |ORDER BY user_id, event_type""".stripMargin)),
+    Query("etl_scd2", scd2 _, Some(
       s"""WITH e AS (
          |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS tsu,
          |         $TierCase AS tier
@@ -1031,7 +1010,7 @@ object Etl {
          |  FROM r WHERE prev_tier IS NULL OR prev_tier <> tier)
          |SELECT user_id, event_id, tier, valid_from, valid_to,
          |       valid_to IS NULL AS is_current
-         |FROM v ORDER BY user_id, valid_from, event_id""".stripMargin,
+         |FROM v ORDER BY user_id, valid_from, event_id""".stripMargin)),
     // Latest-row-per-side as a window rank, NOT a struct max: the two
     // are row-identical because event_id is unique — (tsu, event_id)
     // totally orders each side, so the struct comparison never reaches
@@ -1041,7 +1020,7 @@ object Etl {
     // or thread caps), while the window spelling is buffer-managed and
     // completes in minutes; the Spark side keeps the struct-max argmax
     // (it map-side combines — the right shape at 100 TB).
-    "etl_merge" ->
+    Query("etl_merge", merge _, Some(
       s"""WITH e AS (
          |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS tsu,
          |         $TierCase AS tier
@@ -1066,8 +1045,8 @@ object Etl {
          |            WHEN batch_tier IS NULL OR batch_tier = prior_tier
          |              THEN 'unchanged'
          |            ELSE 'update' END AS action
-         |FROM s ORDER BY user_id""".stripMargin,
-    "dq_profile" ->
+         |FROM s ORDER BY user_id""".stripMargin)),
+    Query("dq_profile", dqProfile _, Some(
       """SELECT 'o_orderkey' AS col_name, COUNT(*) AS n_rows,
         |       COUNT(*) - COUNT(o_orderkey) AS n_null,
         |       COUNT(DISTINCT o_orderkey) AS n_distinct FROM orders
@@ -1087,8 +1066,8 @@ object Etl {
         |SELECT 'o_orderpriority', COUNT(*),
         |       COUNT(*) - COUNT(o_orderpriority),
         |       COUNT(DISTINCT o_orderpriority) FROM orders
-        |ORDER BY col_name""".stripMargin,
-    "dq_orphans" ->
+        |ORDER BY col_name""".stripMargin)),
+    Query("dq_orphans", dqOrphans _, Some(
       """SELECT 'lineitem_part' AS rel,
         |  (SELECT COUNT(*) FROM lineitem l WHERE NOT EXISTS
         |     (SELECT 1 FROM part p WHERE p.p_partkey = l.l_partkey))
@@ -1104,6 +1083,6 @@ object Etl {
         |  (SELECT COUNT(*) FROM orders o WHERE NOT EXISTS
         |     (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)),
         |  (SELECT COUNT(*) FROM orders)
-        |ORDER BY rel""".stripMargin
+        |ORDER BY rel""".stripMargin))
   )
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.api.GraftOps.refineTopK
 import graft.sources.{Materialize, Tables}
 
@@ -389,15 +390,8 @@ object Ivf {
       .orderBy(col("cell"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "knn_ivf" -> knnIvf _,
-    "knn_ivf_probe_verify" -> knnIvfProbeVerify _,
-    "embed_kmeans" -> embedKmeans _,
-    "embed_kmeans_assign" -> embedKmeansAssign _
-  )
-
-  val oracle: Map[String, String] = Map(
-    "embed_kmeans_assign" ->
+  val registry: Seq[Query] = Seq(
+    Query("embed_kmeans_assign", embedKmeansAssign _, Some(
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
         |c AS (SELECT vec_id AS cell, v AS center FROM e WHERE vec_id < 4),
@@ -409,11 +403,11 @@ object Ivf {
         |  SELECT vec_id, cell, d2,
         |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rn
         |  FROM d) WHERE rn = 1
-        |ORDER BY vec_id""".stripMargin,
+        |ORDER BY vec_id""".stripMargin)),
     // DuckDB twin of the full IVF probe algebra: same fixed centroids,
     // same round-6 argmin assignment (ROW_NUMBER rn=1 == min(struct)),
     // same nprobe=2 cell cutoff, same round-6 cosine argmax per cell.
-    "knn_ivf_probe_verify" ->
+    Query("knn_ivf_probe_verify", knnIvfProbeVerify _, Some(
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
         |c AS (SELECT vec_id AS cell, v AS center FROM e WHERE vec_id < 4),
@@ -440,6 +434,8 @@ object Ivf {
         |    ROW_NUMBER() OVER (PARTITION BY cell
         |      ORDER BY sim DESC, vec_id) AS rn
         |  FROM cand) WHERE rn = 1
-        |ORDER BY cell""".stripMargin
+        |ORDER BY cell""".stripMargin)),
+    Query("knn_ivf", knnIvf _),
+    Query("embed_kmeans", embedKmeans _)
   )
 }

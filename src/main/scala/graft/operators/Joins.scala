@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.functions.Dec._
-import graft.sources.Tables
+import graft.sources.{Materialize, Tables}
 
 /** Join operators (SURVEY.md §2.1 category C, minus C8 as-of → Temporal).
   *
@@ -314,22 +315,24 @@ object Joins {
   /** Catalog names of the bucketed orders and customer tables, written
     * once per snapshot of the two sources (`bucketed_join_b16`): a
     * rewrite of either yields new tables. Each build draws a random
-    * name tag, so concurrent processes sharing one warehouse dir can
-    * never collide (the signature-table discipline from NearDedup,
-    * applied to the catalog namespace) and a rebuild never overwrites
-    * a table an earlier plan still reads.
+    * name tag, so a rebuild never replaces a table an earlier plan
+    * still reads. Both are external tables whose files live in fresh
+    * directories under Materialize's per-process artifact root, not
+    * in the managed warehouse: the catalog entries die with the
+    * session's in-memory catalog and the files with the JVM.
     */
   private def bucketedTables(spark: SparkSession, sfDir: String): (String, String) =
-    graft.sources.Materialize.model(sfDir, Seq("orders", "customer"),
-        "bucketed_join_b16") {
+    Materialize.model(sfDir, Seq("orders", "customer"), "bucketed_join_b16") {
       val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
       val ord = s"graft_orders_bkt_$tag"
       val cus = s"graft_customer_bkt_$tag"
       Tables.orders(spark, sfDir).write
         .bucketBy(16, "o_custkey").sortBy("o_custkey")
+        .option("path", Materialize.freshDir(ord))
         .mode("overwrite").saveAsTable(ord)
       Tables.customer(spark, sfDir).write
         .bucketBy(16, "c_custkey").sortBy("c_custkey")
+        .option("path", Materialize.freshDir(cus))
         .mode("overwrite").saveAsTable(cus)
       (ord, cus)
     }
@@ -391,53 +394,34 @@ object Joins {
       .orderBy(col("s_name"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "join_salted" -> joinSalted _,
-    "join_broadcast" -> joinBroadcast _,
-    "join_bucketed" -> joinBucketed _,
-    "join_smj" -> joinSmj _,
-    "join_left" -> joinLeft _,
-    "join_full" -> joinFull _,
-    "join_semi" -> joinSemi _,
-    "join_anti" -> joinAnti _,
-    "join_range" -> joinRange _,
-    "join_interval" -> joinInterval _,
-    "join_interval_bucketed" -> joinIntervalBucketed _,
-    "join_cross" -> joinCross _,
-    "subq_exists" -> subqExists _,
-    "join_lateral" -> joinLateral _,
-    "join_anti_nullaware" -> joinAntiNullaware _,
-    "subq_scalar" -> subqScalar _
-  )
-
-  val oracle: Map[String, String] = Map(
-    "join_anti_nullaware" ->
+  val registry: Seq[Query] = Seq(
+    Query("join_anti_nullaware", joinAntiNullaware _, Some(
       """SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
         |  COUNT(*) AS n_uncovered
         |FROM customer
         |WHERE c_nationkey NOT IN (SELECT s_nationkey FROM supplier
         |                          WHERE s_acctbal < 0)
         |GROUP BY c_nationkey
-        |ORDER BY nationkey""".stripMargin,
-    "join_salted" ->
+        |ORDER BY nationkey""".stripMargin)),
+    Query("join_salted", joinSalted _, Some(
       """SELECT s_name, COUNT(*) AS n_items,
         |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DECIMAL(38,4)) AS DOUBLE) AS revenue
         |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
         |GROUP BY s_name
-        |ORDER BY s_name""".stripMargin,
-    "join_bucketed" ->
+        |ORDER BY s_name""".stripMargin)),
+    Query("join_bucketed", joinBucketed _, Some(
       """SELECT c_mktsegment, COUNT(*) AS n_orders,
         |  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS DOUBLE) AS total_price
         |FROM customer JOIN orders ON c_custkey = o_custkey
         |GROUP BY c_mktsegment
-        |ORDER BY c_mktsegment""".stripMargin,
-    "subq_exists" ->
+        |ORDER BY c_mktsegment""".stripMargin)),
+    Query("subq_exists", subqExists _, Some(
       """SELECT c_custkey, c_name FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o
         |              WHERE o.o_custkey = c.c_custkey
         |                AND o.o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-    "subq_scalar" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    Query("subq_scalar", subqScalar _, Some(
       """SELECT c_custkey, c_nationkey,
         |       CAST(CAST(c_acctbal AS DECIMAL(18,2)) AS DOUBLE) AS acctbal
         |FROM customer c
@@ -445,47 +429,47 @@ object Joins {
         |  SELECT CAST(SUM(CAST(c2.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*)
         |  FROM customer c2
         |  WHERE c2.c_nationkey = c.c_nationkey)
-        |ORDER BY c_custkey""".stripMargin,
-    "join_broadcast" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    Query("join_broadcast", joinBroadcast _, Some(
       """SELECT r_name, n_name, COUNT(*) AS n_cust,
         |  CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total_acctbal
         |FROM customer
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
         |GROUP BY r_name, n_name
-        |ORDER BY r_name, n_name""".stripMargin,
-    "join_smj" ->
+        |ORDER BY r_name, n_name""".stripMargin)),
+    Query("join_smj", joinSmj _, Some(
       """SELECT o_orderpriority, COUNT(*) AS n_items,
         |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DECIMAL(38,4)) AS DOUBLE) AS revenue
         |FROM lineitem
         |JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderstatus = 'F'
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "join_left" ->
+        |ORDER BY o_orderpriority""".stripMargin)),
+    Query("join_left", joinLeft _, Some(
       """SELECT c_custkey, COUNT(o_orderkey) AS n_orders
         |FROM customer LEFT JOIN orders ON c_custkey = o_custkey
         |GROUP BY c_custkey
-        |ORDER BY c_custkey""".stripMargin,
-    "join_full" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    Query("join_full", joinFull _, Some(
       """SELECT COALESCE(c.c_nationkey, s.s_nationkey) AS nationkey,
         |  c.c_nationkey IS NOT NULL AS in_customer,
         |  s.s_nationkey IS NOT NULL AS in_supplier
         |FROM (SELECT DISTINCT c_nationkey FROM customer) c
         |FULL OUTER JOIN (SELECT DISTINCT s_nationkey FROM supplier) s
         |  ON c.c_nationkey = s.s_nationkey
-        |ORDER BY nationkey""".stripMargin,
-    "join_semi" ->
+        |ORDER BY nationkey""".stripMargin)),
+    Query("join_semi", joinSemi _, Some(
       """SELECT c_custkey, c_name FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders
         |  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-    "join_anti" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    Query("join_anti", joinAnti _, Some(
       """SELECT c_custkey, c_name FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders
         |  WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT')
-        |ORDER BY c_custkey""".stripMargin,
-    "join_range" ->
+        |ORDER BY c_custkey""".stripMargin)),
+    Query("join_range", joinRange _, Some(
       """SELECT band, COUNT(*) AS n_parts,
         |  CAST(CAST(SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total_price
         |FROM part
@@ -494,8 +478,8 @@ object Joins {
         |  b(band, lo, hi)
         |  ON p_retailprice >= lo AND p_retailprice < hi
         |GROUP BY band
-        |ORDER BY band""".stripMargin,
-    "join_lateral" ->
+        |ORDER BY band""".stripMargin)),
+    Query("join_lateral", joinLateral _, Some(
       """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
         |FROM customer c,
         |LATERAL (SELECT o_orderkey, o_totalprice
@@ -504,8 +488,8 @@ object Joins {
         |         ORDER BY o_totalprice DESC, o_orderkey
         |         LIMIT 2) t
         |WHERE c.c_acctbal > 9000
-        |ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey""".stripMargin,
-    "join_interval" ->
+        |ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey""".stripMargin)),
+    Query("join_interval", joinInterval _, Some(
       """SELECT campaign, COUNT(*) AS n_orders,
         |  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total_price
         |FROM (SELECT o_orderkey, o_totalprice,
@@ -519,8 +503,8 @@ object Joins {
         |  c(campaign, c_start, c_end)
         |  ON o_start < c_end AND c_start < o_end
         |GROUP BY campaign
-        |ORDER BY campaign""".stripMargin,
-    "join_interval_bucketed" ->
+        |ORDER BY campaign""".stripMargin)),
+    Query("join_interval_bucketed", joinIntervalBucketed _, Some(
       // deliberately the PLAIN overlap join: the bucket rewrite is
       // physical, not semantic (the join_salted oracle policy)
       """SELECT campaign, COUNT(*) AS n_orders,
@@ -536,10 +520,10 @@ object Joins {
         |  c(campaign, c_start, c_end)
         |  ON o_start < c_end AND c_start < o_end
         |GROUP BY campaign
-        |ORDER BY campaign""".stripMargin,
-    "join_cross" ->
+        |ORDER BY campaign""".stripMargin)),
+    Query("join_cross", joinCross _, Some(
       """SELECT r_name, event_type
         |FROM region CROSS JOIN (SELECT DISTINCT event_type FROM events)
-        |ORDER BY r_name, event_type""".stripMargin
+        |ORDER BY r_name, event_type""".stripMargin))
   )
 }

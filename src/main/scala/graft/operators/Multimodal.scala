@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.sources.Tables
 
 /** Decoded-media metadata row (see Multimodal.multimodalDecode). */
@@ -195,16 +196,8 @@ object Multimodal {
       .orderBy(col("doc_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "multimodal_quality" -> multimodalQuality _,
-    "multimodal_decode" -> multimodalDecode _,
-    "multimodal_frames" -> multimodalFrames _,
-    "multimodal_features" -> multimodalFeatures _,
-    "multimodal_resize" -> multimodalResize _
-  )
-
-  val oracle: Map[String, String] = Map(
-    "multimodal_quality" ->
+  val registry: Seq[Query] = Seq(
+    Query("multimodal_quality", multimodalQuality _, Some(
       """WITH ch AS (
         |  SELECT doc_id, unnest(string_split(text, '')) AS c
         |  FROM documents),
@@ -217,16 +210,16 @@ object Multimodal {
         |  FROM cc JOIN tot USING (doc_id) GROUP BY 1)
         |SELECT doc_id, n_bytes, entropy_bits,
         |  entropy_bits < 4.0 AS low_quality
-        |FROM e ORDER BY doc_id""".stripMargin,
-    "multimodal_features" ->
+        |FROM e ORDER BY doc_id""".stripMargin)),
+    Query("multimodal_features", multimodalFeatures _, Some(
       """SELECT doc_id,
         |  CAST(length(text) - length(regexp_replace(text, '[a-zA-Z]', '', 'g')) AS BIGINT) AS n_alpha,
         |  CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS BIGINT) AS n_digit,
         |  CAST(length(text) - length(regexp_replace(text, ' ', '', 'g')) AS BIGINT) AS n_space,
         |  CAST(length(regexp_replace(text, '[a-zA-Z0-9 ]', '', 'g')) AS BIGINT) AS n_other
         |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-    "multimodal_resize" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Query("multimodal_resize", multimodalResize _, Some(
       """WITH m AS (
         |  SELECT doc_id,
         |    CAST(64 + length(text) % 640 AS INTEGER) AS width,
@@ -236,21 +229,21 @@ object Multimodal {
         |  CAST(FLOOR(width * 224.0 / GREATEST(width, height)) AS INTEGER) AS rs_w,
         |  CAST(FLOOR(height * 224.0 / GREATEST(width, height)) AS INTEGER) AS rs_h
         |FROM m
-        |ORDER BY doc_id""".stripMargin,
-    "multimodal_frames" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Query("multimodal_frames", multimodalFrames _, Some(
       """SELECT doc_id, CAST(i AS BIGINT) AS frame_no,
         |  CAST(least(512, length(text) - i*512) AS INTEGER) AS frame_len,
         |  ascii(substr(text, CAST(i*512 + 1 AS INTEGER), 1)) AS first_byte
         |FROM documents,
         |  unnest(range(CAST(ceil(length(text)/512.0) AS BIGINT))) AS t(i)
-        |ORDER BY doc_id, frame_no""".stripMargin,
-    "multimodal_decode" ->
+        |ORDER BY doc_id, frame_no""".stripMargin)),
+    Query("multimodal_decode", multimodalDecode _, Some(
       """SELECT doc_id,
         |  CAST(length(text) AS INTEGER) AS n_bytes,
         |  CAST(64 + length(text) % 640 AS INTEGER) AS width,
         |  CAST(64 + (length(text) // 7) % 480 AS INTEGER) AS height,
         |  lower(hex(substr(text, 1, 4))) AS header
         |FROM documents
-        |ORDER BY doc_id""".stripMargin
+        |ORDER BY doc_id""".stripMargin))
   )
 }

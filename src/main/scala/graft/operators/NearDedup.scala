@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Query
 import graft.api.Barrier._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -871,31 +872,8 @@ object NearDedup {
       .limit(100)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "graph_adamic_adar" -> graphAdamicAdar _,
-    "dedup_prefix" -> dedupPrefix _,
-    "graph_degree_dist" -> graphDegreeDist _,
-    "graph_pagerank" -> graphPagerank _,
-    "graph_triangles" -> graphTriangles _,
-    "graph_clustering" -> graphClustering _,
-    "graph_assortativity" -> graphAssortativity _,
-    "graph_reach" -> graphReach _,
-    "dedup_fuzzy" -> dedupFuzzy _,
-    "dedup_minhash" -> dedupMinhash _,
-    "dedup_simhash" -> dedupSimhash _,
-    "dedup_simhash_md5" -> dedupSimhashMd5 _,
-    "dedup_minhash_md5" -> dedupMinhashMd5 _,
-    "dedup_ngram" -> dedupNgram _,
-    "dedup_containment" -> dedupContainment _,
-    "dedup_embed" -> dedupEmbed _,
-    "dedup_embed_verify" -> dedupEmbedVerify _,
-    "dedup_cluster" -> dedupCluster _,
-    "dedup_bloom" -> dedupBloom _,
-    "pipeline_near_dedup" -> pipelineNearDedup _
-  )
-
-  val oracle: Map[String, String] = Map(
-    "graph_adamic_adar" ->
+  val registry: Seq[Query] = Seq(
+    Query("graph_adamic_adar", graphAdamicAdar _, Some(
       """WITH sh AS (
         |  SELECT doc_id,
         |    list_distinct([array_to_string(string_split(text, ' ')[i:i+2], ' ')
@@ -924,14 +902,14 @@ object NearDedup {
         |WHERE NOT EXISTS (SELECT 1 FROM sym
         |  WHERE sym.src = scored.u AND sym.dst = scored.w)
         |ORDER BY aa_score DESC, doc_a, doc_b
-        |LIMIT 100""".stripMargin,
-    "dedup_prefix" ->
+        |LIMIT 100""".stripMargin)),
+    Query("dedup_prefix", dedupPrefix _, Some(
       """SELECT array_to_string(string_split(text, ' ')[1:4], ' ') AS prefix4,
         |  COUNT(*) AS n_docs, MIN(doc_id) AS keep_doc_id
         |FROM documents
         |GROUP BY 1 HAVING COUNT(*) > 1
-        |ORDER BY prefix4""".stripMargin,
-    "graph_degree_dist" ->
+        |ORDER BY prefix4""".stripMargin)),
+    Query("graph_degree_dist", graphDegreeDist _, Some(
       """WITH sh AS (
         |  SELECT doc_id,
         |    list_distinct([array_to_string(string_split(text, ' ')[i:i+2], ' ')
@@ -949,9 +927,9 @@ object NearDedup {
         |  GROUP BY 1)
         |SELECT CAST(degree AS BIGINT) AS degree,
         |  CAST(COUNT(*) AS BIGINT) AS n_docs
-        |FROM deg GROUP BY 1 ORDER BY 1""".stripMargin,
-    "graph_pagerank" -> pageRankOracle,
-    "graph_reach" ->
+        |FROM deg GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("graph_pagerank", graphPagerank _, Some(pageRankOracle)),
+    Query("graph_reach", graphReach _, Some(
       """WITH RECURSIVE sh AS (
         |  SELECT doc_id,
         |    list_distinct([array_to_string(string_split(text, ' ')[i:i+2], ' ')
@@ -974,8 +952,8 @@ object NearDedup {
         |)
         |SELECT id AS doc_id, CAST(MIN(hops) AS BIGINT) AS hops,
         |  CAST(COUNT(*) AS BIGINT) AS n_paths
-        |FROM r GROUP BY id ORDER BY doc_id""".stripMargin,
-    "graph_assortativity" ->
+        |FROM r GROUP BY id ORDER BY doc_id""".stripMargin)),
+    Query("graph_assortativity", graphAssortativity _, Some(
       """WITH sh AS (
         |  SELECT doc_id,
         |    list_distinct([array_to_string(string_split(text, ' ')[i:i+2], ' ')
@@ -1007,8 +985,8 @@ object NearDedup {
         |  ROUND((m * sxy - sx * sy) /
         |    sqrt((m * sxx - sx * sx) * (m * syy - sy * sy)), 6)
         |    AS assortativity
-        |FROM s""".stripMargin,
-    "graph_clustering" ->
+        |FROM s""".stripMargin)),
+    Query("graph_clustering", graphClustering _, Some(
       """WITH sh AS (
         |  SELECT doc_id,
         |    list_distinct([array_to_string(string_split(text, ' ')[i:i+2], ' ')
@@ -1039,8 +1017,8 @@ object NearDedup {
         |      CAST(d.deg * (d.deg - 1) AS DOUBLE), 6)
         |  ELSE 0.0 END AS clustering
         |FROM deg d LEFT JOIN tcount t ON t.id = d.id
-        |ORDER BY doc_id""".stripMargin,
-    "graph_triangles" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Query("graph_triangles", graphTriangles _, Some(
       """WITH sh AS (
         |  SELECT doc_id,
         |    list_distinct([array_to_string(string_split(text, ' ')[i:i+2], ' ')
@@ -1060,8 +1038,8 @@ object NearDedup {
         |verts AS (SELECT x AS id FROM tri UNION ALL SELECT y AS id FROM tri
         |          UNION ALL SELECT z AS id FROM tri)
         |SELECT id AS doc_id, CAST(count(*) AS BIGINT) AS n_tri
-        |FROM verts GROUP BY id ORDER BY doc_id""".stripMargin,
-    "dedup_fuzzy" ->
+        |FROM verts GROUP BY id ORDER BY doc_id""".stripMargin)),
+    Query("dedup_fuzzy", dedupFuzzy _, Some(
       """WITH b AS (
         |  SELECT doc_id, text, n_chars,
         |    split_part(text, ' ', 1) || ' ' || split_part(text, ' ', 2) AS blk
@@ -1071,16 +1049,16 @@ object NearDedup {
         |  CAST(levenshtein(a.text, b.text) AS DOUBLE)
         |    / greatest(length(a.text), length(b.text)) <= 0.4 AS is_dup
         |FROM b a JOIN b b ON a.blk = b.blk AND a.doc_id < b.doc_id
-        |ORDER BY doc_a, doc_b""".stripMargin,
-    "dedup_simhash_md5" -> simhashMd5Oracle,
-    "dedup_minhash_md5" -> minhashMd5Oracle,
-    "dedup_embed_verify" ->
+        |ORDER BY doc_a, doc_b""".stripMargin)),
+    Query("dedup_simhash_md5", dedupSimhashMd5 _, Some(simhashMd5Oracle)),
+    Query("dedup_minhash_md5", dedupMinhashMd5 _, Some(minhashMd5Oracle)),
+    Query("dedup_embed_verify", dedupEmbedVerify _, Some(
       """SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
         |  ROUND(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
         |    CAST(b.embedding AS DOUBLE[])), 6) AS sim
         |FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
-        |ORDER BY vec_a""".stripMargin,
-    "dedup_ngram" ->
+        |ORDER BY vec_a""".stripMargin)),
+    Query("dedup_ngram", dedupNgram _, Some(
       """WITH sh AS (
         |  SELECT doc_id,
         |    list_distinct([array_to_string(string_split(text, ' ')[i:i+2], ' ')
@@ -1090,8 +1068,8 @@ object NearDedup {
         |  ROUND(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
         |      / len(list_distinct(list_concat(a.grams, b.grams))), 6) AS jaccard
         |FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
-        |ORDER BY doc_a""".stripMargin,
-    "dedup_containment" ->
+        |ORDER BY doc_a""".stripMargin)),
+    Query("dedup_containment", dedupContainment _, Some(
       """WITH sh AS (
         |  SELECT doc_id,
         |    list_distinct([array_to_string(string_split(text, ' ')[i:i+2], ' ')
@@ -1103,8 +1081,8 @@ object NearDedup {
         |  ROUND(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
         |      / len(b.grams), 6) AS contain_ba
         |FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
-        |ORDER BY doc_a""".stripMargin,
-    "dedup_cluster" ->
+        |ORDER BY doc_a""".stripMargin)),
+    Query("dedup_cluster", dedupCluster _, Some(
       """WITH RECURSIVE sh AS (
         |  SELECT doc_id,
         |    list_distinct([array_to_string(string_split(text, ' ')[i:i+2], ' ')
@@ -1124,8 +1102,8 @@ object NearDedup {
         |clusters AS (SELECT comp, COUNT(*) AS sz FROM comps GROUP BY comp)
         |SELECT CAST(sz AS BIGINT) AS cluster_size,
         |  CAST(COUNT(*) AS BIGINT) AS n_clusters
-        |FROM clusters GROUP BY sz ORDER BY cluster_size""".stripMargin,
-    "pipeline_near_dedup" ->
+        |FROM clusters GROUP BY sz ORDER BY cluster_size""".stripMargin)),
+    Query("pipeline_near_dedup", pipelineNearDedup _, Some(
       """WITH RECURSIVE sh AS (
         |  SELECT doc_id,
         |    list_distinct([array_to_string(string_split(text, ' ')[i:i+2], ' ')
@@ -1145,6 +1123,10 @@ object NearDedup {
         |SELECT d.lang, CAST(COUNT(*) AS BIGINT) AS n_survivors
         |FROM comps c JOIN documents d ON d.doc_id = c.id
         |WHERE c.id = c.comp
-        |GROUP BY d.lang ORDER BY d.lang""".stripMargin
+        |GROUP BY d.lang ORDER BY d.lang""".stripMargin)),
+    Query("dedup_minhash", dedupMinhash _),
+    Query("dedup_simhash", dedupSimhash _),
+    Query("dedup_embed", dedupEmbed _),
+    Query("dedup_bloom", dedupBloom _)
   )
 }

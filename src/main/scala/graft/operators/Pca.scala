@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.api.GraftOps.refineTopK
 import graft.sources.{Materialize, Tables}
 
@@ -200,16 +201,10 @@ object Pca {
       .orderBy(col("vec_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "embed_pca" -> embedPca _,
-    "knn_pca" -> knnPca _,
-    "embed_pca_project_verify" -> embedPcaProjectVerify _
-  )
-
-  val oracle: Map[String, String] = Map(
+  val registry: Seq[Query] = Seq(
     // DuckDB twin of the PCA projection arithmetic: same fixed basis,
     // same fixed-order means, same center→dot→round-6 per vector.
-    "embed_pca_project_verify" ->
+    Query("embed_pca_project_verify", embedPcaProjectVerify _, Some(
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
         |b0 AS (SELECT v FROM e WHERE vec_id = 0),
@@ -228,6 +223,8 @@ object Pca {
         |  ROUND(list_sum([ cv[i] * b2.v[i] for i in range(1, len(cv) + 1) ]), 6) AS p2,
         |  ROUND(list_sum([ cv[i] * b3.v[i] for i in range(1, len(cv) + 1) ]), 6) AS p3
         |FROM ce, b0, b1, b2, b3
-        |ORDER BY vec_id""".stripMargin
+        |ORDER BY vec_id""".stripMargin)),
+    Query("embed_pca", embedPca _),
+    Query("knn_pca", knnPca _)
   )
 }

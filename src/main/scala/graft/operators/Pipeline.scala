@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Query
 import graft.api.Barrier._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -747,38 +748,6 @@ object Pipeline {
       .orderBy(col("lang"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pipeline_mix_plan" -> pipelineMixPlan _,
-    "embed_norm_audit" -> embedNormAudit _,
-    "pipeline_curriculum" -> pipelineCurriculum _,
-    "sample_balanced" -> sampleBalanced _,
-    "pipeline_drift_report" -> pipelineDriftReport _,
-    "sample_systematic" -> sampleSystematic _,
-    "pipeline_epoch_shuffle" -> pipelineEpochShuffle _,
-    "pipeline_token_budget" -> pipelineTokenBudget _,
-    "knn_hybrid" -> knnHybrid _,
-    "pipeline_bpe_pairs" -> pipelineBpePairs _,
-    "pipeline_curate" -> pipelineCurate _,
-    "pipeline_split" -> pipelineSplit _,
-    "pipeline_mixture" -> pipelineMixture _,
-    "pipeline_quality_cut" -> pipelineQualityCut _,
-    "pipeline_e2e" -> pipelineE2e _,
-    "sample_stratified" -> sampleStratified _,
-    "sample_weighted" -> sampleWeighted _,
-    "agg_centroid" -> aggCentroid _,
-    "pack_sequences" -> packSequences _,
-    "dedup_exact" -> dedupExact _,
-    "udtf_explode" -> udtfExplode _,
-    "text_stats" -> textStats _,
-    "multimodal_join" -> multimodalJoin _,
-    "udf_cosine_topk" -> udfCosineTopk _,
-    "udaf_weighted" -> udafWeighted _,
-    "embed_rproject" -> embedRproject _,
-    "pipeline_bpe_train" -> pipelineBpeTrain _,
-    "pipeline_bpe_encode" -> pipelineBpeEncode _,
-    "pipeline_dataset_card" -> pipelineDatasetCard _
-  )
-
   /** DuckDB lacks conv(): the 8-hex md5 prefix parses to an integer by
     * per-digit strpos arithmetic, the idiom dedup_simhash_md5 uses.
     */
@@ -786,8 +755,8 @@ object Pipeline {
     s"(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), $i, 1)) - 1) * ${math.pow(16, 8 - i).toLong}"
   }.mkString("(", " + ", ")")
 
-  val oracle: Map[String, String] = Map(
-    "pipeline_bpe_pairs" ->
+  val registry: Seq[Query] = Seq(
+    Query("pipeline_bpe_pairs", pipelineBpePairs _, Some(
       """WITH w AS (
         |  SELECT word, count(*) AS freq
         |  FROM (SELECT unnest(string_split(text, ' ')) AS word
@@ -801,8 +770,8 @@ object Pipeline {
         |SELECT pr.l AS l, pr.r AS r,
         |  CAST(sum(freq) AS BIGINT) AS pair_count
         |FROM p GROUP BY 1, 2
-        |ORDER BY pair_count DESC, l, r LIMIT 20""".stripMargin,
-    "pipeline_mix_plan" ->
+        |ORDER BY pair_count DESC, l, r LIMIT 20""".stripMargin)),
+    Query("pipeline_mix_plan", pipelineMixPlan _, Some(
       """WITH c AS (
         |  SELECT lang, COUNT(*) AS n,
         |    CAST(CASE WHEN lang = 'en' THEN 0.40 ELSE 0.15 END
@@ -818,8 +787,8 @@ object Pipeline {
         |  t AS target_share,
         |  CAST(FLOOR(m * t) AS BIGINT) AS planned_docs,
         |  ROUND(FLOOR(m * t) / n, 6) AS keep_rate
-        |FROM w ORDER BY lang""".stripMargin,
-    "embed_norm_audit" ->
+        |FROM w ORDER BY lang""".stripMargin)),
+    Query("embed_norm_audit", embedNormAudit _, Some(
       """WITH nm AS (
         |  SELECT CAST(label AS BIGINT) AS label,
         |    CAST(ROUND(sqrt(list_inner_product(
@@ -842,8 +811,8 @@ object Pipeline {
         |  CAST(SUM(CASE WHEN abs(CAST(nm.nm AS DOUBLE) - mu.mu) >
         |    3.0 * mu.sd THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
         |FROM nm JOIN mu ON nm.label = mu.label
-        |GROUP BY nm.label ORDER BY nm.label""".stripMargin,
-    "pipeline_curriculum" ->
+        |GROUP BY nm.label ORDER BY nm.label""".stripMargin)),
+    Query("pipeline_curriculum", pipelineCurriculum _, Some(
       """WITH p AS (
         |  SELECT lang, doc_id, n_chars,
         |    NTILE(4) OVER (PARTITION BY lang
@@ -854,15 +823,15 @@ object Pipeline {
         |  CAST(SUM(n_chars) AS BIGINT) AS n_chars_total,
         |  CAST(MIN(n_chars) AS BIGINT) AS min_chars,
         |  CAST(MAX(n_chars) AS BIGINT) AS max_chars
-        |FROM p GROUP BY 1, 2 ORDER BY lang, phase""".stripMargin,
-    "sample_balanced" ->
+        |FROM p GROUP BY 1, 2 ORDER BY lang, phase""".stripMargin)),
+    Query("sample_balanced", sampleBalanced _, Some(
       """SELECT doc_id, lang, CAST(rn AS BIGINT) AS pick_rank FROM (
         |  SELECT doc_id, lang,
         |    ROW_NUMBER() OVER (PARTITION BY lang
         |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
         |  FROM documents)
-        |WHERE rn <= 100 ORDER BY lang, pick_rank""".stripMargin,
-    "pipeline_drift_report" ->
+        |WHERE rn <= 100 ORDER BY lang, pick_rank""".stripMargin)),
+    Query("pipeline_drift_report", pipelineDriftReport _, Some(
       """WITH counts AS (
         |  SELECT lang,
         |    SUM(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS n_a,
@@ -879,14 +848,14 @@ object Pipeline {
         |  ROUND(share_a, 6) AS share_a, ROUND(share_b, 6) AS share_b,
         |  ROUND(share_a - share_b, 6) AS share_delta,
         |  ROUND(SUM(abs(share_a - share_b)) OVER () / 2.0, 6) AS tvd
-        |FROM sh ORDER BY lang""".stripMargin,
-    "sample_systematic" ->
+        |FROM sh ORDER BY lang""".stripMargin)),
+    Query("sample_systematic", sampleSystematic _, Some(
       """SELECT doc_id, lang, n_chars, rn FROM (
         |  SELECT doc_id, lang, n_chars,
         |    CAST(ROW_NUMBER() OVER (ORDER BY doc_id) AS BIGINT) AS rn
         |  FROM documents)
-        |WHERE rn % 7 = 3 ORDER BY rn""".stripMargin,
-    "pipeline_epoch_shuffle" ->
+        |WHERE rn % 7 = 3 ORDER BY rn""".stripMargin)),
+    Query("pipeline_epoch_shuffle", pipelineEpochShuffle _, Some(
       """WITH x AS (
         |  SELECT doc_id, epoch,
         |    md5(CAST(epoch AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR))
@@ -895,8 +864,8 @@ object Pipeline {
         |SELECT CAST(epoch AS BIGINT) AS epoch, doc_id,
         |  CAST(ROW_NUMBER() OVER (PARTITION BY epoch
         |    ORDER BY shuffle_key, doc_id) AS BIGINT) AS shuffle_rank
-        |FROM x ORDER BY epoch, shuffle_rank""".stripMargin,
-    "pipeline_token_budget" ->
+        |FROM x ORDER BY epoch, shuffle_rank""".stripMargin)),
+    Query("pipeline_token_budget", pipelineTokenBudget _, Some(
       """WITH s AS (
         |  SELECT doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
@@ -916,8 +885,8 @@ object Pipeline {
         |    CAST(total_tokens AS DOUBLE), 6) AS budget_pct
         |FROM w
         |WHERE (cum_tokens - n_tokens) * 5 < total_tokens * 2
-        |ORDER BY rnk""".stripMargin,
-    "knn_hybrid" -> {
+        |ORDER BY rnk""".stripMargin)),
+    Query("knn_hybrid", knnHybrid _, Some({
       val terms = Seq("data", "merge", "vector")
       val tfCols = terms.zipWithIndex.map { case (t, i) =>
         s"CAST(len(list_filter(string_split(text, ' '), x -> x = '$t')) AS DOUBLE) AS tf$i"
@@ -962,15 +931,15 @@ object Pipeline {
          |    + COALESCE(CAST(1.0 AS DOUBLE) / (60 + c.r_dense), CAST(0 AS DOUBLE)) AS rrf
          |FROM bmr b FULL OUTER JOIN csr c ON b.doc_id = c.doc_id
          |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin
-    },
-    "agg_centroid" ->
+    })),
+    Query("agg_centroid", aggCentroid _, Some(
       """WITH e AS (
         |  SELECT label, i AS dim, CAST(embedding[i] AS DOUBLE) AS v
         |  FROM embeddings, range(1, 65) t(i))
         |SELECT CAST(label AS BIGINT) AS label, CAST(dim AS BIGINT) AS dim,
         |  ROUND(avg(v), 6) AS centroid, count(*) AS n
-        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "sample_weighted" ->
+        |FROM e GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
+    Query("sample_weighted", sampleWeighted _, Some(
       s"""WITH pr AS (
          |  SELECT lang, doc_id, n_chars, $md5Hex8ToInt AS u,
          |    CAST($md5Hex8ToInt AS DOUBLE) / n_chars AS priority
@@ -980,8 +949,8 @@ object Pipeline {
          |    (PARTITION BY lang ORDER BY priority, doc_id) AS rn
          |  FROM pr)
          |SELECT lang, doc_id, n_chars, CAST(u AS BIGINT) AS u
-         |FROM r WHERE rn <= 5 ORDER BY lang, doc_id""".stripMargin,
-    "pack_sequences" ->
+         |FROM r WHERE rn <= 5 ORDER BY lang, doc_id""".stripMargin)),
+    Query("pack_sequences", packSequences _, Some(
       """WITH t AS (
         |  SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens
         |  FROM documents),
@@ -993,8 +962,8 @@ object Pipeline {
         |SELECT lang, bin, COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
         |FROM b
         |GROUP BY lang, bin
-        |ORDER BY lang, bin""".stripMargin,
-    "pipeline_split" ->
+        |ORDER BY lang, bin""".stripMargin)),
+    Query("pipeline_split", pipelineSplit _, Some(
       """SELECT split, lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS n_chars
         |FROM (
         |  SELECT lang, n_chars,
@@ -1003,8 +972,8 @@ object Pipeline {
         |         ELSE 'test' END AS split
         |  FROM documents) t
         |GROUP BY split, lang
-        |ORDER BY split, lang""".stripMargin,
-    "pipeline_quality_cut" ->
+        |ORDER BY split, lang""".stripMargin)),
+    Query("pipeline_quality_cut", pipelineQualityCut _, Some(
       """SELECT lang, COUNT(*) AS n_docs, MIN(n_chars) AS min_chars
         |FROM (
         |  SELECT lang, n_chars,
@@ -1012,8 +981,8 @@ object Pipeline {
         |  FROM documents) t
         |WHERE pr <= 0.25
         |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-    "pipeline_mixture" ->
+        |ORDER BY lang""".stripMargin)),
+    Query("pipeline_mixture", pipelineMixture _, Some(
       """WITH n AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang),
         |t AS (SELECT MIN(CAST(n AS DOUBLE) / CAST(0.2 AS DOUBLE)) AS t FROM n),
         |r AS (SELECT lang,
@@ -1025,8 +994,8 @@ object Pipeline {
         |   OR substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) <
         |      printf('%04x', CAST(FLOOR(rate * 65536.0) AS BIGINT))
         |GROUP BY d.lang
-        |ORDER BY d.lang""".stripMargin,
-    "sample_stratified" ->
+        |ORDER BY d.lang""".stripMargin)),
+    Query("sample_stratified", sampleStratified _, Some(
       """SELECT lang, COUNT(*) AS n_docs
         |FROM documents
         |WHERE CASE lang
@@ -1035,8 +1004,8 @@ object Pipeline {
         |  WHEN 'zh' THEN FALSE
         |  ELSE TRUE END
         |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-    "pipeline_e2e" ->
+        |ORDER BY lang""".stripMargin)),
+    Query("pipeline_e2e", pipelineE2e _, Some(
       """WITH q AS (
         |  SELECT doc_id, lang, text,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
@@ -1060,8 +1029,8 @@ object Pipeline {
         |SELECT split, lang, COUNT(*) AS n_docs,
         |  CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
         |  CAST(MAX(bin) + 1 AS BIGINT) AS n_bins
-        |FROM b GROUP BY split, lang ORDER BY split, lang""".stripMargin,
-    "pipeline_curate" ->
+        |FROM b GROUP BY split, lang ORDER BY split, lang""".stripMargin)),
+    Query("pipeline_curate", pipelineCurate _, Some(
       """WITH q AS (
         |  SELECT doc_id, lang, text FROM documents
         |  WHERE len(string_split(text, ' ')) >= 50
@@ -1074,35 +1043,35 @@ object Pipeline {
         |FROM d
         |WHERE rn = 1 AND substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '8000'
         |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-    "dedup_exact" ->
+        |ORDER BY lang""".stripMargin)),
+    Query("dedup_exact", dedupExact _, Some(
       """SELECT lang, COUNT(*) AS n_docs,
         |  COUNT(DISTINCT md5(text)) AS n_uniq,
         |  COUNT(*) - COUNT(DISTINCT md5(text)) AS n_dups
         |FROM documents
         |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-    "udtf_explode" ->
+        |ORDER BY lang""".stripMargin)),
+    Query("udtf_explode", udtfExplode _, Some(
       """SELECT token, COUNT(*) AS n FROM (
         |  SELECT unnest(string_split(text, ' ')) AS token FROM documents) t
         |GROUP BY token
-        |ORDER BY n DESC, token LIMIT 20""".stripMargin,
-    "text_stats" ->
+        |ORDER BY n DESC, token LIMIT 20""".stripMargin)),
+    Query("text_stats", textStats _, Some(
       """SELECT lang, COUNT(*) AS n_docs,
         |  CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) AS avg_chars,
         |  MAX(n_chars) AS max_chars,
         |  CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
         |FROM documents
         |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-    "multimodal_join" ->
+        |ORDER BY lang""".stripMargin)),
+    Query("multimodal_join", multimodalJoin _, Some(
       """SELECT lang, label, COUNT(*) AS n_docs,
         |  CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) AS avg_chars
         |FROM documents
         |JOIN embeddings ON doc_id = vec_id
         |GROUP BY lang, label
-        |ORDER BY lang, label""".stripMargin,
-    "pipeline_dataset_card" ->
+        |ORDER BY lang, label""".stripMargin)),
+    Query("pipeline_dataset_card", pipelineDatasetCard _, Some(
       """SELECT metric, value FROM (
         |  SELECT 'n_docs' AS metric, CAST(COUNT(*) AS DOUBLE) AS value FROM documents
         |  UNION ALL
@@ -1115,8 +1084,8 @@ object Pipeline {
         |  SELECT 'n_sources', CAST(COUNT(DISTINCT source) AS DOUBLE) FROM documents
         |  UNION ALL
         |  SELECT 'n_distinct_texts', CAST(COUNT(DISTINCT md5(text)) AS DOUBLE) FROM documents) t
-        |ORDER BY metric""".stripMargin,
-    "embed_rproject" -> {
+        |ORDER BY metric""".stripMargin)),
+    Query("embed_rproject", embedRproject _, Some({
       // Scalar columns p0..p15, one per projected dim — array outputs
       // crash the driver's pandas sort (r8 lesson).
       val dims = (0 until 16).map(j => s"proj[${j + 1}] AS p$j")
@@ -1134,22 +1103,24 @@ object Pipeline {
         |SELECT vec_id,
         |  $dims
         |FROM p ORDER BY vec_id""".stripMargin
-    },
-    "udf_cosine_topk" ->
+    })),
+    Query("udf_cosine_topk", udfCosineTopk _, Some(
       """WITH probe AS (
         |  SELECT CAST(embedding AS DOUBLE[]) AS pv FROM embeddings WHERE vec_id = 0)
         |SELECT vec_id,
         |  ROUND(list_cosine_similarity(CAST(embedding AS DOUBLE[]), pv), 6) AS sim
         |FROM embeddings, probe
         |WHERE vec_id <> 0
-        |ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin,
-    "udaf_weighted" ->
+        |ORDER BY sim DESC, vec_id LIMIT 10""".stripMargin)),
+    Query("udaf_weighted", udafWeighted _, Some(
       """SELECT l_returnflag,
         |  ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
         |      / CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 6) AS w_mean_price,
         |  COUNT(*) AS n_rows
         |FROM lineitem
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin
+        |ORDER BY l_returnflag""".stripMargin)),
+    Query("pipeline_bpe_train", pipelineBpeTrain _),
+    Query("pipeline_bpe_encode", pipelineBpeEncode _)
   )
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.api.GraftOps
 import graft.api.GraftOps.refineTopK
 import graft.expressions.PqEncodeExpr
@@ -405,19 +406,13 @@ object Pq {
       .orderBy(col("vec_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "knn_pq" -> knnPq _,
-    "knn_ivfpq" -> knnIvfPq _,
-    "knn_pq_verify" -> knnPqVerify _
-  )
-
-  val oracle: Map[String, String] = Map(
+  val registry: Seq[Query] = Seq(
     // DuckDB twin of the RESIDUAL encode + corrected-ADC algebra: same
     // fixed coarse centroids (vec_id < 4), same round-6 argmin
     // assignment, residuals v − center, residual codebook from vec_ids
     // 4..7, round-6 per-subspace encode argmin, and the per-cell
     // correction terms in the ADC cosine.
-    "knn_pq_verify" ->
+    Query("knn_pq_verify", knnPqVerify _, Some(
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |           FROM embeddings),
         |co AS (SELECT CAST(vec_id AS INT) AS cell, v AS center
@@ -467,6 +462,8 @@ object Pq {
         |SELECT agg.vec_id, CAST(agg.cell AS BIGINT) AS cell, agg.codes,
         |  ROUND((pcc.ippc + agg.sip) / (pn.pn * sqrt(greatest(
         |    pcc.c2 + 2.0 * agg.sipc + agg.sn2, 1e-300))), 6) AS adc_cos
-        |FROM agg JOIN pcc USING (cell), pn ORDER BY agg.vec_id""".stripMargin
+        |FROM agg JOIN pcc USING (cell), pn ORDER BY agg.vec_id""".stripMargin)),
+    Query("knn_pq", knnPq _),
+    Query("knn_ivfpq", knnIvfPq _)
   )
 }

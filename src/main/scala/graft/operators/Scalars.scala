@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.functions.Dec._
 import graft.sources.Tables
 
@@ -219,22 +220,8 @@ object Scalars {
       .orderBy(col("o_orderkey"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "fn_date_arith" -> fnDateArith _,
-    "fn_try" -> fnTry _,
-    "fn_url" -> fnUrl _,
-    "fn_string" -> fnString _,
-    "fn_date" -> fnDate _,
-    "fn_math" -> fnMath _,
-    "fn_case_null" -> fnCaseNull _,
-    "fn_bitwise" -> fnBitwise _,
-    "fn_json" -> fnJson _,
-    "fn_variant" -> fnVariant _,
-    "fn_array" -> fnArray _
-  )
-
-  val oracle: Map[String, String] = Map(
-    "fn_date_arith" ->
+  val registry: Seq[Query] = Seq(
+    Query("fn_date_arith", fnDateArith _, Some(
       """SELECT o_orderkey,
         |  CAST(quarter(CAST(o_orderdate AS DATE)) AS BIGINT) AS qtr,
         |  CAST(last_day(CAST(o_orderdate AS DATE)) AS TIMESTAMP)
@@ -247,8 +234,8 @@ object Scalars {
         |    AS days_in_month,
         |  CAST(date_diff('day', DATE '1970-01-01',
         |    CAST(o_orderdate AS DATE)) % 7 AS BIGINT) AS dow_epoch
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "fn_try" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
+    Query("fn_try", fnTry _, Some(
       """WITH e AS (
         |  SELECT event_id, event_type, value,
         |    CAST(props->>'$.k' AS BIGINT) AS k
@@ -257,8 +244,8 @@ object Scalars {
         |  value / NULLIF(CAST(k - 50 AS DOUBLE), 0) AS safe_ratio,
         |  TRY_CAST(CASE WHEN k < 50 THEN CAST(k AS VARCHAR)
         |           ELSE event_type END AS BIGINT) AS maybe_num
-        |FROM e ORDER BY event_id""".stripMargin,
-    "fn_url" ->
+        |FROM e ORDER BY event_id""".stripMargin)),
+    Query("fn_url", fnUrl _, Some(
       """WITH u AS (
         |  SELECT event_id,
         |    'https://shop-' || CAST(user_id % 3 AS VARCHAR) ||
@@ -271,8 +258,8 @@ object Scalars {
         |  regexp_extract(url, 'item=([0-9]+)', 1) AS item,
         |  regexp_extract(url, 'https://([^/]+)/', 1) ||
         |    regexp_extract(url, 'https://[^/]+(/[^?]*)', 1) AS canon
-        |FROM u ORDER BY event_id""".stripMargin,
-    "fn_string" ->
+        |FROM u ORDER BY event_id""".stripMargin)),
+    Query("fn_string", fnString _, Some(
       """SELECT p_partkey,
         |  UPPER(p_name) AS name_upper,
         |  LOWER(p_brand) AS brand_lower,
@@ -283,8 +270,8 @@ object Scalars {
         |  LPAD(CAST(p_partkey AS VARCHAR), 8, '0') AS key_padded,
         |  REGEXP_EXTRACT(p_type, '^([A-Z]+)', 1) AS type_first_word
         |FROM part
-        |ORDER BY p_partkey""".stripMargin,
-    "fn_date" ->
+        |ORDER BY p_partkey""".stripMargin)),
+    Query("fn_date", fnDate _, Some(
       """SELECT o_orderkey, o_orderdate,
         |  CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS o_year,
         |  CAST(EXTRACT(MONTH FROM o_orderdate) AS BIGINT) AS o_month,
@@ -292,8 +279,8 @@ object Scalars {
         |  CAST(DATE_TRUNC('month', o_orderdate) AS TIMESTAMP) AS month_start,
         |  CAST((2000 - EXTRACT(YEAR FROM o_orderdate)) * 12 - EXTRACT(MONTH FROM o_orderdate) AS BIGINT) AS months_to_2000
         |FROM orders
-        |ORDER BY o_orderkey""".stripMargin,
-    "fn_math" ->
+        |ORDER BY o_orderkey""".stripMargin)),
+    Query("fn_math", fnMath _, Some(
       """SELECT p_partkey,
         |  CAST(CAST(p_retailprice AS DECIMAL(18,2)) AS DOUBLE) AS price_dec,
         |  CAST(ABS(p_size - 25) AS BIGINT) AS size_dist,
@@ -303,8 +290,8 @@ object Scalars {
         |  ROUND(LN(p_retailprice), 6) AS price_ln,
         |  CAST(p_size % 7 AS BIGINT) AS size_mod7
         |FROM part
-        |ORDER BY p_partkey""".stripMargin,
-    "fn_case_null" ->
+        |ORDER BY p_partkey""".stripMargin)),
+    Query("fn_case_null", fnCaseNull _, Some(
       """SELECT
         |  CASE WHEN o_totalprice < 100000 THEN 'low'
         |       WHEN o_totalprice < 250000 THEN 'mid'
@@ -316,8 +303,8 @@ object Scalars {
         |  CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total_price
         |FROM orders
         |GROUP BY price_band, urgency, status_label
-        |ORDER BY price_band, urgency, status_label""".stripMargin,
-    "fn_bitwise" ->
+        |ORDER BY price_band, urgency, status_label""".stripMargin)),
+    Query("fn_bitwise", fnBitwise _, Some(
       """SELECT p_partkey,
         |  CAST(p_partkey & 255 AS BIGINT) AS key_and,
         |  CAST(p_partkey | 4096 AS BIGINT) AS key_or,
@@ -325,24 +312,24 @@ object Scalars {
         |  CAST(p_partkey << 3 AS BIGINT) AS key_shl,
         |  CAST(p_partkey >> 2 AS BIGINT) AS key_shr
         |FROM part
-        |ORDER BY p_partkey""".stripMargin,
-    "fn_json" ->
+        |ORDER BY p_partkey""".stripMargin)),
+    Query("fn_json", fnJson _, Some(
       """SELECT event_type, COUNT(*) AS n_events,
         |  MIN(CAST(props->>'$.k' AS BIGINT)) AS k_min,
         |  MAX(CAST(props->>'$.k' AS BIGINT)) AS k_max,
         |  CAST(SUM(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS k_sum
         |FROM events
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-    "fn_variant" ->
+        |ORDER BY event_type""".stripMargin)),
+    Query("fn_variant", fnVariant _, Some(
       """SELECT event_type, COUNT(*) AS n_events,
         |  MIN(CAST(props->>'$.k' AS BIGINT)) AS k_min,
         |  MAX(CAST(props->>'$.k' AS BIGINT)) AS k_max,
         |  CAST(SUM(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS k_sum
         |FROM events
         |GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-    "fn_array" ->
+        |ORDER BY event_type""".stripMargin)),
+    Query("fn_array", fnArray _, Some(
       """SELECT vec_id, label,
         |  CAST(LEN(embedding) AS BIGINT) AS n_dims,
         |  ROUND(CAST(embedding[1] AS DOUBLE), 6) AS first_val,
@@ -351,6 +338,6 @@ object Scalars {
         |      + CAST(embedding[5] AS DOUBLE) + CAST(embedding[6] AS DOUBLE)
         |      + CAST(embedding[7] AS DOUBLE) + CAST(embedding[8] AS DOUBLE), 6) AS head8_sum
         |FROM embeddings
-        |ORDER BY vec_id""".stripMargin
+        |ORDER BY vec_id""".stripMargin))
   )
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.functions.Dec._
 import graft.sources.Tables
 
@@ -147,16 +148,6 @@ object Scans {
         max(col("ri")).as("max_row_index"))
       .orderBy(col("file_name"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "scan_file_provenance" -> scanFileProvenance _,
-    "layout_zorder" -> layoutZorder _,
-    "layout_hilbert" -> layoutHilbert _,
-    "scan_project" -> scanProject _,
-    "filter_pred" -> filterPred _,
-    "filter_like_null" -> filterLikeNull _,
-    "sort_limit" -> sortLimit _
-  )
-
   /** Morton interleave as plain SQL bit arithmetic (32 OR'd terms). */
   private def zcodeSql: String = {
     val a = "(o_custkey % 65536)"
@@ -167,8 +158,8 @@ object Scans {
     }.mkString("(", " | ", ")")
   }
 
-  val oracle: Map[String, String] = Map(
-    "layout_hilbert" ->
+  val registry: Seq[Query] = Seq(
+    Query("layout_hilbert", layoutHilbert _, Some(
       """WITH RECURSIVE base AS (
         |  SELECT o_orderkey,
         |    CAST(o_custkey % 65536 AS BIGINT) AS x,
@@ -188,34 +179,35 @@ object Scans {
         |      * xor(3 * ((x >> i) & 1), (y >> i) & 1)
         |  FROM h WHERE i >= 0)
         |SELECT o_orderkey, d AS hcode FROM h WHERE i = -1
-        |ORDER BY hcode, o_orderkey LIMIT 100""".stripMargin,
-    "layout_zorder" ->
+        |ORDER BY hcode, o_orderkey LIMIT 100""".stripMargin)),
+    Query("layout_zorder", layoutZorder _, Some(
       s"""SELECT o_orderkey, CAST($zcodeSql AS BIGINT) AS zcode
          |FROM orders
          |ORDER BY zcode, o_orderkey
-         |LIMIT 100""".stripMargin,
-    "scan_project" ->
+         |LIMIT 100""".stripMargin)),
+    Query("scan_project", scanProject _, Some(
       """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
         |FROM lineitem
         |ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice
-        |LIMIT 100""".stripMargin,
-    "filter_pred" ->
+        |LIMIT 100""".stripMargin)),
+    Query("filter_pred", filterPred _, Some(
       """SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate, o_orderpriority
         |FROM orders
         |WHERE o_orderstatus = 'F'
         |  AND o_totalprice BETWEEN 50000 AND 200000
         |  AND o_orderpriority IN ('1-URGENT', '2-HIGH')
         |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |ORDER BY o_orderkey""".stripMargin,
-    "filter_like_null" ->
+        |ORDER BY o_orderkey""".stripMargin)),
+    Query("filter_like_null", filterLikeNull _, Some(
       """SELECT p_partkey, p_name, p_brand, p_size
         |FROM part
         |WHERE (p_name LIKE '%green%' OR p_brand = 'Brand#1')
         |  AND p_size IS NOT NULL
-        |ORDER BY p_partkey""".stripMargin,
-    "sort_limit" ->
+        |ORDER BY p_partkey""".stripMargin)),
+    Query("sort_limit", sortLimit _, Some(
       """SELECT l_orderkey, l_linenumber, CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS DOUBLE) AS price
         |FROM lineitem
-        |ORDER BY price DESC, l_orderkey, l_linenumber LIMIT 50""".stripMargin
+        |ORDER BY price DESC, l_orderkey, l_linenumber LIMIT 50""".stripMargin)),
+    Query("scan_file_provenance", scanFileProvenance _)
   )
 }

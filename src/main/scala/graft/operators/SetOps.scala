@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Query
 import graft.sources.Tables
 
 /** Set operators (SURVEY.md §2.1 category G).
@@ -96,16 +97,8 @@ object SetOps {
     inter.unionAll(exc).orderBy(col("op"), col("nationkey"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "set_union" -> setUnion _,
-    "set_intersect" -> setIntersect _,
-    "set_except" -> setExcept _,
-    "set_union_byname" -> setUnionByname _,
-    "set_bag_ops" -> setBagOps _
-  )
-
-  val oracle: Map[String, String] = Map(
-    "set_bag_ops" ->
+  val registry: Seq[Query] = Seq(
+    Query("set_bag_ops", setBagOps _, Some(
       """WITH c AS (SELECT CAST(c_nationkey AS BIGINT) AS nationkey FROM customer),
         |s AS (SELECT CAST(s_nationkey AS BIGINT) AS nationkey FROM supplier),
         |i AS (SELECT 'intersect_all' AS op, nationkey, COUNT(*) AS n
@@ -115,30 +108,30 @@ object SetOps {
         |  FROM (SELECT nationkey FROM c EXCEPT ALL SELECT nationkey FROM s)
         |  GROUP BY 2)
         |SELECT * FROM i UNION ALL SELECT * FROM e
-        |ORDER BY op, nationkey""".stripMargin,
-    "set_union_byname" ->
+        |ORDER BY op, nationkey""".stripMargin)),
+    Query("set_union_byname", setUnionByname _, Some(
       """SELECT p_partkey, p_brand, p_retailprice, 'small' AS src
         |FROM part WHERE p_size < 15
         |UNION ALL BY NAME
         |SELECT p_size, p_partkey, p_type, 'large' AS src
         |FROM part WHERE p_size >= 15
-        |ORDER BY p_partkey""".stripMargin,
-    "set_union" ->
+        |ORDER BY p_partkey""".stripMargin)),
+    Query("set_union", setUnion _, Some(
       """SELECT nationkey, COUNT(*) AS n_all, COUNT(DISTINCT side) AS n_sides
         |FROM (SELECT c_nationkey AS nationkey, 'c' AS side FROM customer
         |      UNION ALL
         |      SELECT s_nationkey AS nationkey, 's' AS side FROM supplier)
         |GROUP BY nationkey
-        |ORDER BY nationkey""".stripMargin,
-    "set_intersect" ->
+        |ORDER BY nationkey""".stripMargin)),
+    Query("set_intersect", setIntersect _, Some(
       """SELECT c_nationkey AS nationkey FROM customer
         |INTERSECT
         |SELECT s_nationkey AS nationkey FROM supplier
-        |ORDER BY nationkey""".stripMargin,
-    "set_except" ->
+        |ORDER BY nationkey""".stripMargin)),
+    Query("set_except", setExcept _, Some(
       """SELECT c_nationkey AS nationkey FROM customer
         |EXCEPT
         |SELECT n_nationkey AS nationkey FROM nation WHERE n_regionkey IN (0, 1)
-        |ORDER BY nationkey""".stripMargin
+        |ORDER BY nationkey""".stripMargin))
   )
 }

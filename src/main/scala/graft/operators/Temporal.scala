@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Query
 import graft.api.Barrier._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1313,43 +1314,8 @@ object Temporal {
       .orderBy(col("method"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ts_backtest" -> tsBacktest _,
-    "ts_holt" -> tsHolt _,
-    "ts_dow_hour_heatmap" -> tsDowHourHeatmap _,
-    "ts_acf" -> tsAcf _,
-    "ts_stl_strength" -> tsStlStrength _,
-    "ts_hampel" -> tsHampel _,
-    "ts_mann_kendall" -> tsMannKendall _,
-    "ts_spectral" -> tsSpectral _,
-    "ts_theil_sen" -> tsTheilSen _,
-    "ts_burstiness" -> tsBurstiness _,
-    "ts_cross_corr" -> tsCrossCorr _,
-    "ts_anomaly_stl" -> tsAnomalyStl _,
-    "join_asof_tolerance" -> joinAsofTolerance _,
-    "ts_streaks" -> tsStreaks _,
-    "ts_downsample" -> tsDownsample _,
-    "ts_cusum" -> tsCusum _,
-    "ts_peak_detect" -> tsPeakDetect _,
-    "ts_ewma" -> tsEwma _,
-    "ts_rolling_stats" -> tsRollingStats _,
-    "ts_decompose" -> tsDecompose _,
-    "ts_autocorr" -> tsAutocorr _,
-    "stream_tumble" -> streamTumble _,
-    "stream_slide" -> streamSlide _,
-    "stream_session" -> streamSession _,
-    "join_asof" -> joinAsof _,
-    "join_asof_fwd" -> joinAsofFwd _,
-    "join_asof_nearest" -> joinAsofNearest _,
-    "ts_gapfill" -> tsGapfill _,
-    "ts_locf" -> tsLocf _,
-    "ts_interp" -> tsInterp _,
-    "ts_islands" -> tsIslands _,
-    "ts_resample" -> tsResample _
-  )
-
-  val oracle: Map[String, String] = Map(
-    "ts_backtest" ->
+  val registry: Seq[Query] = Seq(
+    Query("ts_backtest", tsBacktest _, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS c
@@ -1389,8 +1355,8 @@ object Temporal {
         |  ROUND(sqrt(CAST(s7 AS DOUBLE) / CAST(n AS DOUBLE)) / 100.0, 6),
         |  ROUND(CAST(a7 AS DOUBLE) / CAST(a1 AS DOUBLE), 6)
         |FROM a
-        |ORDER BY method""".stripMargin,
-    "ts_holt" ->
+        |ORDER BY method""".stripMargin)),
+    Query("ts_holt", tsHolt _, Some(
       """WITH RECURSIVE daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -1433,8 +1399,8 @@ object Temporal {
         |SELECT CAST(day AS TIMESTAMP), horizon, NULL, NULL, NULL,
         |  ROUND(yhat / CAST(100.0 AS DOUBLE), 6)
         |FROM fc
-        |ORDER BY day_ts""".stripMargin,
-    "ts_dow_hour_heatmap" ->
+        |ORDER BY day_ts""".stripMargin)),
+    Query("ts_dow_hour_heatmap", tsDowHourHeatmap _, Some(
       """WITH c AS (
         |  SELECT date_diff('day', DATE '1970-01-01',
         |      CAST(CAST(ts AS TIMESTAMP) AS DATE)) % 7 AS dow,
@@ -1447,8 +1413,8 @@ object Temporal {
         |SELECT CAST(dow AS BIGINT) AS dow, CAST(hr AS BIGINT) AS hr,
         |  n_events, value_total,
         |  ROUND(n_events / t.t, 6) AS share
-        |FROM c, t ORDER BY dow, hr""".stripMargin,
-    "ts_acf" ->
+        |FROM c, t ORDER BY dow, hr""".stripMargin)),
+    Query("ts_acf", tsAcf _, Some(
       """WITH d0 AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    SUM(CAST(value AS DECIMAL(18,2))) AS x0
@@ -1471,8 +1437,8 @@ object Temporal {
         |    NULLIF(sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 0.0),
         |    6) AS acf,
         |  ROUND(1.96 / sqrt(n), 6) AS conf_band
-        |FROM s ORDER BY lag""".stripMargin,
-    "ts_stl_strength" ->
+        |FROM s ORDER BY lag""".stripMargin)),
+    Query("ts_stl_strength", tsStlStrength _, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2))
@@ -1518,8 +1484,8 @@ object Temporal {
         |  ROUND(GREATEST(0.0, 1.0 -
         |    ((srr - sr * sr / n) / (n - 1)) /
         |    ((ssrr - ssr * ssr / n) / (n - 1))), 6) AS seasonal_strength
-        |FROM p""".stripMargin,
-    "ts_hampel" ->
+        |FROM p""".stripMargin)),
+    Query("ts_hampel", tsHampel _, Some(
       """WITH d AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    SUM(CAST(value AS DECIMAL(18,2))) AS rev
@@ -1562,8 +1528,8 @@ object Temporal {
         |    ROUND(4.4478 * CAST(mad.mad AS DOUBLE), 6) AS is_outlier
         |FROM d JOIN med ON med.cday = d.day
         |JOIN mad ON mad.cday = d.day
-        |ORDER BY day_ts""".stripMargin,
-    "ts_mann_kendall" ->
+        |ORDER BY day_ts""".stripMargin)),
+    Query("ts_mann_kendall", tsMannKendall _, Some(
       """WITH d AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    SUM(CAST(value AS DECIMAL(18,2))) AS rev
@@ -1592,8 +1558,8 @@ object Temporal {
         |  CASE WHEN abs(ROUND(z, 6)) <= 1.96 THEN 'none'
         |       WHEN ROUND(z, 6) > 0 THEN 'increasing'
         |       ELSE 'decreasing' END AS trend
-        |FROM g""".stripMargin,
-    "ts_spectral" ->
+        |FROM g""".stripMargin)),
+    Query("ts_spectral", tsSpectral _, Some(
       """WITH d AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    SUM(CAST(value AS DECIMAL(18,2))) AS rev
@@ -1615,8 +1581,8 @@ object Temporal {
         |p AS (SELECT k, nd, a * a + b * b AS p FROM sp)
         |SELECT k, ROUND(CAST(nd AS DOUBLE) / k, 6) AS period_days,
         |  ROUND(p / SUM(p) OVER (), 6) AS power_share
-        |FROM p ORDER BY k""".stripMargin,
-    "ts_theil_sen" ->
+        |FROM p ORDER BY k""".stripMargin)),
+    Query("ts_theil_sen", tsTheilSen _, Some(
       """WITH d AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    SUM(CAST(value AS DECIMAL(18,2))) AS rev
@@ -1634,8 +1600,8 @@ object Temporal {
         |SELECT CAST(MAX(cnt) AS BIGINT) AS n_pairs,
         |  ROUND(AVG(slope), 6) AS sen_slope
         |FROM r
-        |WHERE rn = (cnt + 1) // 2 OR rn = cnt // 2 + 1""".stripMargin,
-    "ts_burstiness" ->
+        |WHERE rn = (cnt + 1) // 2 OR rn = cnt // 2 + 1""".stripMargin)),
+    Query("ts_burstiness", tsBurstiness _, Some(
       """WITH g AS (
         |  SELECT event_type,
         |    epoch_us(CAST(ts AS TIMESTAMP)) -
@@ -1656,8 +1622,8 @@ object Temporal {
         |  ROUND((sqrt((sgg - sg * sg / n) / (n - 1)) - sg / n) /
         |    (sqrt((sgg - sg * sg / n) / (n - 1)) + sg / n), 6)
         |    AS burstiness
-        |FROM s ORDER BY event_type""".stripMargin,
-    "ts_cross_corr" ->
+        |FROM s ORDER BY event_type""".stripMargin)),
+    Query("ts_cross_corr", tsCrossCorr _, Some(
       """WITH d0 AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    SUM(CASE WHEN event_type = 'view'
@@ -1686,8 +1652,8 @@ object Temporal {
         |  ROUND((n * sxy - sx * sy) /
         |    NULLIF(sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 0.0),
         |    6) AS xcorr
-        |FROM s ORDER BY lag""".stripMargin,
-    "ts_anomaly_stl" ->
+        |FROM s ORDER BY lag""".stripMargin)),
+    Query("ts_anomaly_stl", tsAnomalyStl _, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total
@@ -1713,8 +1679,8 @@ object Temporal {
         |  ROUND((residual - mu) / sigma, 6) AS z,
         |  abs(ROUND((residual - mu) / sigma, 6)) > 2.0 AS is_anomaly
         |FROM r CROSS JOIN st
-        |ORDER BY day_ts""".stripMargin,
-    "join_asof_tolerance" ->
+        |ORDER BY day_ts""".stripMargin)),
+    Query("join_asof_tolerance", joinAsofTolerance _, Some(
       """WITH e AS (
         |  SELECT event_id, user_id, event_type, CAST(ts AS TIMESTAMP) AS tsu
         |  FROM events),
@@ -1729,8 +1695,8 @@ object Temporal {
         |FROM m
         |WHERE event_type = 'purchase' AND signup_ts IS NOT NULL
         |  AND epoch_us(tsu) - epoch_us(signup_ts) <= 3600000000
-        |ORDER BY event_id""".stripMargin,
-    "ts_streaks" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("ts_streaks", tsStreaks _, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    SUM(CAST(value AS DECIMAL(18,2))) AS total_dec
@@ -1750,8 +1716,8 @@ object Temporal {
         |  COUNT(*) AS rising_days,
         |  CAST(MAX(total_dec) - MIN(prev_dec) AS DOUBLE) AS gain
         |FROM g WHERE up = 1
-        |GROUP BY grp ORDER BY start_ts""".stripMargin,
-    "ts_downsample" ->
+        |GROUP BY grp ORDER BY start_ts""".stripMargin)),
+    Query("ts_downsample", tsDownsample _, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents
@@ -1774,8 +1740,8 @@ object Temporal {
         |SELECT bucket, CAST(day AS TIMESTAMP) AS day_ts,
         |  ROUND(CAST(cents AS DOUBLE) / 100.0, 2) AS revenue,
         |  CAST(n_b AS BIGINT) AS n_days_in_bucket
-        |FROM r WHERE rn = 1 ORDER BY bucket""".stripMargin,
-    "ts_cusum" ->
+        |FROM r WHERE rn = 1 ORDER BY bucket""".stripMargin)),
+    Query("ts_cusum", tsCusum _, Some(
       """WITH e AS (
         |  SELECT event_type, event_id, CAST(ts AS TIMESTAMP) AS tsu,
         |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -1801,8 +1767,8 @@ object Temporal {
         |    / 100.0, 6) AS mean_value,
         |  ROUND(CAST(MAX(scaled_dev) AS DOUBLE) / CAST(MAX(n) AS DOUBLE)
         |    / 100.0, 6) AS max_abs_cusum
-        |FROM d GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "ts_peak_detect" ->
+        |FROM d GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Query("ts_peak_detect", tsPeakDetect _, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    SUM(CAST(value AS DECIMAL(18,2))) AS total_dec
@@ -1821,8 +1787,8 @@ object Temporal {
         |FROM l
         |WHERE prev_dec IS NOT NULL AND next_dec IS NOT NULL
         |  AND total_dec > prev_dec AND total_dec > next_dec
-        |ORDER BY day_ts""".stripMargin,
-    "ts_ewma" ->
+        |ORDER BY day_ts""".stripMargin)),
+    Query("ts_ewma", tsEwma _, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    SUM(CAST(value AS DECIMAL(18,2))) AS total_dec
@@ -1850,8 +1816,8 @@ object Temporal {
         |      + CASE WHEN c6 IS NULL THEN 0 ELSE 2 END
         |      + CASE WHEN c7 IS NULL THEN 0 ELSE 1 END AS DOUBLE)
         |    / 100.0, 6) AS ewma
-        |FROM l ORDER BY day_ts""".stripMargin,
-    "ts_rolling_stats" ->
+        |FROM l ORDER BY day_ts""".stripMargin)),
+    Query("ts_rolling_stats", tsRollingStats _, Some(
       """SELECT user_id, event_id, value,
         |  COUNT(*) OVER w AS roll_n,
         |  ROUND(AVG(value) OVER w, 6) AS roll_mean,
@@ -1861,8 +1827,8 @@ object Temporal {
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
         |  ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, event_id""".stripMargin,
-    "ts_decompose" ->
+        |ORDER BY user_id, event_id""".stripMargin)),
+    Query("ts_decompose", tsDecompose _, Some(
       """WITH daily AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total
@@ -1883,8 +1849,8 @@ object Temporal {
         |  ROUND(t.total - t.trend - (s.raw_seasonal - c.season_mean), 6)
         |    AS residual
         |FROM t JOIN s ON t.dow = s.dow CROSS JOIN c
-        |ORDER BY day_ts""".stripMargin,
-    "ts_autocorr" ->
+        |ORDER BY day_ts""".stripMargin)),
+    Query("ts_autocorr", tsAutocorr _, Some(
       """WITH l AS (
         |  SELECT event_type, value,
         |    LAG(value) OVER (PARTITION BY user_id, event_type
@@ -1893,15 +1859,15 @@ object Temporal {
         |SELECT event_type, COUNT(*) AS n_pairs,
         |  ROUND(corr(value, prev), 6) AS acf1
         |FROM l WHERE prev IS NOT NULL
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "stream_tumble" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    Query("stream_tumble", streamTumble _, Some(
       """SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS window_start,
         |  event_type, COUNT(*) AS n_events,
         |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total_value
         |FROM events
         |GROUP BY window_start, event_type
-        |ORDER BY window_start, event_type""".stripMargin,
-    "stream_slide" ->
+        |ORDER BY window_start, event_type""".stripMargin)),
+    Query("stream_slide", streamSlide _, Some(
       """SELECT ws AS window_start, COUNT(*) AS n_events FROM (
         |  SELECT time_bucket(INTERVAL '30 minutes', CAST(ts AS TIMESTAMP)) AS ws,
         |         CAST(ts AS TIMESTAMP) AS tsu FROM events
@@ -1910,8 +1876,8 @@ object Temporal {
         |         CAST(ts AS TIMESTAMP) AS tsu FROM events) t
         |WHERE tsu >= ws AND tsu < ws + INTERVAL '1 hour'
         |GROUP BY ws
-        |ORDER BY ws""".stripMargin,
-    "stream_session" ->
+        |ORDER BY ws""".stripMargin)),
+    Query("stream_session", streamSession _, Some(
       """WITH e AS (
         |  SELECT user_id, CAST(ts AS TIMESTAMP) AS tsu, event_id, value FROM events),
         |m AS (
@@ -1925,8 +1891,8 @@ object Temporal {
         |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total_value
         |FROM g
         |GROUP BY user_id, sid
-        |ORDER BY user_id, session_start""".stripMargin,
-    "join_asof" ->
+        |ORDER BY user_id, session_start""".stripMargin)),
+    Query("join_asof", joinAsof _, Some(
       """SELECT event_id, user_id, signup_ts FROM (
         |  SELECT event_id, user_id, event_type,
         |    MAX(CASE WHEN event_type = 'signup' THEN CAST(ts AS TIMESTAMP) END)
@@ -1934,8 +1900,8 @@ object Temporal {
         |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS signup_ts
         |  FROM events) t
         |WHERE event_type = 'purchase' AND signup_ts IS NOT NULL
-        |ORDER BY event_id""".stripMargin,
-    "join_asof_fwd" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("join_asof_fwd", joinAsofFwd _, Some(
       """SELECT event_id, user_id, next_signup_ts FROM (
         |  SELECT event_id, user_id, event_type,
         |    MIN(CASE WHEN event_type = 'signup' THEN CAST(ts AS TIMESTAMP) END)
@@ -1943,8 +1909,8 @@ object Temporal {
         |            ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS next_signup_ts
         |  FROM events) t
         |WHERE event_type = 'purchase' AND next_signup_ts IS NOT NULL
-        |ORDER BY event_id""".stripMargin,
-    "join_asof_nearest" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("join_asof_nearest", joinAsofNearest _, Some(
       """SELECT event_id, user_id,
         |  CASE WHEN prev_signup IS NULL THEN next_signup
         |       WHEN next_signup IS NULL THEN prev_signup
@@ -1961,8 +1927,8 @@ object Temporal {
         |  FROM events) t
         |WHERE event_type = 'purchase'
         |  AND (prev_signup IS NOT NULL OR next_signup IS NOT NULL)
-        |ORDER BY event_id""".stripMargin,
-    "ts_gapfill" ->
+        |ORDER BY event_id""".stripMargin)),
+    Query("ts_gapfill", tsGapfill _, Some(
       """WITH daily AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day, COUNT(*) AS n_events,
         |    CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS DOUBLE) AS total_value
@@ -1975,8 +1941,8 @@ object Temporal {
         |  COALESCE(n_events, 0) AS n_events,
         |  COALESCE(total_value, 0.0) AS total_value
         |FROM cal c LEFT JOIN daily d ON c.user_id = d.user_id AND c.day = d.day
-        |ORDER BY c.user_id, day_ts""".stripMargin,
-    "ts_locf" ->
+        |ORDER BY c.user_id, day_ts""".stripMargin)),
+    Query("ts_locf", tsLocf _, Some(
       """WITH daily AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day,
         |    CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS DOUBLE) AS total_value
@@ -1990,8 +1956,8 @@ object Temporal {
         |    PARTITION BY c.user_id ORDER BY c.day
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled_value
         |FROM cal c LEFT JOIN daily d ON c.user_id = d.user_id AND c.day = d.day
-        |ORDER BY c.user_id, day_ts""".stripMargin,
-    "ts_interp" ->
+        |ORDER BY c.user_id, day_ts""".stripMargin)),
+    Query("ts_interp", tsInterp _, Some(
       """WITH daily AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day,
         |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS total_value
@@ -2010,8 +1976,8 @@ object Temporal {
         |      (CAST(total_value AS DOUBLE) - CAST(prev_value AS DOUBLE)) *
         |      (CAST(date_diff('day', prev_day, cal_day) AS DOUBLE) /
         |       CAST(date_diff('day', prev_day, day) AS DOUBLE)) END, 6) AS value_interp
-        |FROM g ORDER BY user_id, day_ts""".stripMargin,
-    "ts_islands" ->
+        |FROM g ORDER BY user_id, day_ts""".stripMargin)),
+    Query("ts_islands", tsIslands _, Some(
       """WITH d AS (
         |  SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events),
         |g AS (
@@ -2024,8 +1990,8 @@ object Temporal {
         |  FROM g GROUP BY user_id, grp)
         |SELECT user_id, COUNT(*) AS n_streaks, MAX(len) AS longest_streak,
         |  CAST(SUM(len) AS BIGINT) AS active_days
-        |FROM i GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "ts_resample" ->
+        |FROM i GROUP BY user_id ORDER BY user_id""".stripMargin)),
+    Query("ts_resample", tsResample _, Some(
       """WITH b AS (
         |  SELECT user_id, event_id, value,
         |    make_timestamp((epoch_us(CAST(ts AS TIMESTAMP)) // 21600000000) * 21600000000) AS bucket_ts,
@@ -2044,6 +2010,6 @@ object Temporal {
         |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS volume
         |FROM r
         |GROUP BY user_id, bucket_ts
-        |ORDER BY user_id, bucket_ts""".stripMargin
+        |ORDER BY user_id, bucket_ts""".stripMargin))
   )
 }

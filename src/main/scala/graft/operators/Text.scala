@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Query
 import graft.api.Barrier._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -750,33 +751,6 @@ object Text {
       .orderBy(col("lang"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_edit_distance" -> textEditDistance _,
-    "text_js_divergence" -> textJsDivergence _,
-    "text_oov_rate" -> textOovRate _,
-    "text_code_detect" -> textCodeDetect _,
-    "text_vocab_jaccard" -> textVocabJaccard _,
-    "text_hapax" -> textHapax _,
-    "text_zipf" -> textZipf _,
-    "text_vocab_growth" -> textVocabGrowth _,
-    "text_pmi" -> textPmi _,
-    "text_keywords" -> textKeywords _,
-    "text_chunk" -> textChunk _,
-    "text_redact" -> textRedact _,
-    "text_bigram_lm" -> textBigramLm _,
-    "text_decontaminate" -> textDecontaminate _,
-    "text_logprob" -> textLogprob _,
-    "text_quality" -> textQuality _,
-    "text_fingerprint" -> textFingerprint _,
-    "text_langid" -> textLangid _,
-    "text_tokens_regex" -> textTokensRegex _,
-    "text_winnow" -> textWinnow _,
-    "text_winnow_md5" -> textWinnowMd5 _,
-    "text_repetition" -> textRepetition _,
-    "text_tfidf" -> textTfidf _,
-    "text_bm25" -> textBm25 _
-  )
-
   /** `text_bm25` — BM25 relevance of every document against a fixed
     * 3-term query (GraftOps.bm25): the lexical retrieval score a
     * hybrid search stack unions with the ANN candidates before
@@ -790,14 +764,14 @@ object Text {
         "doc_id", "text", Seq("data", "merge", "vector"))
       .orderBy(col("doc_id"))
 
-  val oracle: Map[String, String] = Map(
+  val registry: Seq[Query] = Seq(
     // DuckDB twin of the winnow cascade: gram hashes via 48-bit md5
     // prefix, window minima via list_min over 4-wide slices (the
     // comprehension clamps trailing slices exactly like the cascade's
     // null-padded zip_with), distinct minima, then the same sharing
     // accounting. fp lists are distinct per doc, so HAVING count(*)>=2
     // counts distinct docs.
-    "text_winnow_md5" ->
+    Query("text_winnow_md5", textWinnowMd5 _, Some(
       """WITH g AS (SELECT doc_id, source,
         |    [('0x'||substr(md5(substr(text, i, 5)),1,12))::BIGINT
         |     for i in range(1, greatest(length(text)-4, 1)+1)] AS gh
@@ -814,8 +788,8 @@ object Text {
         |  CAST(sum(CASE WHEN sh.doc_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
         |    AS n_docs_sharing
         |FROM m LEFT JOIN shared sh ON sh.doc_id = m.doc_id
-        |GROUP BY m.source ORDER BY m.source""".stripMargin,
-    "text_edit_distance" ->
+        |GROUP BY m.source ORDER BY m.source""".stripMargin)),
+    Query("text_edit_distance", textEditDistance _, Some(
       """WITH d AS (
         |  SELECT doc_id, lang, n_chars, substr(text, 1, 48) AS probe,
         |    string_split(text, ' ')[1] AS tok0,
@@ -840,8 +814,8 @@ object Text {
         |    AS n_close,
         |  CAST(MIN(dist) AS BIGINT) AS min_dist,
         |  ROUND(AVG(dist), 6) AS avg_dist
-        |FROM p GROUP BY lang ORDER BY lang""".stripMargin,
-    "text_js_divergence" ->
+        |FROM p GROUP BY lang ORDER BY lang""".stripMargin)),
+    Query("text_js_divergence", textJsDivergence _, Some(
       """WITH t AS (
         |  SELECT lang, unnest(string_split(text, ' ')) AS w
         |  FROM documents),
@@ -884,8 +858,8 @@ object Text {
         |  ROUND(hm - (hp + hq) / 2, 6) AS js_nats,
         |  ROUND((hm - (hp + hq) / 2) / 0.6931471805599453, 6)
         |    AS js_normalized
-        |FROM h ORDER BY lang_a, lang_b""".stripMargin,
-    "text_oov_rate" ->
+        |FROM h ORDER BY lang_a, lang_b""".stripMargin)),
+    Query("text_oov_rate", textOovRate _, Some(
       """WITH t AS (
         |  SELECT unnest(string_split(text, ' ')) AS w FROM documents),
         |f AS (
@@ -909,8 +883,8 @@ object Text {
         |  CAST(tot.total_tokens AS BIGINT) AS total_tokens,
         |  ROUND(1.0 - CAST(cov.covered_tokens AS DOUBLE) /
         |    CAST(tot.total_tokens AS DOUBLE), 6) AS oov_rate
-        |FROM cov, tot ORDER BY vocab_budget""".stripMargin,
-    "text_code_detect" ->
+        |FROM cov, tot ORDER BY vocab_budget""".stripMargin)),
+    Query("text_code_detect", textCodeDetect _, Some(
       """WITH m AS (
         |  SELECT doc_id, length(text) AS n,
         |    length(text) - length(regexp_replace(text,
@@ -928,8 +902,8 @@ object Text {
         |    AS mean_token_len,
         |  ROUND(CAST(symbols AS DOUBLE) / CAST(n AS DOUBLE), 6) > 0.02
         |    AS is_codeish
-        |FROM m ORDER BY doc_id""".stripMargin,
-    "text_vocab_jaccard" ->
+        |FROM m ORDER BY doc_id""".stripMargin)),
+    Query("text_vocab_jaccard", textVocabJaccard _, Some(
       """WITH v AS (
         |  SELECT DISTINCT lang, w FROM (
         |    SELECT lang, unnest(string_split(text, ' ')) AS w
@@ -947,8 +921,8 @@ object Text {
         |FROM i
         |JOIN sz sa ON sa.lang = i.lang_a
         |JOIN sz sb ON sb.lang = i.lang_b
-        |ORDER BY lang_a, lang_b""".stripMargin,
-    "text_hapax" ->
+        |ORDER BY lang_a, lang_b""".stripMargin)),
+    Query("text_hapax", textHapax _, Some(
       """WITH t AS (
         |  SELECT lang, unnest(string_split(text, ' ')) AS w
         |  FROM documents),
@@ -961,8 +935,8 @@ object Text {
         |    AS n_hapax,
         |  ROUND(CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE) /
         |    CAST(COUNT(*) AS DOUBLE), 6) AS hapax_ratio
-        |FROM f GROUP BY lang ORDER BY lang""".stripMargin,
-    "text_zipf" ->
+        |FROM f GROUP BY lang ORDER BY lang""".stripMargin)),
+    Query("text_zipf", textZipf _, Some(
       """WITH t AS (
         |  SELECT unnest(string_split(text, ' ')) AS tok FROM documents),
         |f AS (
@@ -980,8 +954,8 @@ object Text {
         |  ROUND((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS zipf_slope,
         |  ROUND((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n, 6)
         |    AS zipf_intercept
-        |FROM s""".stripMargin,
-    "text_vocab_growth" ->
+        |FROM s""".stripMargin)),
+    Query("text_vocab_growth", textVocabGrowth _, Some(
       """WITH toks AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS w
         |  FROM documents),
@@ -998,8 +972,8 @@ object Text {
         |  CAST(SUM(COALESCE(fd.new_types, 0)) OVER (ORDER BY s.doc_id
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS vocab_size
         |FROM spine s LEFT JOIN fd USING (doc_id)
-        |ORDER BY s.doc_id""".stripMargin,
-    "text_pmi" ->
+        |ORDER BY s.doc_id""".stripMargin)),
+    Query("text_pmi", textPmi _, Some(
       """WITH t AS (SELECT string_split(text, ' ') AS tk FROM documents),
         |bg AS (
         |  SELECT unnest([tk[i] || ' ' || tk[i+1]
@@ -1019,8 +993,8 @@ object Text {
         |  JOIN uc a ON pc.w1 = a.w
         |  JOIN uc b ON pc.w2 = b.w
         |  CROSS JOIN tot
-        |ORDER BY w1, w2""".stripMargin,
-    "text_keywords" ->
+        |ORDER BY w1, w2""".stripMargin)),
+    Query("text_keywords", textKeywords _, Some(
       """WITH ex AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
         |tf AS (
@@ -1040,8 +1014,8 @@ object Text {
         |      ORDER BY score DESC, token) AS rank
         |  FROM s)
         |SELECT doc_id, rank, token, score FROM r
-        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-    "text_chunk" ->
+        |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin)),
+    Query("text_chunk", textChunk _, Some(
       """WITH t AS (
         |  SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
         |c AS (SELECT doc_id, tk, len(tk) AS n FROM t WHERE len(tk) > 0),
@@ -1055,8 +1029,8 @@ object Text {
         |  CAST(len(tk[i*48+1 : least(i*48+64, n)]) AS BIGINT) AS chunk_tokens,
         |  md5(array_to_string(tk[i*48+1 : least(i*48+64, n)], ' ')) AS chunk_md5
         |FROM idx
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-    "text_bm25" -> {
+        |ORDER BY doc_id, chunk_idx""".stripMargin)),
+    Query("text_bm25", textBm25 _, Some({
       val terms = Seq("data", "merge", "vector")
       val tfCols = terms.zipWithIndex.map { case (t, i) =>
         s"CAST(len(list_filter(string_split(text, ' '), x -> x = '$t')) AS DOUBLE) AS tf$i"
@@ -1080,8 +1054,8 @@ object Text {
          |SELECT doc_id, ROUND($score, 6) AS bm25
          |FROM base CROSS JOIN st
          |ORDER BY doc_id""".stripMargin
-    },
-    "text_bigram_lm" ->
+    })),
+    Query("text_bigram_lm", textBigramLm _, Some(
       """WITH t AS (
         |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
         |ex AS (
@@ -1098,8 +1072,8 @@ object Text {
         |FROM ex
         |JOIN freq USING (bigram)
         |JOIN pref ON split_part(ex.bigram, ' ', 1) = pref.w1
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "text_redact" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    Query("text_redact", textRedact _, Some(
       """WITH red AS (
         |  SELECT event_type,
         |    regexp_replace(props, '[0-9]+', '<NUM>', 'g') AS redacted,
@@ -1112,8 +1086,8 @@ object Text {
         |SELECT event_type, CAST(SUM(c) AS BIGINT) AS n_events,
         |  CAST(SUM(d) AS BIGINT) AS n_digits, COUNT(*) AS n_shapes,
         |  MIN(redacted) AS shape_min, MAX(redacted) AS shape_max
-        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "text_decontaminate" ->
+        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin)),
+    Query("text_decontaminate", textDecontaminate _, Some(
       """WITH g AS (
         |  SELECT doc_id, lang,
         |    unnest([array_to_string(string_split(text, ' ')[i:i+4], ' ')
@@ -1128,8 +1102,8 @@ object Text {
         |FROM documents d LEFT JOIN cont c ON d.doc_id = c.doc_id
         |WHERE d.doc_id >= 10
         |GROUP BY d.lang
-        |ORDER BY d.lang""".stripMargin,
-    "text_logprob" ->
+        |ORDER BY d.lang""".stripMargin)),
+    Query("text_logprob", textLogprob _, Some(
       """WITH ex AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
         |freq AS (SELECT token, COUNT(*) AS tf FROM ex GROUP BY token)
@@ -1137,8 +1111,8 @@ object Text {
         |  ROUND(AVG(ln(CAST(tf AS DOUBLE) / (SELECT COUNT(*) FROM ex))), 6) AS avg_logprob
         |FROM ex JOIN freq USING (token)
         |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
-    "text_quality" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Query("text_quality", textQuality _, Some(
       """SELECT doc_id,
         |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
         |  CAST(len(list_filter(string_split(text, ' '),
@@ -1148,22 +1122,22 @@ object Text {
         |  len(list_filter(string_split(text, ' '),
         |    t -> t IN ('the', 'a', 'of', 'and', 'to'))) * 10 >= len(string_split(text, ' ')) AS stop_heavy
         |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-    "text_fingerprint" ->
+        |ORDER BY doc_id""".stripMargin)),
+    Query("text_fingerprint", textFingerprint _, Some(
       """SELECT lang, COUNT(*) AS n_docs,
         |  COUNT(DISTINCT md5(array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' '))) AS n_fingerprints
         |FROM documents
         |GROUP BY lang
-        |ORDER BY lang""".stripMargin,
-    "text_tokens_regex" ->
+        |ORDER BY lang""".stripMargin)),
+    Query("text_tokens_regex", textTokensRegex _, Some(
       """SELECT source, COUNT(*) AS n_tokens, COUNT(DISTINCT token) AS n_distinct
         |FROM (SELECT source,
         |        unnest(list_filter(regexp_split_to_array(text, '[^a-z0-9]+'),
         |          t -> t <> '')) AS token
         |      FROM documents)
         |GROUP BY source
-        |ORDER BY source""".stripMargin,
-    "text_langid" ->
+        |ORDER BY source""".stripMargin)),
+    Query("text_langid", textLangid _, Some(
       """SELECT lang,
         |  CASE WHEN len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a', 'of')))
         |          > len(list_filter(string_split(text, ' '), t -> t IN ('der', 'die', 'das'))) THEN 'en'
@@ -1173,8 +1147,8 @@ object Text {
         |  COUNT(*) AS n_docs
         |FROM documents
         |GROUP BY lang, guess
-        |ORDER BY lang, guess""".stripMargin,
-    "text_repetition" ->
+        |ORDER BY lang, guess""".stripMargin)),
+    Query("text_repetition", textRepetition _, Some(
       """WITH grams AS (
         |  SELECT doc_id,
         |    [array_to_string(string_split(text, ' ')[i:i+1], ' ')
@@ -1196,8 +1170,8 @@ object Text {
         |  ROUND(CAST(p.maxc AS DOUBLE) / p.tot, 6) AS top_bigram_frac,
         |  p.maxc * 5 >= p.tot AS repetitive
         |FROM grams g JOIN perdoc p ON g.doc_id = p.doc_id
-        |ORDER BY g.doc_id""".stripMargin,
-    "text_tfidf" ->
+        |ORDER BY g.doc_id""".stripMargin)),
+    Query("text_tfidf", textTfidf _, Some(
       """WITH ex AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
         |st AS (
@@ -1209,6 +1183,7 @@ object Text {
         |  ROUND(CAST(tf AS DOUBLE) * ln(CAST(n.n AS DOUBLE) / CAST(df AS DOUBLE)), 6) AS tfidf
         |FROM st, n
         |ORDER BY tfidf DESC, token
-        |LIMIT 20""".stripMargin
+        |LIMIT 20""".stripMargin)),
+    Query("text_winnow", textWinnow _)
   )
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Query
 import graft.api.Barrier._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -812,33 +813,8 @@ object Tpch {
       .orderBy(col("s_name"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "tpch_q1" -> tpchQ1 _,
-    "tpch_q2" -> tpchQ2 _,
-    "tpch_q3" -> tpchQ3 _,
-    "tpch_q4" -> tpchQ4 _,
-    "tpch_q5" -> tpchQ5 _,
-    "tpch_q6" -> tpchQ6 _,
-    "tpch_q7" -> tpchQ7 _,
-    "tpch_q8" -> tpchQ8 _,
-    "tpch_q10" -> tpchQ10 _,
-    "tpch_q12" -> tpchQ12 _,
-    "tpch_q13" -> tpchQ13 _,
-    "tpch_q14" -> tpchQ14 _,
-    "tpch_q15" -> tpchQ15 _,
-    "tpch_q17" -> tpchQ17 _,
-    "tpch_q18" -> tpchQ18 _,
-    "tpch_q19" -> tpchQ19 _,
-    "tpch_q21" -> tpchQ21 _,
-    "tpch_q22" -> tpchQ22 _,
-    "tpch_q9" -> tpchQ9 _,
-    "tpch_q11" -> tpchQ11 _,
-    "tpch_q16" -> tpchQ16 _,
-    "tpch_q20" -> tpchQ20 _
-  )
-
-  val oracle: Map[String, String] = Map(
-    "tpch_q4" ->
+  val registry: Seq[Query] = Seq(
+    Query("tpch_q4", tpchQ4 _, Some(
       """SELECT o_orderpriority, COUNT(*) AS order_count
         |FROM orders o
         |WHERE o_orderdate >= TIMESTAMP '1997-07-01'
@@ -847,8 +823,8 @@ object Tpch {
         |              WHERE l.l_orderkey = o.o_orderkey
         |                AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
         |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-    "tpch_q3" ->
+        |ORDER BY o_orderpriority""".stripMargin)),
+    Query("tpch_q3", tpchQ3 _, Some(
       """SELECT l_orderkey,
         |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DECIMAL(38,4)) AS DOUBLE) AS revenue,
         |  o_orderdate, o_orderpriority
@@ -860,8 +836,8 @@ object Tpch {
         |  AND l_shipdate > TIMESTAMP '1998-06-01'
         |GROUP BY l_orderkey, o_orderdate, o_orderpriority
         |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin,
-    "tpch_q5" ->
+        |LIMIT 10""".stripMargin)),
+    Query("tpch_q5", tpchQ5 _, Some(
       """SELECT n_name,
         |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DECIMAL(38,4)) AS DOUBLE) AS revenue
         |FROM lineitem
@@ -874,8 +850,8 @@ object Tpch {
         |  AND o_orderdate >= TIMESTAMP '1997-01-01'
         |  AND o_orderdate < TIMESTAMP '1998-01-01'
         |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-    "tpch_q10" ->
+        |ORDER BY revenue DESC, n_name""".stripMargin)),
+    Query("tpch_q10", tpchQ10 _, Some(
       """SELECT c_custkey, c_name,
         |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DECIMAL(38,4)) AS DOUBLE) AS revenue,
         |  n_name
@@ -888,8 +864,8 @@ object Tpch {
         |  AND o_orderdate < TIMESTAMP '1997-04-01'
         |GROUP BY c_custkey, c_name, n_name
         |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-    "tpch_q7" ->
+        |LIMIT 20""".stripMargin)),
+    Query("tpch_q7", tpchQ7 _, Some(
       """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |  year(l_shipdate) AS l_year,
         |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DECIMAL(38,4)) AS DOUBLE) AS revenue
@@ -904,8 +880,8 @@ object Tpch {
         |   OR (n1.n_name IN ('NATION_4','NATION_5','NATION_6')
         |       AND n2.n_name IN ('NATION_1','NATION_2','NATION_3'))
         |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-    "tpch_q14" ->
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin)),
+    Query("tpch_q14", tpchQ14 _, Some(
       """SELECT promo_revenue, total_revenue,
         |  promo_revenue / total_revenue * 100.0 AS promo_pct
         |FROM (
@@ -917,8 +893,8 @@ object Tpch {
         |  FROM lineitem
         |  JOIN part ON l_partkey = p_partkey
         |  WHERE l_shipdate >= TIMESTAMP '1997-03-01'
-        |    AND l_shipdate < TIMESTAMP '1997-04-01')""".stripMargin,
-    "tpch_q19" ->
+        |    AND l_shipdate < TIMESTAMP '1997-04-01')""".stripMargin)),
+    Query("tpch_q19", tpchQ19 _, Some(
       """SELECT p_brand,
         |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DECIMAL(38,4)) AS DOUBLE) AS revenue,
         |  COUNT(*) AS n_items
@@ -928,15 +904,15 @@ object Tpch {
         |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 30)
         |   OR (p_brand = 'Brand#25' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 40)
         |GROUP BY p_brand
-        |ORDER BY p_brand""".stripMargin,
-    "tpch_q6" ->
+        |ORDER BY p_brand""".stripMargin)),
+    Query("tpch_q6", tpchQ6 _, Some(
       """SELECT CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DECIMAL(38,4)) AS DOUBLE) AS revenue
         |FROM lineitem
         |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
         |  AND l_shipdate < TIMESTAMP '1998-01-01'
         |  AND l_discount BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-    "tpch_q8" ->
+        |  AND l_quantity < 24""".stripMargin)),
+    Query("tpch_q8", tpchQ8 _, Some(
       """SELECT o_year, nation_revenue, total_revenue,
         |  nation_revenue / total_revenue AS mkt_share
         |FROM (
@@ -957,8 +933,8 @@ object Tpch {
         |    AND o_orderdate >= TIMESTAMP '1996-01-01'
         |    AND o_orderdate < TIMESTAMP '1998-01-01'
         |  GROUP BY o_year)
-        |ORDER BY o_year""".stripMargin,
-    "tpch_q12" ->
+        |ORDER BY o_year""".stripMargin)),
+    Query("tpch_q12", tpchQ12 _, Some(
       """SELECT l_returnflag,
         |  COUNT(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 END) AS high_line_count,
         |  COUNT(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH') THEN 1 END) AS low_line_count
@@ -968,8 +944,8 @@ object Tpch {
         |  AND l_shipdate < TIMESTAMP '1998-01-01'
         |  AND l_returnflag IN ('A','R')
         |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-    "tpch_q13" ->
+        |ORDER BY l_returnflag""".stripMargin)),
+    Query("tpch_q13", tpchQ13 _, Some(
       """SELECT c_count, COUNT(*) AS custdist
         |FROM (
         |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
@@ -978,8 +954,8 @@ object Tpch {
         |    AND o_orderpriority <> '1-URGENT'
         |  GROUP BY c_custkey)
         |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "tpch_q15" ->
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin)),
+    Query("tpch_q15", tpchQ15 _, Some(
       """WITH revenue AS (
         |  SELECT l_suppkey,
         |    CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DECIMAL(38,4)) AS DOUBLE) AS total_revenue
@@ -991,8 +967,8 @@ object Tpch {
         |FROM supplier
         |JOIN revenue ON s_suppkey = l_suppkey
         |WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
-        |ORDER BY s_suppkey""".stripMargin,
-    "tpch_q17" ->
+        |ORDER BY s_suppkey""".stripMargin)),
+    Query("tpch_q17", tpchQ17 _, Some(
       """WITH t AS (
         |  SELECT l_quantity, l_extendedprice,
         |    AVG(l_quantity) OVER (PARTITION BY l_partkey) AS avg_qty
@@ -1001,8 +977,8 @@ object Tpch {
         |  WHERE p_type = 'SMALL')
         |SELECT CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(38,4)) AS DOUBLE) / 7.0 AS avg_yearly
         |FROM t
-        |WHERE l_quantity < 0.5 * avg_qty""".stripMargin,
-    "tpch_q21" ->
+        |WHERE l_quantity < 0.5 * avg_qty""".stripMargin)),
+    Query("tpch_q21", tpchQ21 _, Some(
       """SELECT s_name, COUNT(*) AS numwait
         |FROM lineitem l1
         |JOIN orders ON o_orderkey = l1.l_orderkey
@@ -1020,8 +996,8 @@ object Tpch {
         |      AND l3.l_returnflag = 'R')
         |GROUP BY s_name
         |ORDER BY numwait DESC, s_name
-        |LIMIT 100""".stripMargin,
-    "tpch_q22" ->
+        |LIMIT 100""".stripMargin)),
+    Query("tpch_q22", tpchQ22 _, Some(
       """SELECT c_nationkey AS cntrycode, COUNT(*) AS numcust,
         |  CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DECIMAL(38,4)) AS DOUBLE) AS totacctbal
         |FROM customer
@@ -1037,8 +1013,8 @@ object Tpch {
         |    WHERE o_custkey = c_custkey
         |      AND o_orderdate >= TIMESTAMP '2001-01-01')
         |GROUP BY cntrycode
-        |ORDER BY cntrycode""".stripMargin,
-    "tpch_q18" ->
+        |ORDER BY cntrycode""".stripMargin)),
+    Query("tpch_q18", tpchQ18 _, Some(
       """SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice,
         |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_qty
         |FROM lineitem
@@ -1050,8 +1026,8 @@ object Tpch {
         |  HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 250)
         |GROUP BY c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice
         |ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
-        |LIMIT 100""".stripMargin,
-    "tpch_q1" ->
+        |LIMIT 100""".stripMargin)),
+    Query("tpch_q1", tpchQ1 _, Some(
       """SELECT l_returnflag, l_linestatus,
         |  CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_qty,
         |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS sum_base_price,
@@ -1064,8 +1040,8 @@ object Tpch {
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '2001-09-02'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "tpch_q2" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    Query("tpch_q2", tpchQ2 _, Some(
       """WITH euro AS (
         |  SELECT s_suppkey, s_name, s_acctbal, n_name
         |  FROM supplier JOIN nation ON s_nationkey = n_nationkey
@@ -1087,8 +1063,8 @@ object Tpch {
         |WHERE unit_cost = (SELECT MIN(unit_cost) FROM eo e2
         |                   WHERE e2.p_partkey = eo.p_partkey)
         |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin,
-    "tpch_q9" ->
+        |LIMIT 100""".stripMargin)),
+    Query("tpch_q9", tpchQ9 _, Some(
       """SELECT n_name, year(o_orderdate) AS o_year,
         |  CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) - SUM(CAST(p_retailprice * l_quantity * 0.1 AS DECIMAL(18,2))) AS DECIMAL(38,4)) AS DOUBLE) AS profit
         |FROM lineitem
@@ -1098,8 +1074,8 @@ object Tpch {
         |JOIN nation ON s_nationkey = n_nationkey
         |WHERE p_name LIKE 'red%'
         |GROUP BY n_name, o_year
-        |ORDER BY n_name, o_year DESC""".stripMargin,
-    "tpch_q11" ->
+        |ORDER BY n_name, o_year DESC""".stripMargin)),
+    Query("tpch_q11", tpchQ11 _, Some(
       """WITH pv AS (
         |  SELECT l_partkey,
         |    CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DECIMAL(18,4)) AS value_dec
@@ -1117,8 +1093,8 @@ object Tpch {
         |  CAST(CAST(value_dec AS DECIMAL(38,4)) AS DOUBLE) AS part_value
         |FROM pv, tot
         |WHERE value_dec * n_parts > 2 * total_dec
-        |ORDER BY part_value DESC, p_partkey""".stripMargin,
-    "tpch_q16" ->
+        |ORDER BY part_value DESC, p_partkey""".stripMargin)),
+    Query("tpch_q16", tpchQ16 _, Some(
       """SELECT p_brand, p_type, p_size,
         |  COUNT(DISTINCT l_suppkey) AS supplier_cnt
         |FROM lineitem
@@ -1127,8 +1103,8 @@ object Tpch {
         |  AND p_size IN (1,4,9,16,25,36,49)
         |  AND l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0.0)
         |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-    "tpch_q20" ->
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)),
+    Query("tpch_q20", tpchQ20 _, Some(
       """WITH shipped AS (
         |  SELECT l_partkey, l_suppkey,
         |    CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS pair_qty
@@ -1148,6 +1124,6 @@ object Tpch {
         |  AND s_suppkey IN (
         |    SELECT l_suppkey FROM shipped JOIN tot USING (l_partkey)
         |    WHERE pair_qty * 10 > 3 * part_qty)
-        |ORDER BY s_name""".stripMargin
+        |ORDER BY s_name""".stripMargin))
   )
 }

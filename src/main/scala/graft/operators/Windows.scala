@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Query
 import graft.api.Barrier._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -320,22 +321,8 @@ object Windows {
       .orderBy(col("day_ts"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "win_drawdown" -> winDrawdown _,
-    "win_debounce" -> winDebounce _,
-    "win_running_distinct" -> winRunningDistinct _,
-    "win_ignore_nulls" -> winIgnoreNulls _,
-    "win_pattern" -> winPattern _,
-    "win_rank" -> winRank _,
-    "win_lag" -> winLag _,
-    "win_frame" -> winFrame _,
-    "win_range_frame" -> winRangeFrame _,
-    "win_topk_group" -> winTopkGroup _,
-    "win_dist" -> winDist _
-  )
-
-  val oracle: Map[String, String] = Map(
-    "win_drawdown" ->
+  val registry: Seq[Query] = Seq(
+    Query("win_drawdown", winDrawdown _, Some(
       """WITH d AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day,
         |    SUM(CASE WHEN event_type = 'purchase'
@@ -362,8 +349,8 @@ object Windows {
         |  CASE WHEN peak > 0 THEN
         |    ROUND(CAST(peak - cum AS DOUBLE) / CAST(peak AS DOUBLE), 6)
         |  END AS drawdown_pct
-        |FROM p ORDER BY day_ts""".stripMargin,
-    "win_debounce" ->
+        |FROM p ORDER BY day_ts""".stripMargin)),
+    Query("win_debounce", winDebounce _, Some(
       """WITH e AS (
         |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS tsu
         |  FROM events WHERE event_type = 'error'),
@@ -386,8 +373,8 @@ object Windows {
         |SELECT user_id, event_id AS first_event_id, tsu AS burst_start,
         |  CAST(n_burst - 1 AS BIGINT) AS n_suppressed
         |FROM r WHERE rn = 1
-        |ORDER BY user_id, burst_start""".stripMargin,
-    "win_running_distinct" ->
+        |ORDER BY user_id, burst_start""".stripMargin)),
+    Query("win_running_distinct", winRunningDistinct _, Some(
       """WITH ev AS (
         |  SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day, user_id
         |  FROM events),
@@ -402,8 +389,8 @@ object Windows {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
         |    AS cum_users
         |FROM days LEFT JOIN fs ON days.day = fs.first_day
-        |ORDER BY day_ts""".stripMargin,
-    "win_ignore_nulls" ->
+        |ORDER BY day_ts""".stripMargin)),
+    Query("win_ignore_nulls", winIgnoreNulls _, Some(
       """WITH e AS (
         |  SELECT user_id, event_id, ts,
         |    CASE WHEN event_type = 'purchase' THEN value END AS purchase_value
@@ -417,8 +404,8 @@ object Windows {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS first_seen,
         |  lead(purchase_value, 1 IGNORE NULLS) OVER (
         |    PARTITION BY user_id ORDER BY ts, event_id) AS next_seen
-        |FROM e ORDER BY user_id, event_id""".stripMargin,
-    "win_pattern" ->
+        |FROM e ORDER BY user_id, event_id""".stripMargin)),
+    Query("win_pattern", winPattern _, Some(
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, CAST(ts AS TIMESTAMP) AS tsu
         |  FROM events),
@@ -433,8 +420,8 @@ object Windows {
         |FROM l
         |WHERE event_type = 'error' AND t1 = 'error' AND t2 = 'error'
         |  AND epoch_us(tsu) - epoch_us(start_ts) <= 86400000000
-        |ORDER BY user_id, end_event_id""".stripMargin,
-    "win_dist" ->
+        |ORDER BY user_id, end_event_id""".stripMargin)),
+    Query("win_dist", winDist _, Some(
       """SELECT o_orderkey, o_orderpriority,
         |  percent_rank() OVER w AS pr,
         |  cume_dist() OVER w AS cd,
@@ -443,8 +430,8 @@ object Windows {
         |        CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price
         |      FROM orders)
         |WINDOW w AS (PARTITION BY o_orderpriority ORDER BY price DESC, o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
-    "win_rank" ->
+        |ORDER BY o_orderkey""".stripMargin)),
+    Query("win_rank", winRank _, Some(
       """SELECT * FROM (
         |  SELECT o_orderpriority, o_orderkey,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price,
@@ -456,16 +443,16 @@ object Windows {
         |  WINDOW w AS (PARTITION BY o_orderpriority
         |               ORDER BY CAST(o_totalprice AS DECIMAL(18,2)) DESC, o_orderkey))
         |WHERE rn <= 5
-        |ORDER BY o_orderpriority, rn""".stripMargin,
-    "win_lag" ->
+        |ORDER BY o_orderpriority, rn""".stripMargin)),
+    Query("win_lag", winLag _, Some(
       """SELECT o_custkey, o_orderkey, o_orderdate,
         |  LAG(o_orderdate, 1) OVER w AS prev_date,
         |  CAST((epoch(o_orderdate) - epoch(LAG(o_orderdate, 1) OVER w)) / 86400 AS BIGINT) AS gap_days,
         |  LEAD(o_orderkey, 1) OVER w AS next_orderkey
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_custkey, o_orderdate, o_orderkey""".stripMargin,
-    "win_frame" ->
+        |ORDER BY o_custkey, o_orderdate, o_orderkey""".stripMargin)),
+    Query("win_frame", winFrame _, Some(
       """SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts_utc,
         |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DECIMAL(38,2)) AS DOUBLE) AS running_total,
         |  COUNT(*) OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
@@ -473,15 +460,15 @@ object Windows {
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id
         |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |ORDER BY user_id, CAST(ts AS TIMESTAMP), event_id""".stripMargin,
-    "win_range_frame" ->
+        |ORDER BY user_id, CAST(ts AS TIMESTAMP), event_id""".stripMargin)),
+    Query("win_range_frame", winRangeFrame _, Some(
       """SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts_utc,
         |  CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER
         |    (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP)
         |     RANGE BETWEEN INTERVAL '1 hour' PRECEDING AND CURRENT ROW) AS DECIMAL(38,2)) AS DOUBLE) AS hour_total
         |FROM events
-        |ORDER BY user_id, CAST(ts AS TIMESTAMP), event_id""".stripMargin,
-    "win_topk_group" ->
+        |ORDER BY user_id, CAST(ts AS TIMESTAMP), event_id""".stripMargin)),
+    Query("win_topk_group", winTopkGroup _, Some(
       """SELECT * FROM (
         |  SELECT o_custkey, o_orderkey,
         |    CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price,
@@ -489,6 +476,6 @@ object Windows {
         |      ORDER BY CAST(o_totalprice AS DECIMAL(18,2)) DESC, o_orderkey) AS rn
         |  FROM orders)
         |WHERE rn <= 3
-        |ORDER BY o_custkey, rn""".stripMargin
+        |ORDER BY o_custkey, rn""".stripMargin))
   )
 }

@@ -78,7 +78,7 @@ object Materialize {
     */
   private val TestKindPrefix = "spec_"
 
-  private lazy val root: java.nio.file.Path = {
+  private[graft] lazy val root: java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory("graft_artifacts_")
     // deleteOnExit silently skips non-empty directories — a recursive
     // shutdown hook actually bounds /tmp growth across sessions
@@ -91,6 +91,13 @@ object Materialize {
     }))
     p
   }
+
+  /** A fresh directory path under this process's artifact root, named
+    * after `prefix`: a rebuild never overwrites files an earlier plan
+    * still reads, and the files go when the JVM exits.
+    */
+  def freshDir(prefix: String): String =
+    root.resolve(s"${prefix}_${java.util.UUID.randomUUID()}").toString
 
   /** Per-key build monitors (ADVICE r12: a single global lock
     * serialized DISTINCT builds — the whole ladder routes through
@@ -162,9 +169,7 @@ object Materialize {
   def once(spark: SparkSession, sfDir: String, tables: Seq[String],
       kind: String, partitionBy: Seq[String] = Nil)(build: => DataFrame): DataFrame = {
     val path = model(sfDir, tables, kind) {
-      // a fresh directory per build: a rebuild never overwrites files
-      // an earlier plan still reads
-      val p = root.resolve(s"${kind}_${java.util.UUID.randomUUID()}").toString
+      val p = freshDir(kind)
       // repartition(4), not coalesce(4) (ADVICE r12): coalesce merges
       // the build's FINAL stage into 4 tasks, computing the heavy
       // projections at 4-way parallelism on a 32-core box; the

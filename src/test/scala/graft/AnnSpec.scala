@@ -147,7 +147,7 @@ class AnnSpec extends SparkTestBase {
   }
 
   test("bucket-partitioned layout prunes the ANN scan to the probe's partition") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_bkt").toString
+    val dir = tempDir("graft_ann_bkt").toString
     Ann.writeBucketed(spark, sf, dir)
     val df = Ann.knnAnnPruned(spark, dir, Ann.selectedBuckets(spark, sf))
     val rows = df.collect()

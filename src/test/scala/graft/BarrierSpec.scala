@@ -34,7 +34,7 @@ class BarrierSpec extends SparkTestBase {
   }
 
   test("reliable mode checkpoints to stable storage and preserves values") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_")
+    val dir = tempDir("graft_ckpt_")
     spark.sparkContext.setCheckpointDir(dir.toString)
     spark.conf.set(Barrier.ReliableConf, "true")
     try {
@@ -49,14 +49,7 @@ class BarrierSpec extends SparkTestBase {
         else Seq(f)
       assert(files(dir.toFile).nonEmpty,
         "reliable barrier must write checkpoint files under the dir")
-    } finally {
-      spark.conf.set(Barrier.ReliableConf, "false")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(dir.toFile)
-    }
+    } finally spark.conf.set(Barrier.ReliableConf, "false")
   }
 
   test("reliable mode off by default — conf absent means localCheckpoint") {

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{Materialize, Tables}
 
 /** Bucketing for co-located joins: pre-bucketing both sides on the join
   * key removes the per-query shuffle entirely — THE lever for repeated
@@ -92,32 +92,51 @@ class BucketingSpec extends SparkTestBase {
       s"bucketed gated join must not shuffle either input:\n$plan")
   }
 
+  test("join_bucketed keeps its bucketed tables under the artifact root, out of spark-warehouse") {
+    val dir = tempDir("graft_bkt_loc")
+    Seq("orders", "customer").foreach(t => Files.copy(
+      java.nio.file.Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet")))
+    val warehouse = new java.io.File(new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    def warehouseDirs = Option(warehouse.list()).map(_.toSet).getOrElse(Set.empty)
+    def tables = spark.catalog.listTables().collect().map(_.name).toSet
+    val (dirsBefore, tablesBefore) = (warehouseDirs, tables)
+    graft.operators.Joins.joinBucketed(spark, dir.toString).collect()
+    val built = tables -- tablesBefore
+    assert(built.size === 2, s"expected one fresh orders and one customer table: $built")
+    for (t <- built) {
+      val loc = spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t)).location
+      assert(loc.getPath.startsWith(Materialize.root.toString),
+        s"$t lives at $loc, not under ${Materialize.root}")
+    }
+    assert(warehouseDirs -- dirsBefore === Set.empty[String],
+      "join_bucketed must not leave table directories in the managed warehouse")
+  }
+
   test("join_bucketed rebuilds its bucketed tables when orders is rewritten") {
-    val dir = Files.createTempDirectory("graft_bkt_sf")
-    val tmp = Files.createTempDirectory("graft_bkt_orders")
-    try {
-      Seq("orders", "customer").foreach(t => Files.copy(
-        java.nio.file.Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet")))
-      def plainCount() = Tables.customer(spark, dir.toString)
-        .join(Tables.orders(spark, dir.toString), col("c_custkey") === col("o_custkey"))
-        .count()
-      def bucketedCount() = graft.operators.Joins.joinBucketed(spark, dir.toString)
-        .agg(sum(col("n_orders"))).collect()(0).getLong(0)
-      assert(bucketedCount() === plainCount())
-      // rewrite orders with a subset of its rows and a new mtime
-      Tables.orders(spark, dir.toString).filter(col("o_orderkey") % 3 === 0)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = Files.list(tmp).filter(_.toString.endsWith(".parquet")).findFirst().get()
-      val orders = dir.resolve("orders.parquet")
-      Files.move(part, orders, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(orders, java.nio.file.attribute.FileTime
-        .fromMillis(System.currentTimeMillis() + 60000))
-      val plain = plainCount()
-      assert(bucketedCount() === plain,
-        "join_bucketed must join the rewritten orders, not the tables built before")
-      assert(plain < Tables.orders(spark, sf).count(), "the rewrite dropped rows")
-    } finally Seq(dir, tmp).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    val dir = tempDir("graft_bkt_sf")
+    val tmp = tempDir("graft_bkt_orders")
+    Seq("orders", "customer").foreach(t => Files.copy(
+      java.nio.file.Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet")))
+    def plainCount() = Tables.customer(spark, dir.toString)
+      .join(Tables.orders(spark, dir.toString), col("c_custkey") === col("o_custkey"))
+      .count()
+    def bucketedCount() = graft.operators.Joins.joinBucketed(spark, dir.toString)
+      .agg(sum(col("n_orders"))).collect()(0).getLong(0)
+    assert(bucketedCount() === plainCount())
+    // rewrite orders with a subset of its rows and a new mtime
+    Tables.orders(spark, dir.toString).filter(col("o_orderkey") % 3 === 0)
+      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val part = Files.list(tmp).filter(_.toString.endsWith(".parquet")).findFirst().get()
+    val orders = dir.resolve("orders.parquet")
+    Files.move(part, orders, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.setLastModifiedTime(orders, java.nio.file.attribute.FileTime
+      .fromMillis(System.currentTimeMillis() + 60000))
+    val plain = plainCount()
+    assert(bucketedCount() === plain,
+      "join_bucketed must join the rewritten orders, not the tables built before")
+    assert(plain < Tables.orders(spark, sf).count(), "the rewrite dropped rows")
   }
 
   test("dynamic partition pruning: a dim filter prunes the fact's partition scan at runtime") {
@@ -128,7 +147,7 @@ class BucketingSpec extends SparkTestBase {
     // dim filter isn't a literal on the fact side, so static pushdown
     // can't see it; DPP turns the dim's build side into a runtime
     // partition filter.
-    val dir = Files.createTempDirectory("graft_dpp").toString
+    val dir = tempDir("graft_dpp").toString
     spark.sql("DROP TABLE IF EXISTS orders_part")
     try {
       Tables.orders(spark, sf)
@@ -150,9 +169,6 @@ class BucketingSpec extends SparkTestBase {
         .groupBy(col("o_year")).agg(count(lit(1)).as("n"))
       assert(q.orderBy("o_year").collect().toSeq ===
         expected.orderBy("o_year").collect().toSeq)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS orders_part")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
+    } finally spark.sql("DROP TABLE IF EXISTS orders_part")
   }
 }

@@ -18,7 +18,8 @@ import scala.util.Random
   * same as SURVEY §2.0: decimal-in/double-out aggregates, every output
   * column ordered, BIGINT casts on counts.
   *
-  * Usage: runMain graft.Fuzz <sfDir> <outDir> [n] [seed]
+  * Usage: sbt "Test/runMain graft.Fuzz <sfDir> <outDir> [n] [seed]"
+  * (a test-side main; `tools/run_main.sh` runs it after `sbt Test/compile`).
   */
 object Fuzz {
 

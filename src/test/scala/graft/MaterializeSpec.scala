@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.FileTime
 import scala.jdk.CollectionConverters._
-import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 import graft.sources.{DataFingerprint, Materialize}
 
@@ -24,14 +23,13 @@ class MaterializeSpec extends SparkTestBase {
   /** A throwaway "sfDir" holding one synthetic table file. */
   private def writeTable(dir: java.nio.file.Path, rows: Seq[Long],
       mtimeMs: Long): Unit = {
-    val tmp = Files.createTempDirectory("graft_mat_tbl")
+    val tmp = tempDir("graft_mat_tbl")
     rows.toDF("v").coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = Files.list(tmp).filter(_.toString.endsWith(".parquet"))
       .findFirst().get()
     val dst = dir.resolve("documents.parquet")
     Files.move(part, dst, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     Files.setLastModifiedTime(dst, FileTime.fromMillis(mtimeMs))
-    FileUtils.deleteQuietly(tmp.toFile)
   }
 
   /** The cache contract, against either entry point: `cached(kind)`
@@ -39,39 +37,37 @@ class MaterializeSpec extends SparkTestBase {
     * source's `v` column, running `onBuild` only when it builds.
     */
   private def cacheSteps(cached: (String, String, () => Unit) => Long): Unit = {
-    val dir = Files.createTempDirectory("graft_mat_sf")
-    try {
-      val now = System.currentTimeMillis()
-      writeTable(dir, Seq(1L, 2L, 3L), now - 60000)
+    val dir = tempDir("graft_mat_sf")
+    val now = System.currentTimeMillis()
+    writeTable(dir, Seq(1L, 2L, 3L), now - 60000)
 
-      var builds = 0
-      def artifact(kind: String) = cached(dir.toString, kind, () => builds += 1)
+    var builds = 0
+    def artifact(kind: String) = cached(dir.toString, kind, () => builds += 1)
 
-      // 1. first use builds; repeated use serves the cached value
-      assert(artifact("spec_mat_sum") === 6L)
-      assert(builds === 1)
-      (1 to 3).foreach(_ => assert(artifact("spec_mat_sum") === 6L))
-      assert(builds === 1, "by-name build must not re-evaluate on hits")
+    // 1. first use builds; repeated use serves the cached value
+    assert(artifact("spec_mat_sum") === 6L)
+    assert(builds === 1)
+    (1 to 3).foreach(_ => assert(artifact("spec_mat_sum") === 6L))
+    assert(builds === 1, "by-name build must not re-evaluate on hits")
 
-      // 2. a DIFFERENT kind over the same sources is its own artifact
-      assert(artifact("spec_mat_cnt") === 3L)
-      assert(builds === 2)
+    // 2. a DIFFERENT kind over the same sources is its own artifact
+    assert(artifact("spec_mat_cnt") === 3L)
+    assert(builds === 2)
 
-      // 3. REWRITING the source (new content + mtime) must invalidate:
-      //    the fingerprint changes, so the artifact rebuilds from the
-      //    new data — a stale serve here would poison every consumer
-      val fpBefore = DataFingerprint.ofTable(dir.toString, "documents")
-      writeTable(dir, Seq(10L, 20L, 30L, 40L), now - 30000)
-      val fpAfter = DataFingerprint.ofTable(dir.toString, "documents")
-      assert(fpBefore !== fpAfter, "fingerprint must see the rewrite")
-      assert(artifact("spec_mat_sum") === 100L,
-        "rewritten source must serve the NEW artifact content")
-      assert(builds === 3)
+    // 3. REWRITING the source (new content + mtime) must invalidate:
+    //    the fingerprint changes, so the artifact rebuilds from the
+    //    new data — a stale serve here would poison every consumer
+    val fpBefore = DataFingerprint.ofTable(dir.toString, "documents")
+    writeTable(dir, Seq(10L, 20L, 30L, 40L), now - 30000)
+    val fpAfter = DataFingerprint.ofTable(dir.toString, "documents")
+    assert(fpBefore !== fpAfter, "fingerprint must see the rewrite")
+    assert(artifact("spec_mat_sum") === 100L,
+      "rewritten source must serve the NEW artifact content")
+    assert(builds === 3)
 
-      // 4. and the new artifact is itself cached
-      assert(artifact("spec_mat_sum") === 100L)
-      assert(builds === 3)
-    } finally FileUtils.deleteQuietly(dir.toFile)
+    // 4. and the new artifact is itself cached
+    assert(artifact("spec_mat_sum") === 100L)
+    assert(builds === 3)
   }
 
   private def aggregate(dir: String, kind: String) = {
@@ -106,14 +102,12 @@ class MaterializeSpec extends SparkTestBase {
   }
 
   test("the similarity family's models, PQ codes and bucketed join tables reach the build ledger") {
-    val dir = Files.createTempDirectory("graft_mat_ledger")
+    val dir = tempDir("graft_mat_ledger")
     val before = Materialize.buildTimes
-    try {
-      Seq("embeddings", "orders", "customer").foreach(t =>
-        Files.copy(Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet")))
-      Seq("knn_pq", "knn_ivfpq", "embed_pca", "join_bucketed")
-        .foreach(q => SparkEntry.queries(q)(spark, dir.toString).collect())
-    } finally FileUtils.deleteQuietly(dir.toFile)
+    Seq("embeddings", "orders", "customer").foreach(t =>
+      Files.copy(Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet")))
+    Seq("knn_pq", "knn_ivfpq", "embed_pca", "join_bucketed")
+      .foreach(q => SparkEntry.queries(q)(spark, dir.toString).collect())
     val after = Materialize.buildTimes
     val kinds = Seq("embeddings_count", "probe_vec0", "ivf_centers",
       "ivf_cell_counts", "pca_full_rank", "pq_codebook_k32",
@@ -150,7 +144,7 @@ class MaterializeSpec extends SparkTestBase {
     // Tables.dataFingerprint's documented hazard: a directory's own
     // mtime may not change when a part inside is rewritten. The
     // artifact fingerprint lists the FILES, so it must move.
-    val dir = Files.createTempDirectory("graft_mat_sf2")
+    val dir = tempDir("graft_mat_sf2")
     val now = System.currentTimeMillis()
     writeTable(dir, Seq(5L), now - 90000)
     val before = DataFingerprint.ofTable(dir.toString, "documents")

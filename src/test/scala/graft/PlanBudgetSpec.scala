@@ -28,19 +28,19 @@ class PlanBudgetSpec extends SparkTestBase {
     // the running-max window formulation shuffles events once on the
     // partition key; an inequality self-join formulation would add a
     // second data shuffle (or worse, a nested loop)
-    val (hash, range) = shuffles(Temporal.queries("join_asof")(spark, sf))
+    val (hash, range) = shuffles(SparkEntry.queries("join_asof")(spark, sf))
     assert(hash === 1, s"join_asof must shuffle data exactly once, got $hash")
     assert(range <= 1, "only the presentation sort may range-shuffle")
   }
 
   test("agg_pricing is ONE data shuffle (partial -> final aggregate)") {
-    val (hash, range) = shuffles(Aggregates.queries("agg_pricing")(spark, sf))
+    val (hash, range) = shuffles(SparkEntry.queries("agg_pricing")(spark, sf))
     assert(hash === 1, s"map-side partial agg must leave one shuffle, got $hash")
     assert(range <= 1)
   }
 
   test("win_topk_group is ONE data shuffle (the window partition)") {
-    val (hash, range) = shuffles(Windows.queries("win_topk_group")(spark, sf))
+    val (hash, range) = shuffles(SparkEntry.queries("win_topk_group")(spark, sf))
     assert(hash === 1, s"got $hash")
     assert(range <= 1)
   }
@@ -50,19 +50,19 @@ class PlanBudgetSpec extends SparkTestBase {
     // shuffle is the group-by. At 100 TB AQE may keep SMJ shuffles for
     // genuinely large sides — this pins the TEST-scale plan where every
     // broadcastable side must actually broadcast.
-    val (hash, _) = shuffles(Tpch.queries("tpch_q3")(spark, sf))
+    val (hash, _) = shuffles(SparkEntry.queries("tpch_q3")(spark, sf))
     assert(hash <= 1, s"got $hash")
   }
 
   test("tpch_q18 reuses the l_orderkey partitioning: at most TWO data shuffles") {
     // one shuffle builds the big-orders aggregate, one feeds the final
     // group-by; the semi join and customer join broadcast at this scale
-    val (hash, _) = shuffles(Tpch.queries("tpch_q18")(spark, sf))
+    val (hash, _) = shuffles(SparkEntry.queries("tpch_q18")(spark, sf))
     assert(hash <= 2, s"got $hash")
   }
 
   test("pipeline_curate: at most TWO data shuffles (dedup agg + final count)") {
-    val (hash, range) = shuffles(Pipeline.queries("pipeline_curate")(spark, sf))
+    val (hash, range) = shuffles(SparkEntry.queries("pipeline_curate")(spark, sf))
     assert(hash <= 2, s"got $hash")
     assert(range <= 1)
   }
@@ -71,7 +71,7 @@ class PlanBudgetSpec extends SparkTestBase {
     // the month-filtered fact scan joins a broadcast part and feeds ONE
     // global aggregate — partial rows converge on a single-partition
     // exchange, which Spark plans as neither hash nor range partitioning
-    val (hash, range) = shuffles(Tpch.queries("tpch_q14")(spark, sf))
+    val (hash, range) = shuffles(SparkEntry.queries("tpch_q14")(spark, sf))
     assert(hash === 0, s"got $hash — a hash shuffle means the part join un-broadcast")
     assert(range === 0, s"got $range")
   }
@@ -80,7 +80,7 @@ class PlanBudgetSpec extends SparkTestBase {
     // the filtered scan feeds ONE global agg through a single-partition
     // exchange; any hash/range shuffle means a join or repartition crept
     // into what must stay a pure scan query
-    val (hash, range) = shuffles(Tpch.queries("tpch_q6")(spark, sf))
+    val (hash, range) = shuffles(SparkEntry.queries("tpch_q6")(spark, sf))
     assert(hash === 0, s"got $hash")
     assert(range === 0, s"got $range")
   }
@@ -93,7 +93,7 @@ class PlanBudgetSpec extends SparkTestBase {
     // ExistingRDD). A hash shuffle IN the consumer plan means the
     // barrier was lost and the fact aggregate computes per consumer
     // (observed pre-fix: AQE planned the fact scan + agg TWICE).
-    val df = Tpch.queries("tpch_q15")(spark, sf)
+    val df = SparkEntry.queries("tpch_q15")(spark, sf)
     val (hash, _) = shuffles(df)
     assert(hash === 0, s"got $hash")
     val plan = planOf(df).split("== Initial Plan ==").head
@@ -113,7 +113,7 @@ class PlanBudgetSpec extends SparkTestBase {
     // class), zero barriers
     // r12: the declared query reads the weighted_median_stats artifact;
     // the two-phase plan discipline applies to the artifact BUILD
-    val dq = Aggregates.queries("agg_weighted_median")(spark, sf)
+    val dq = SparkEntry.queries("agg_weighted_median")(spark, sf)
     assert(dq.queryExecution.sparkPlan.toString.contains("weighted_median_stats"),
       "declared query must read the statistic artifact")
     val df = Aggregates.aggWeightedMedianBuild(spark, sf)
@@ -130,7 +130,7 @@ class PlanBudgetSpec extends SparkTestBase {
     // the correlated-avg rewrite costs exactly the l_partkey window
     // shuffle; the classic two-scan formulation would add a second
     // fact aggregation + rejoin
-    val (hash, _) = shuffles(Tpch.queries("tpch_q17")(spark, sf))
+    val (hash, _) = shuffles(SparkEntry.queries("tpch_q17")(spark, sf))
     assert(hash === 1, s"got $hash")
   }
 
@@ -140,7 +140,7 @@ class PlanBudgetSpec extends SparkTestBase {
     // plan as Expand — every fact row duplicated per distinct aggregate
     // through the shuffle (3× lineitem at 100 TB) — so its absence is
     // the pin that matters.
-    val df = Tpch.queries("tpch_q21")(spark, sf)
+    val df = SparkEntry.queries("tpch_q21")(spark, sf)
     val (hash, _) = shuffles(df)
     assert(hash <= 3, s"got $hash")
     assert(!planOf(df).contains("Expand"),
@@ -151,7 +151,7 @@ class PlanBudgetSpec extends SparkTestBase {
     // the scalar threshold rides a broadcast cross join and the
     // recent-orders anti join broadcasts at this scale; only the final
     // group-by moves data
-    val (hash, _) = shuffles(Tpch.queries("tpch_q22")(spark, sf))
+    val (hash, _) = shuffles(SparkEntry.queries("tpch_q22")(spark, sf))
     assert(hash <= 1, s"got $hash")
   }
 
@@ -162,7 +162,7 @@ class PlanBudgetSpec extends SparkTestBase {
     // copies non-identical, so exchange reuse cannot dedupe them) and
     // scans the 100 TB fact table twice
     for (name <- Seq("ts_gapfill", "ts_locf")) {
-      val df = Temporal.queries(name)(spark, sf)
+      val df = SparkEntry.queries(name)(spark, sf)
       val (hash, range) = shuffles(df)
       assert(hash === 2, s"$name: got $hash (daily agg + lag window)")
       assert(range <= 1, s"$name: got $range")
@@ -174,7 +174,7 @@ class PlanBudgetSpec extends SparkTestBase {
   }
 
   test("tpch_q1: ONE data shuffle (partial -> final aggregate)") {
-    val (hash, range) = shuffles(Tpch.queries("tpch_q1")(spark, sf))
+    val (hash, range) = shuffles(SparkEntry.queries("tpch_q1")(spark, sf))
     assert(hash === 1, s"got $hash")
     assert(range <= 1)
   }
@@ -184,7 +184,7 @@ class PlanBudgetSpec extends SparkTestBase {
     // window re-keyed on part; part/supplier/nation/region all
     // broadcast — a decorrelated min-join formulation would re-scan
     // and re-shuffle the offer relation instead
-    val (hash, range) = shuffles(Tpch.queries("tpch_q2")(spark, sf))
+    val (hash, range) = shuffles(SparkEntry.queries("tpch_q2")(spark, sf))
     assert(hash === 2, s"got $hash")
     assert(range <= 1)
   }
@@ -193,7 +193,7 @@ class PlanBudgetSpec extends SparkTestBase {
     // part/supplier/nation broadcast by hint; lineitem⋈orders is the
     // only fact-fact edge (broadcast at toy scale, SMJ at 100 TB), and
     // the (nation, year) aggregate is 175 groups
-    val (hash, _) = shuffles(Tpch.queries("tpch_q9")(spark, sf))
+    val (hash, _) = shuffles(SparkEntry.queries("tpch_q9")(spark, sf))
     assert(hash <= 2, s"got $hash")
   }
 
@@ -202,7 +202,7 @@ class PlanBudgetSpec extends SparkTestBase {
     // the identical aggregate, so its exchange must come back as
     // ReusedExchange (a second hash exchange would mean the 100 TB fact
     // scan runs twice); the threshold itself rides a one-row broadcast
-    val df = Tpch.queries("tpch_q11")(spark, sf)
+    val df = SparkEntry.queries("tpch_q11")(spark, sf)
     val (hash, _) = shuffles(df)
     assert(hash <= 2, s"got $hash")
     assert(planOf(df).split("== Initial Plan ==").head.contains("ReusedExchange"),
@@ -213,7 +213,7 @@ class PlanBudgetSpec extends SparkTestBase {
     // partial aggregate on (group, suppkey) map-side, merge, then the
     // final per-group distinct count; part and the bad-supplier NOT-IN
     // set broadcast
-    val df = Tpch.queries("tpch_q16")(spark, sf)
+    val df = SparkEntry.queries("tpch_q16")(spark, sf)
     val (hash, _) = shuffles(df)
     assert(hash <= 2, s"got $hash")
     assert(!planOf(df).contains("Expand"),
@@ -224,7 +224,7 @@ class PlanBudgetSpec extends SparkTestBase {
     // the 1997 pair aggregate, the per-part total window over the
     // already-aggregated pairs, the qualified-supplier distinct; the
     // region dim and the semi-join probe side broadcast
-    val (hash, _) = shuffles(Tpch.queries("tpch_q20")(spark, sf))
+    val (hash, _) = shuffles(SparkEntry.queries("tpch_q20")(spark, sf))
     assert(hash <= 3, s"got $hash")
   }
 
@@ -232,14 +232,14 @@ class PlanBudgetSpec extends SparkTestBase {
     // the whole point is moving the join to a (key, salt) shuffle the
     // hot key cannot serialize onto one reducer; the replicated dim
     // must NOT broadcast (pinned in SaltSpec) and nothing else may move
-    val (hash, _) = shuffles(Joins.queries("join_salted")(spark, sf))
+    val (hash, _) = shuffles(SparkEntry.queries("join_salted")(spark, sf))
     assert(hash === 3, s"got $hash")
   }
 
   test("tpch_q19: ONE data shuffle (the per-brand group-by)") {
     // both residual-filtered scans meet in a broadcast join; the only
     // data movement the algorithm needs is the final group-by on brand
-    val (hash, range) = shuffles(Tpch.queries("tpch_q19")(spark, sf))
+    val (hash, range) = shuffles(SparkEntry.queries("tpch_q19")(spark, sf))
     assert(hash === 1, s"got $hash")
     assert(range <= 1)
   }

@@ -8,7 +8,8 @@ import graft.operators.{Ann, Ivf, Pca, Pq, Pipeline}
   * (exact top-10 sim range, ladder sizes) needed to interpret it —
   * random-hyperplane LSH recall depends on the probe-to-neighbour
   * ANGLE, so the sim range says what recall is even achievable per
-  * nprobe. Usage: tools/run_main.sh graft.RecallProbe <sfDir> [--plant]
+  * nprobe. Usage, after `sbt Test/compile`:
+  * tools/run_main.sh graft.RecallProbe <sfDir> [--plant]
   *
   * `--plant` (r14 verdict item 3): measure the PLANTED-NEIGHBOUR
   * regime instead of the corpus's natural one. The blow-up corpora

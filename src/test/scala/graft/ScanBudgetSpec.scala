@@ -91,7 +91,7 @@ class ScanBudgetSpec extends SparkTestBase {
   pin("ts_cusum", "events", 1)
 
   test("tpch_q15 reads lineitem zero times in the consumer plan (barriered)") {
-    assert(scansOf(operators.Tpch.queries("tpch_q15")(spark, sf),
+    assert(scansOf(SparkEntry.queries("tpch_q15")(spark, sf),
       "lineitem") === 0)
   }
 }

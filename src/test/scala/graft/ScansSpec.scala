@@ -44,7 +44,7 @@ class ScansSpec extends SparkTestBase {
 
   test("month-partitioned reporting layout prunes time-window scans at listing time") {
     import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files.createTempDirectory("graft_month_part").toString
+    val out = tempDir("graft_month_part").toString
     Scans.writeMonthPartitioned(spark, sf, out)
     val df = spark.read.parquet(out).filter(col("o_month") === "1997-03")
     df.collect()

@@ -13,12 +13,9 @@ import graft.sources.Tables
   */
 class SourcesSpec extends SparkTestBase {
 
-  private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   test("jdbc sink + source round-trips the nation table (embedded Derby)") {
     // keep derby.log out of the repo root
-    System.setProperty("derby.system.home", tmpDir("graft_derby"))
+    System.setProperty("derby.system.home", tempDir("graft_derby").toString)
     val url = "jdbc:derby:memory:graft;create=true"
     val n = Tables.nation(spark, sf)
     n.write.format("jdbc")
@@ -44,7 +41,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("jdbc source supports predicate pushdown into the database") {
-    System.setProperty("derby.system.home", tmpDir("graft_derby2"))
+    System.setProperty("derby.system.home", tempDir("graft_derby2").toString)
     val url = "jdbc:derby:memory:graft2;create=true"
     Tables.region(spark, sf).write.format("jdbc")
       .option("url", url).option("dbtable", "region")
@@ -63,7 +60,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("csv sink + source round-trips the nation table") {
-    val dir = tmpDir("graft_csv")
+    val dir = tempDir("graft_csv").toString
     val n = Tables.nation(spark, sf)
     n.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.option("header", "true")
@@ -75,7 +72,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("json sink + source round-trips the region table") {
-    val dir = tmpDir("graft_json")
+    val dir = tempDir("graft_json").toString
     val r = Tables.region(spark, sf)
     r.write.mode("overwrite").json(dir)
     val back = spark.read.schema(r.schema).json(dir)
@@ -84,7 +81,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("orc sink + source round-trips the nation table with predicate pushdown") {
-    val dir = tmpDir("graft_orc")
+    val dir = tempDir("graft_orc").toString
     val n = Tables.nation(spark, sf)
     n.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
@@ -99,7 +96,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("parquet sink round-trips a query result bit-exactly") {
-    val dir = tmpDir("graft_pq")
+    val dir = tempDir("graft_pq").toString
     val df = graft.operators.Aggregates.aggPricing(spark, sf)
     df.write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir)
@@ -111,7 +108,7 @@ class SourcesSpec extends SparkTestBase {
     // The ETL lifecycle (SURVEY §3.1): re-running a period's load must
     // overwrite that period's partition and leave every other period
     // untouched — partitionBy + dynamic overwrite is the Spark shape.
-    val dir = tmpDir("graft_period")
+    val dir = tempDir("graft_period").toString
     val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     try {
       spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -133,7 +130,7 @@ class SourcesSpec extends SparkTestBase {
     // the ETL-class ingest contract: a bad row in a 100 TB feed must be
     // quarantined, not kill the job
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_badcsv")
+    val dir = tempDir("graft_badcsv")
     Files.writeString(dir.resolve("data.csv"),
       "1,alpha,10.5\n2,beta,not_a_number\n3,gamma,7.25\n")
     val schema = StructType(Seq(
@@ -154,7 +151,7 @@ class SourcesSpec extends SparkTestBase {
   test("schema evolution: mergeSchema unions columns across parquet generations") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = Files.createTempDirectory("graft_evolve").toString
+    val dir = tempDir("graft_evolve").toString
     // generation 1: (id, a) — generation 2 adds column b
     Seq((1L, "x")).toDF("id", "a").write.parquet(s"$dir/g=1")
     Seq((2L, "y", 9L)).toDF("id", "a", "b").write.parquet(s"$dir/g=2")
@@ -172,7 +169,7 @@ class SourcesSpec extends SparkTestBase {
     // this pins the schema contract and a metadata-join over it
     val spark2 = spark
     import spark2.implicits._
-    val dir = tmpDir("graft_blobs")
+    val dir = tempDir("graft_blobs").toString
     val payloads = Map("a.bin" -> Array[Byte](1, 2, 3, 4),
       "b.bin" -> Array[Byte](9, 8), "c.bin" -> Array.fill[Byte](1024)(7))
     payloads.foreach { case (name, bytes) =>
@@ -200,7 +197,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("xml sink + source round-trips the region table (Spark 4 built-in XML)") {
-    val dir = tmpDir("graft_xml") + "/region"
+    val dir = tempDir("graft_xml").toString + "/region"
     val r = Tables.region(spark, sf)
     r.write.format("xml").option("rowTag", "region").save(dir)
     val back = spark.read.format("xml").option("rowTag", "region").load(dir)
@@ -216,7 +213,7 @@ class SourcesSpec extends SparkTestBase {
   test("text source ingests line-delimited corpora (one row per line)") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = tmpDir("graft_text")
+    val dir = tempDir("graft_text").toString
     Files.write(java.nio.file.Paths.get(dir, "corpus.txt"),
       "first line\nsecond line\n\nfourth".getBytes("UTF-8"))
     val lines = spark.read.text(dir).as[String].collect()
@@ -252,7 +249,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("table catalog memoizes the resolved plan and invalidates on file rewrite") {
     import java.nio.file.{Files => NF, Paths, StandardCopyOption}
-    val dir = tmpDir("graft_catalog")
+    val dir = tempDir("graft_catalog").toString
     val dst = Paths.get(dir, "nation.parquet")
     NF.copy(Paths.get(s"$sf/nation.parquet"), dst,
       StandardCopyOption.REPLACE_EXISTING)

@@ -17,7 +17,8 @@ import org.apache.spark.sql.streaming.Trigger
   * file; maxFilesPerTrigger=1 over one file would be a single giant
   * batch — a batch job in disguise).
   *
-  * Usage: tools/run_main.sh graft.StreamProbe <eventsDir> [nChunks]
+  * Usage, after `sbt Test/compile`:
+  * tools/run_main.sh graft.StreamProbe <eventsDir> [nChunks]
   * Not part of the driver contract.
   */
 object StreamProbe {

@@ -47,10 +47,10 @@ class StreamReplaySpec extends SparkTestBase {
     val cuts = rnd.shuffle((1 until rows.length).toList)
       .take(nChunks - 1).sorted
     val bounds = (0 +: cuts) :+ rows.length
-    val inDir = Files.createTempDirectory(s"graft_replay_$tag")
+    val inDir = tempDir(s"graft_replay_$tag")
     val now = System.currentTimeMillis()
     bounds.sliding(2).zipWithIndex.foreach { case (Seq(a, b), i) =>
-      val tmp = Files.createTempDirectory(s"graft_replay_chunk_$i")
+      val tmp = tempDir(s"graft_replay_chunk_$i")
       spark.createDataFrame(
           new java.util.ArrayList(
             scala.jdk.CollectionConverters.SeqHasAsJava(
@@ -177,7 +177,7 @@ class StreamReplaySpec extends SparkTestBase {
       val (rows, schema) = ordered
       val in = writeChunks(seed, "jdbc", rows, schema)
       System.setProperty("derby.system.home",
-        Files.createTempDirectory("graft_derby_replay").toString)
+        tempDir("graft_derby_replay").toString)
       val url = s"jdbc:derby:memory:graftreplay$seed;create=true"
       val conn = java.sql.DriverManager.getConnection(url)
       conn.createStatement().execute(

@@ -14,7 +14,7 @@ import graft.streaming.{EventsStream, ScdStream, SessionStream}
 class StreamingSpec extends SparkTestBase {
 
   test("streaming tumbling counts (AvailableNow replay) equal the batch result") {
-    val inDir = Files.createTempDirectory("graft_stream_in")
+    val inDir = tempDir("graft_stream_in")
     Files.copy(Path.of(s"$sf/events.parquet"), inDir.resolve("events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     val q = EventsStream.tumblingCounts(spark, inDir.toString, watermark = None)
@@ -30,7 +30,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("flatMapGroupsWithState sessionization equals batch session_window (closed sessions)") {
-    val inDir = Files.createTempDirectory("graft_stream_sess")
+    val inDir = tempDir("graft_stream_sess")
     Files.copy(Path.of(s"$sf/events.parquet"), inDir.resolve("events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     val q = SessionStream.sessions(spark, inDir.toString)
@@ -93,13 +93,13 @@ class StreamingSpec extends SparkTestBase {
   test("sessionization handles cross-batch out-of-order events like batch session_window") {
     val spark2 = spark
     import spark2.implicits._
-    val inDir = Files.createTempDirectory("graft_stream_ooo")
+    val inDir = tempDir("graft_stream_ooo")
     val base = 1704067200000000000L // 2024-01-01 00:00:00 UTC in ns
     val minNs = 60L * 1000000000L
     val now = System.currentTimeMillis()
 
     def writeFile(name: String, rows: Seq[(Long, Long, Long)], mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory(s"graft_ooo_$name")
+      val tmp = tempDir(s"graft_ooo_$name")
       rows.toDF("event_id", "user_id", "ts")
         .select(col("event_id"), col("ts"), col("user_id"),
           lit("click").as("event_type"), lit(1.0).as("value"),
@@ -145,7 +145,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("stream-stream interval join (purchase←signup) equals the batch join") {
-    val inDir = Files.createTempDirectory("graft_stream_ssj")
+    val inDir = tempDir("graft_stream_ssj")
     Files.copy(Path.of(s"$sf/events.parquet"), inDir.resolve("events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     val q = EventsStream.purchaseAttribution(spark, inDir.toString)
@@ -173,7 +173,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("stream-stream LEFT OUTER interval join: inner matches exact, closed unmatched null-padded") {
-    val inDir = Files.createTempDirectory("graft_stream_ssjl")
+    val inDir = tempDir("graft_stream_ssjl")
     Files.copy(Path.of(s"$sf/events.parquet"), inDir.resolve("events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     val q = EventsStream.purchaseAttributionLeft(spark, inDir.toString)
@@ -220,13 +220,13 @@ class StreamingSpec extends SparkTestBase {
   test("dropDuplicatesWithinWatermark dedups re-synced events with bounded state") {
     val spark2 = spark
     import spark2.implicits._
-    val inDir = Files.createTempDirectory("graft_stream_dedup")
+    val inDir = tempDir("graft_stream_dedup")
     val base = 1704067200000000000L // 2024-01-01 00:00:00 UTC in ns
     val hour = 3600L * 1000000000L
     val now = System.currentTimeMillis()
 
     def writeFile(name: String, rows: Seq[(Long, Long)], mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory(s"graft_dd_$name")
+      val tmp = tempDir(s"graft_dd_$name")
       rows.toDF("event_id", "ts")
         .select(col("event_id"), col("ts"), lit(1L).as("user_id"),
           lit("click").as("event_type"), lit(1.0).as("value"),
@@ -270,7 +270,7 @@ class StreamingSpec extends SparkTestBase {
     val spark2 = spark
     import spark2.implicits._
     System.setProperty("derby.system.home",
-      Files.createTempDirectory("graft_derby_stream").toString)
+      tempDir("graft_derby_stream").toString)
     val url = "jdbc:derby:memory:graftstream;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
     conn.createStatement().execute(
@@ -278,12 +278,12 @@ class StreamingSpec extends SparkTestBase {
         "n_events BIGINT, PRIMARY KEY (window_start, event_type))")
     conn.close()
 
-    val inDir = Files.createTempDirectory("graft_stream_jdbc")
+    val inDir = tempDir("graft_stream_jdbc")
     val base = 1704067200000000000L // 2024-01-01 00:00:00 UTC in ns
     val hour = 3600L * 1000000000L
     val now = System.currentTimeMillis()
     def writeFile(name: String, rows: Seq[(Long, Long)], mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory(s"graft_jdbc_$name")
+      val tmp = tempDir(s"graft_jdbc_$name")
       rows.toDF("event_id", "ts")
         .select(col("event_id"), col("ts"), lit(1L).as("user_id"),
           lit("click").as("event_type"), lit(1.0).as("value"),
@@ -320,7 +320,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("transformWithState running totals equal the batch aggregate (RocksDB store)") {
-    val inDir = Files.createTempDirectory("graft_stream_tws")
+    val inDir = tempDir("graft_stream_tws")
     Files.copy(Path.of(s"$sf/events.parquet"), inDir.resolve("events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     val prevProvider =
@@ -351,13 +351,13 @@ class StreamingSpec extends SparkTestBase {
   test("restart from checkpoint resumes offsets and dedup state (no reprocess, no dup)") {
     val spark2 = spark
     import spark2.implicits._
-    val inDir = Files.createTempDirectory("graft_stream_ckpt_in")
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt").toString
-    val outDir = Files.createTempDirectory("graft_stream_ckpt_out").toString
+    val inDir = tempDir("graft_stream_ckpt_in")
+    val ckpt = tempDir("graft_stream_ckpt").toString
+    val outDir = tempDir("graft_stream_ckpt_out").toString
     val base = 1704067200000000000L // 2024-01-01 00:00:00 UTC in ns
     val hour = 3600L * 1000000000L
     def writeFile(name: String, rows: Seq[(Long, Long)]): Unit = {
-      val tmp = Files.createTempDirectory(s"graft_ck_$name")
+      val tmp = tempDir(s"graft_ck_$name")
       rows.toDF("event_id", "ts")
         .select(col("event_id"), col("ts"), lit(1L).as("user_id"),
           lit("click").as("event_type"), lit(1.0).as("value"),
@@ -391,11 +391,11 @@ class StreamingSpec extends SparkTestBase {
   test("late rows beyond the watermark are dropped between micro-batches") {
     val spark2 = spark
     import spark2.implicits._
-    val inDir = Files.createTempDirectory("graft_stream_late")
+    val inDir = tempDir("graft_stream_late")
     val base = 1704067200000000000L // 2024-01-01 00:00:00 UTC in ns
 
     def writeFile(name: String, rows: Seq[(Long, Long)], mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory(s"graft_one_$name")
+      val tmp = tempDir(s"graft_one_$name")
       rows.toDF("event_id", "ts")
         .select(col("event_id"), col("ts"), lit(1L).as("user_id"),
           lit("click").as("event_type"), lit(1.0).as("value"),
@@ -458,7 +458,7 @@ class StreamingSpec extends SparkTestBase {
     // on arrival instead of in a nightly batch. Replay the corpus as a
     // stream and check the per-(split, lang) survivor counts equal the
     // batch run of the identical plan fragment.
-    val inDir = Files.createTempDirectory("graft_stream_docs")
+    val inDir = tempDir("graft_stream_docs")
     Files.copy(Path.of(s"$sf/documents.parquet"),
       inDir.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val batchDocs = Tables.documents(spark, sf)
@@ -481,7 +481,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("streaming SCD2 change feed equals the batch version rows (finalized prefix)") {
-    val inDir = Files.createTempDirectory("graft_stream_scd")
+    val inDir = tempDir("graft_stream_scd")
     Files.copy(Path.of(s"$sf/events.parquet"), inDir.resolve("events.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     val q = ScdStream.versions(spark, inDir.toString, watermark = "10 minutes")
@@ -525,12 +525,12 @@ class StreamingSpec extends SparkTestBase {
     // and declares genuinely on-time rows late.
     val spark2 = spark
     import spark2.implicits._
-    val inDir = Files.createTempDirectory("graft_stream_order")
+    val inDir = tempDir("graft_stream_order")
     val base = 1704067200000000000L // 2024-01-01 00:00:00 UTC in ns
     val hour = 3600L * 1000000000L
 
     def writeFile(name: String, rows: Seq[(Long, Long)], mtimeMs: Long): Unit = {
-      val tmp = Files.createTempDirectory(s"graft_one_$name")
+      val tmp = tempDir(s"graft_one_$name")
       rows.toDF("event_id", "ts")
         .select(col("event_id"), col("ts"), lit(1L).as("user_id"),
           lit("click").as("event_type"), lit(1.0).as("value"),

@@ -5,7 +5,8 @@ import graft.operators.Tpch
 /** The composite flagship queries: sane plans (equi-joins only — a
   * mis-specified join condition would degenerate to a cartesian) and
   * non-empty results at the test scale. Value correctness is
-  * oracle-gated (Tpch.oracle) like every other declared query.
+  * oracle-gated (each `Query`'s oracle in Tpch.registry) like every
+  * other declared query.
   */
 class TpchSpec extends SparkTestBase {
 
@@ -16,7 +17,7 @@ class TpchSpec extends SparkTestBase {
     // equi-join.
     // q11's global-total threshold rides the same one-row shape.
     val scalarBroadcast = Set("tpch_q22", "tpch_q11")
-    for ((name, fn) <- Tpch.queries) {
+    for (Query(name, fn, _) <- Tpch.registry) {
       val df = fn(spark, sf)
       val n = df.count()
       assert(n > 0, s"$name returned no rows")
@@ -89,7 +90,7 @@ class TpchSpec extends SparkTestBase {
       // q20: the 1997 window gates the fact scan, name prefix the dim
       "tpch_q20" -> Seq("l_shipdate", "p_name"))
     for ((name, cols) <- expect) {
-      val plan = planOf(Tpch.queries(name)(spark, sf))
+      val plan = planOf(SparkEntry.queries(name)(spark, sf))
       val pushed = "PushedFilters: \\[([^\\]]*)".r
         .findAllMatchIn(plan).map(_.group(1)).mkString("; ")
       for (c <- cols)
