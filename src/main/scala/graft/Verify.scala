@@ -1,11 +1,42 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.util.QueryExecutionListener
+
 /** Correctness dump: each declared query's result → parquet
   * (`SparkEntry.queries`, derived from the one `SparkEntry.registry`),
   * plus oracle_sql.json (`SparkEntry.oracleSql`: name → DuckDB SQL for
   * the queries whose `Query` declares an oracle), for the DuckDB oracle
-  * compare (tools/compare.py). */
+  * compare (tools/compare.py), _errors.json (query → exception) and
+  * _timings.json (query → wall seconds of building and writing it, and
+  * its output rows). */
 object Verify {
+
+  /** Output rows of each parquet write, keyed by the name of the
+    * directory written, read from the write's `numOutputRows` metric —
+    * no extra job. Listener events arrive asynchronously; stopping the
+    * session delivers every pending one.
+    */
+  private[graft] final class WrittenRows extends QueryExecutionListener
+      with AdaptiveSparkPlanHelper {
+    val rows = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    override def onSuccess(funcName: String, qe: QueryExecution,
+        durationNs: Long): Unit =
+      collectFirst(qe.executedPlan) { case w: DataWritingCommandExec => w }
+        .foreach { w =>
+          (w.cmd, w.metrics.get("numOutputRows")) match {
+            case (i: InsertIntoHadoopFsRelationCommand, Some(m)) =>
+              rows.put(i.outputPath.getName, m.value)
+            case _ =>
+          }
+        }
+    override def onFailure(funcName: String, qe: QueryExecution,
+        exception: Exception): Unit = ()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
@@ -27,12 +58,18 @@ object Verify {
     // Failed queries must be first-class data, not silently-absent
     // CORRECTNESS entries: collect name → error and write _errors.json.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val wallSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val written = new WrittenRows
+    spark.listenerManager.register(written)
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        wallSecs(name) = (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
         val msg = s"${e.getClass.getSimpleName}: " +
           Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString
         System.err.println(s"[verify] $name failed: $msg")
@@ -61,6 +98,12 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/_errors.json"),
       errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
-    spark.stop()
+    spark.stop() // delivers the listener's pending events
+    Files.writeString(Paths.get(s"$outDir/_timings.json"),
+      wallSecs.map { case (k, s) =>
+        val rows = Option(written.rows.get(k)).fold("null")(_.toString)
+        s"${q(k)}: {\"wall_s\": ${"%.3f".formatLocal(java.util.Locale.ROOT, s)}, " +
+          s"\"rows\": $rows}"
+      }.mkString("{", ",", "}"))
   }
 }

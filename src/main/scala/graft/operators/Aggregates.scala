@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Query
 import graft.api.Barrier._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Dec._
@@ -692,140 +692,142 @@ object Aggregates {
     * partitioners actually want — fixed-width bins collapse under
     * skew.
     *
-    * Spark-first shape: NOT a global ntile (a no-partition window is
-    * a single task holding the full sort — the classic scale trap).
-    * Pass 1 aggregates the 9 interpolated decile cuts; pass 2
-    * broadcast-joins the one-row cut array and bins every row
-    * MAP-SIDE via a higher-order filter (bucket = 1 + #cuts below),
-    * then a 10-key hash agg. Cut interpolation is the same linear
-    * rule in both engines over exact decimal-as-double inputs (the
-    * agg_quantile precedent), and bucket membership is a plain
-    * comparison — gates exactly, no rounding. At 100 TB swap pass 1
-    * for the KLL sketch (agg_approx_quantile); pass 2 is unchanged.
+    * The ≤10-row result is a catalog statistic: the driver holds it
+    * once per corpus snapshot (`Materialize.model`, like
+    * `embeddings_count`), sorted by bucket, and the query serves it as
+    * a local relation, which keeps that order — serving and collecting
+    * it start no job (an `orderBy` here would plan a range shuffle of
+    * ten rows: three jobs per call). The build ([[aggEquidepthBuild]])
+    * is three bounded aggregates over `orders`, each collected, with
+    * the cut arithmetic on the driver. Not a global ntile: a
+    * no-partition window is a single task holding the full sort. Cut
+    * interpolation is the same linear rule in both engines over exact
+    * decimal-as-double inputs (the agg_quantile precedent), and bucket
+    * membership is a plain comparison — gates exactly, no rounding. At
+    * 100 TB swap the first two aggregates for the KLL sketch
+    * (agg_approx_quantile); the binning pass is unchanged.
     */
-  def aggEquidepth(spark: SparkSession, sfDir: String): DataFrame =
-    // the equi-depth histogram IS a persisted optimizer statistic
-    // (what ANALYZE writes) — artifact per the signature-table policy
-    graft.sources.Materialize.once(spark, sfDir,
-        Seq("orders"), "equidepth_stats")(aggEquidepthBuild(spark, sfDir))
-      .orderBy(col("bucket"))
+  def aggEquidepth(spark: SparkSession, sfDir: String): DataFrame = {
+    val (schema, rows) = graft.sources.Materialize.model(sfDir,
+      Seq("orders"), "equidepth_stats")(aggEquidepthBuild(spark, sfDir))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
 
-  private def aggEquidepthBuild(spark: SparkSession, sfDir: String): DataFrame = {
-    // integer cents (Spark floor() returns LONG); price for output =
-    // outCents(pc, 2) — bit-identical to the former per-row
-    // outCents(cents2(x), 2) (same long value, same /100 division)
+  /** The most $100 price buckets agg_equidepth's first aggregate may
+    * bring to the driver.
+    */
+  private[graft] val EquidepthMaxBuckets = 1000000
+
+  /** The 1-based ranks each decile cut reads over `n` sorted values:
+    * for h = q·(N−1), rank lo = floor(h) + 1, and rank lo + 1 with
+    * weight frac = h − floor(h) — absent when frac = 0 or lo is the
+    * last rank, where the cut is the value at lo.
+    */
+  private[graft] def equidepthRanks(n: Long): Seq[(Long, Option[Long], Double)] =
+    Seq(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9).map { q =>
+      val h = q * (n - 1).toDouble
+      val lo = math.floor(h).toLong + 1
+      val frac = h - math.floor(h)
+      (lo, if (frac != 0.0 && lo < n) Some(lo + 1) else None, frac)
+    }
+
+  /** The buckets holding the ranks the cuts read, in order, from the
+    * histogram of (bucket, rows).
+    */
+  private[graft] def equidepthBuckets(hist: Seq[(Long, Long)]): Seq[Long] = {
+    require(hist.size <= EquidepthMaxBuckets,
+      s"agg_equidepth: the o_totalprice histogram holds ${hist.size} $$100 " +
+        s"buckets, over the bound of $EquidepthMaxBuckets the driver collects")
+    val sorted = hist.sortBy(_._1).toArray
+    val through = sorted.scanLeft(0L)(_ + _._2).tail
+    if (sorted.isEmpty) Nil
+    else equidepthRanks(through.last)
+      .flatMap { case (lo, hi, _) => lo +: hi.toSeq }
+      .map(r => sorted(through.indexWhere(_ >= r))._1).distinct.sorted
+  }
+
+  /** The cuts, from the histogram of (bucket, rows) and the refined
+    * (cent price, rows) of every price in [[equidepthBuckets]]: the
+    * value at global rank r is the first refined price whose bucket's
+    * earlier rows plus its own running count reach r, and each cut is
+    * `lo + frac·(hi − lo)` on `pc / 100.0`, the linear rule the
+    * oracle's quantile_cont applies.
+    */
+  private[graft] def equidepthCuts(hist: Seq[(Long, Long)],
+      refined: Seq[(Long, Long)]): Seq[Double] = {
+    val sorted = hist.sortBy(_._1)
+    val before = sorted.map(_._1).zip(sorted.scanLeft(0L)(_ + _._2)).toMap
+    // (price, global rank of its last row), ascending in both
+    // (Long `/` truncates like Spark's DIV)
+    val ends = refined.sortBy(_._1).groupBy(_._1 / 10000)
+      .toSeq.sortBy(_._1).flatMap { case (b, ps) =>
+        ps.map(_._1).zip(ps.scanLeft(before(b))(_ + _._2).tail)
+      }
+    def value(r: Long): Double = ends.find(_._2 >= r).get._1.toDouble / 100.0
+    if (sorted.isEmpty) Nil
+    else equidepthRanks(sorted.map(_._2).sum).map {
+      case (lo, None, _) => value(lo)
+      case (lo, Some(hi), frac) =>
+        val (v, w) = (value(lo), value(hi))
+        v + frac * (w - v)
+    }
+  }
+
+  /** agg_equidepth's statistic, built by three bounded aggregates over
+    * `orders`, each collected:
+    *   1. row counts per $100 price bucket — value-domain bounded
+    *      (price range / 100 rows, capped at [[EquidepthMaxBuckets]]),
+    *      never the fact rows;
+    *   2. row counts per distinct cent price in the ≤18 buckets that
+    *      hold the cut ranks — ≤10⁴ prices per bucket BY CONSTRUCTION
+    *      ($100 ÷ cent grain); a pushable o_totalprice range
+    *      pre-filter prunes row groups at scale;
+    *   3. per-bucket count and [lo, hi] with the nine cuts as literals:
+    *      bucket = 1 + #cuts below the price, one 2-phase aggregate.
+    * Between 2 and 3 the driver picks each rank's price by a
+    * cumulative scan ([[equidepthCuts]]). Rank-r-value semantics are
+    * tie-break-free: the value at a global rank counting multiplicity
+    * does not depend on how equal prices are ordered. frac = 0
+    * degrades to the exact lower value, and frac ≠ 0 lands strictly
+    * between two consecutive sorted values, so bucket comparisons
+    * cannot flip on last-ulp differences.
+    */
+  private def aggEquidepthBuild(spark: SparkSession,
+      sfDir: String): (org.apache.spark.sql.types.StructType, Array[Row]) = {
+    // integer cents (Spark floor() returns LONG); price = outCents(pc, 2)
     val priced = Tables.orders(spark, sfDir)
       .select(cents2(col("o_totalprice")).as("pc"))
-    val qs = Seq(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9)
-    // HISTOGRAM PRUNE + EXACT REFINE (r17; the weighted_median pattern,
-    // guide §2.3 aggregate-before-shuffle) replacing the r12 64-shard
-    // rank machinery: ranking EVERY row (range-sample pass + full-data
-    // range shuffle + full-width sort window + barrier materialization)
-    // to fetch 18 of them was the artifact ladder's most expensive
-    // build (3.5 s of cold). The interpolation rule needs only the
-    // values at ranks floor(h)+1 and floor(h)+2 for h = q·(N−1):
-    //   phase 1 — aggregate row counts per $100 price bucket
-    //     (pc DIV 10000): a map-combined shuffle of ≤ price-range/100
-    //     partial rows (value-domain bounded, never the fact rows);
-    //     the collected bucket frame is the same bounded-collect class
-    //     as sortedPrefixSums' shard totals, and the cumulative scan
-    //     that locates each target rank's bucket runs driver-side;
-    //   phase 2 — re-scan ONLY the ≤18 target buckets (a pushable
-    //     o_totalprice range pre-filter prunes row groups at scale),
-    //     aggregate per distinct cent price (≤10⁴ rows per bucket BY
-    //     CONSTRUCTION: $100 bucket ÷ cent grain), and locate each
-    //     rank's price with a bucket-partitioned cumulative window
-    //     over that bounded frame.
-    // Float discipline is unchanged from r12: h is the same double
-    // product both engines compute, and the interpolation
-    // `lo + frac·(hi − lo)` is the identical expression — frac = 0
-    // degrades to the exact lower value, frac ≠ 0 lands strictly
-    // between two consecutive sorted values, so bucket comparisons
-    // cannot flip on last-ulp differences. Rank-r-value semantics are
-    // tie-break-free (the value at a global rank counting multiplicity
-    // does not depend on how equal prices are ordered).
-    val histRows0 = priced.groupBy(expr("pc DIV 10000").as("bkt"))
+    val histRows = priced.groupBy(expr("pc DIV 10000").as("bkt"))
       .agg(count(lit(1)).as("n")).collect()
     // fail LOUDLY on a null money value (a corpus-regeneration class
-    // this build does not define semantics for — the old rank machinery
-    // ordered nulls first, silently shifting every cut), instead of an
-    // NPE out of getLong; CentsDomainSpec asserts the same corpus
-    // property at test time
-    require(histRows0.forall(!_.isNullAt(0)),
+    // this build does not define semantics for), instead of an NPE out
+    // of getLong; CentsDomainSpec asserts the same corpus property at
+    // test time
+    require(histRows.forall(!_.isNullAt(0)),
       "agg_equidepth: o_totalprice contains NULLs — the corpus broke the " +
         "non-null money precondition (see CentsDomainSpec); define null " +
         "rank semantics before rebuilding this statistic")
-    val histRows = histRows0
-      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val total = histRows.map(_._2).sum
-    val cuts =
-      if (total == 0)
-        spark.range(1).select(typedlit(Seq.empty[Double]).as("cuts"))
-      else {
-        val cumBefore: Map[Long, Long] = {
-          var c = 0L
-          histRows.map { case (b, n) => val r = (b, c); c += n; r }.toMap
-        }
-        def bucketOf(rank: Long): Long = {
-          var c = 0L
-          histRows.find { case (_, n) => c += n; c >= rank }.get._1
-        }
-        // (qi, role, bucket, rank-within-bucket) for the ≤18 needed rows
-        val targets: Seq[(Int, String, Long, Long)] =
-          qs.indices.flatMap { qi =>
-            val h = qs(qi) * (total - 1).toDouble
-            val loR = math.floor(h).toLong + 1
-            val hiR = loR + 1
-            val lo = { val b = bucketOf(loR); (qi, "lo", b, loR - cumBefore(b)) }
-            val hi = if (hiR <= total) {
-              val b = bucketOf(hiR); Seq((qi, "hi", b, hiR - cumBefore(b)))
-            } else Nil
-            lo +: hi
-          }
-        val fracMap: Map[Int, Double] = qs.indices.map { qi =>
-          val h = qs(qi) * (total - 1).toDouble
-          qi -> (h - math.floor(h))
-        }.toMap
-        val s2 = spark
-        import s2.implicits._
-        val tdf = targets.toDF("qi", "role", "tbkt", "rin")
-        val needB = targets.map(_._3).distinct.sorted
-        // conservative pushable pre-filter (row-group min/max pruning at
-        // scale); the exact bucket isin below keeps the semantics
-        val refine = Tables.orders(spark, sfDir)
-          .filter(col("o_totalprice") >= needB.head * 100.0 - 1.0 &&
-            col("o_totalprice") <= (needB.last + 1) * 100.0 + 1.0)
-          .select(cents2(col("o_totalprice")).as("pc"))
-          .filter(expr("pc DIV 10000")
-            .isin(needB.map(java.lang.Long.valueOf): _*))
-          .groupBy(expr("pc DIV 10000").as("bkt"), col("pc"))
-          .agg(count(lit(1)).as("n"))
-        val wB = Window.partitionBy(col("bkt")).orderBy(col("pc"))
-        val vals = refine
-          .withColumn("cume", sum(col("n")).over(
-            wB.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .join(broadcast(tdf), col("bkt") === col("tbkt") &&
-            col("cume") >= col("rin") && col("cume") - col("n") < col("rin"))
-          .select(col("qi"), col("role"), outCents(col("pc"), 2).as("price"))
-        vals.groupBy(col("qi"))
-          .agg(max(when(col("role") === "lo", col("price"))).as("v_lo"),
-            max(when(col("role") === "hi", col("price"))).as("v_hi"))
-          .withColumn("frac", element_at(typedlit(fracMap), col("qi")))
-          .select(col("qi"),
-            when(col("frac") === 0.0 || col("v_hi").isNull, col("v_lo"))
-              .otherwise(col("v_lo") + col("frac") * (col("v_hi") - col("v_lo")))
-              .as("cut"))
-          .agg(transform(array_sort(collect_list(struct(col("qi"), col("cut")))),
-            s => s.getField("cut")).as("cuts"))
-      }
-    priced.select(outCents(col("pc"), 2).as("price"))
-      .crossJoin(broadcast(cuts))
-      .select(col("price"),
-        (lit(1) + size(filter(col("cuts"), c => col("price") > c)))
-          .cast("long").as("bucket"))
-      .groupBy(col("bucket"))
+    val hist = histRows.map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val needB = equidepthBuckets(hist)
+    val cuts = if (needB.isEmpty) Nil else {
+      // conservative pushable pre-filter, one bucket wider on each side
+      // (bucket 0 spans both signs); the exact bucket isin below keeps
+      // the semantics
+      val refined = Tables.orders(spark, sfDir)
+        .filter(col("o_totalprice") >= (needB.head - 1) * 100.0 &&
+          col("o_totalprice") <= (needB.last + 2) * 100.0)
+        .select(cents2(col("o_totalprice")).as("pc"))
+        .filter(expr("pc DIV 10000")
+          .isin(needB.map(java.lang.Long.valueOf): _*))
+        .groupBy(col("pc")).agg(count(lit(1)).as("n")).collect()
+      equidepthCuts(hist, refined.map(r => (r.getLong(0), r.getLong(1))).toSeq)
+    }
+    val stats = priced.select(outCents(col("pc"), 2).as("price"))
+      .groupBy(cuts.foldLeft(lit(1L))((b, c) =>
+        b + when(col("price") > c, 1L).otherwise(0L)).as("bucket"))
       .agg(count(lit(1)).as("n_orders"),
         min(col("price")).as("lo"), max(col("price")).as("hi"))
+    (stats.schema, stats.collect().sortBy(_.getLong(0)))
   }
 
   /** `agg_corr_matrix` — the pairwise Pearson correlation matrix of

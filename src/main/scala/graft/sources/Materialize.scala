@@ -7,8 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   *  - [[model]] keeps an in-memory value — a trained model (k-means
   *    centers, PQ codebooks, the PCA eigenbasis), a catalog statistic
-  *    (row count, per-cell counts, the LSH probe ladder) or the probe
-  *    vector;
+  *    (row count, per-cell counts, the LSH probe ladder, the
+  *    equi-depth histogram's rows) or the probe vector;
   *  - [[once]] is [[model]] plus a parquet write and the resolved
   *    re-read — signature tables, similarity edge sets, basket tables,
   *    PQ codes: the per-snapshot artifacts a production pipeline WRITES
@@ -22,10 +22,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * per-entity score/label snapshot (quality scores, keyword tags,
   * authority ranks, RFM ranking snapshots), an edge set or its
   * components, or a catalog statistic (equi-depth histogram, row and
-  * cell counts). NEVER an ad-hoc per-query intermediate: queries must
-  * still do their own relational work over the artifacts, and every
-  * artifact-backed declared query stays oracle-gated end-to-end (the
-  * gate validates artifact build + read).
+  * cell counts). A catalog statistic is a bounded summary, so it is a
+  * [[model]]: the driver holds it and nothing is written
+  * (`weighted_median_stats` still goes through [[once]]). NEVER an
+  * ad-hoc per-query intermediate: queries must still do their own
+  * relational work over the artifacts, and every artifact-backed
+  * declared query stays oracle-gated end-to-end (the gate validates
+  * artifact build + read).
   *
   * Key = kind + content fingerprint of every SOURCE table (file listing
   * + sizes + mtimes): a corpus rewrite within one JVM yields a new key

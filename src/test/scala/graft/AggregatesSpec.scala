@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.functions.Dec.cents2
 import graft.operators.Aggregates
 import graft.sources.Tables
 
@@ -173,5 +174,114 @@ class AggregatesSpec extends SparkTestBase {
       // the dropped tails' extremes
       assert(tm >= xs.head.toDouble && tm <= xs.last.toDouble)
     }
+  }
+
+  private val deciles = Seq(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9)
+
+  /** The decile cuts straight off the sorted cents: for h = q·(N−1),
+    * the value at index floor(h), moved frac = h − floor(h) of the way
+    * to the next value when there is one.
+    */
+  private def bruteCuts(cents: Array[Long]): Seq[Double] = {
+    val v = cents.sorted
+    deciles.map { q =>
+      val h = q * (v.length - 1).toDouble
+      val i = math.floor(h).toInt
+      val frac = h - math.floor(h)
+      val lo = v(i).toDouble / 100.0
+      if (frac == 0.0 || i + 1 >= v.length) lo
+      else lo + frac * (v(i + 1).toDouble / 100.0 - lo)
+    }
+  }
+
+  /** The cuts as the build computes them: the $100-bucket histogram,
+    * then the per-cent refine of the buckets it asks for.
+    */
+  private def driverCuts(cents: Array[Long]): Seq[Double] = {
+    def counts(xs: Array[Long], key: Long => Long) =
+      xs.groupBy(key).map { case (k, g) => (k, g.length.toLong) }.toSeq
+    val hist = counts(cents, _ / 10000)
+    val need = Aggregates.equidepthBuckets(hist).toSet
+    Aggregates.equidepthCuts(hist, counts(cents.filter(c => need(c / 10000)), identity))
+  }
+
+  test("agg_equidepth: driver-side cuts equal brute-force cuts bit for bit") {
+    val rnd = new scala.util.Random(7)
+    def shuffled(xs: Seq[Long]) = rnd.shuffle(xs).toArray
+    val cases = Seq(1, 2, 10, 11, 1000).map(n =>
+      s"N=$n" -> Array.fill(n)(100L + rnd.nextInt(300000))) ++ Seq(
+      "all prices equal" -> Array.fill(50)(12345L),
+      "ties across a cut" -> shuffled((0 until 100).map(i => 5000L + (i / 7) * 3)),
+      // q = 0.1 reads indexes 99 and 100: 199.99, the last cent of
+      // bucket 1, interpolated toward bucket 2
+      "target on a bucket's last cent" -> shuffled((0 until 1000).map(i =>
+        if (i <= 99) 19900L + i else 20000L + i)),
+      "99.99 against 100.00" -> shuffled((0 until 1000).map(i =>
+        if (i <= 99) 9900L + i else 10000L + i - 100)))
+    cases.foreach { case (label, cents) =>
+      val (got, want) = (driverCuts(cents), bruteCuts(cents))
+      assert(got == want, s"$label: $got vs $want")
+    }
+    // past the last rank (N = 1) the cut is the one value, frac 0
+    assert(Aggregates.equidepthRanks(1) == deciles.map(_ => (1L, None, 0.0)))
+    assert(Aggregates.equidepthBuckets(Nil).isEmpty)
+    assert(Aggregates.equidepthCuts(Nil, Nil).isEmpty)
+  }
+
+  test("agg_equidepth: the histogram the driver collects is capped at 10^6 buckets") {
+    val atBound = Array.tabulate(Aggregates.EquidepthMaxBuckets)(b => (b.toLong, 1L))
+    assert(Aggregates.equidepthBuckets(atBound.toSeq).nonEmpty)
+    val e = intercept[IllegalArgumentException](
+      Aggregates.equidepthBuckets((atBound :+ ((-1L, 1L))).toSeq))
+    assert(e.getMessage.contains("1000000") && e.getMessage.contains("o_totalprice"),
+      e.getMessage)
+  }
+
+  /** `body`'s value and the number of jobs it started on this thread
+    * (tagged; a marker job run after it flushes the listener queue).
+    */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"graft_jobs_${java.util.UUID.randomUUID()}"
+    val marker = s"${tag}_marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val tags = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .fold(Set.empty[String])(_.split(",").toSet)
+        if (tags(tag)) jobs.incrementAndGet()
+        if (tags(marker)) flushed.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.addJobTag(tag)
+      val out = try body finally sc.removeJobTag(tag)
+      sc.addJobTag(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(marker)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("agg_equidepth: the statistic builds in at most 7 jobs, then serves with none") {
+    // a fresh copy of orders: a new fingerprint, so this call builds
+    val dir = tempDir("graft_equidepth_")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/orders.parquet"),
+      dir.resolve("orders.parquet"))
+    val (first, built) = jobsOf(Aggregates.aggEquidepth(spark, dir.toString))
+    // one job resolves the copy's parquet schema, two run each aggregate
+    assert(built <= 7, s"the build started $built jobs")
+    val (again, served) = jobsOf(Aggregates.aggEquidepth(spark, dir.toString).collect())
+    assert(served == 0, s"serving the built statistic started $served jobs")
+    // the bins agree with brute-force binning at the brute-force cuts
+    val cents = Tables.orders(spark, dir.toString)
+      .select(cents2(col("o_totalprice"))).collect().map(_.getLong(0))
+    val cuts = bruteCuts(cents)
+    val want = cents.map(_.toDouble / 100.0).groupBy(p => 1L + cuts.count(p > _))
+      .toSeq.sortBy(_._1).map { case (b, ps) => (b, ps.length.toLong, ps.min, ps.max) }
+    Seq(first.collect(), again).foreach(rows => assert(rows.toSeq.map(r =>
+      (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))) == want))
   }
 }
