@@ -4,21 +4,40 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Repartition, Sort}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
+import org.apache.spark.sql.internal.SQLConf
 import graft.expressions.{CosineSimilarity, HilbertCode, KGrams, LshBucket, SignedProject, SimHash64}
 
-/** Library extension entry point: installs graft's native expressions
-  * into any session built with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` (or
-  * `builder.withExtensions(new GraftExtensions)`), which is how a user
-  * of this engine gets `cosine_sim(...)` / `simhash64(...)` /
-  * `lsh_bucket(...)` in plain SQL text on a real cluster — no
-  * per-session registration calls.
+/** Library extension entry point, installed into any session built
+  * with `.config("spark.sql.extensions", "graft.GraftExtensions")` (or
+  * `builder.withExtensions(new GraftExtensions)`). It injects two
+  * things:
+  *   - graft's native expressions, which is how a user of this engine
+  *     gets `cosine_sim(...)` / `simhash64(...)` / `lsh_bucket(...)` in
+  *     plain SQL text on a real cluster, with no per-session
+  *     registration calls;
+  *   - the AQE runtime rule [[GraftExtensions.SortSmallResultInOneTask]]:
+  *     a presentation sort (a global `Sort` at the root of the query,
+  *     under only `Project`/`Filter`) whose whole input is already
+  *     materialized in query stages, and is no larger than
+  *     `spark.sql.adaptive.advisoryPartitionSizeInBytes`, runs in one
+  *     task instead of behind a range exchange, which saves the range
+  *     bounds' sampling job and one single-task map stage.
+  *
+  * Sessions that only call [[GraftExtensions.ensure]] get the functions
+  * but not the rule. The rule runs only where AQE re-optimizes the
+  * query's own root, so a `count()` (which drops the sort) never sees
+  * it, and neither does a sort under a limit (`TakeOrderedAndProject`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { case (name, cls, build) =>
       ext.injectFunction((FunctionIdentifier(name), GraftExtensions.info(name, cls), build))
     }
+    ext.injectRuntimeOptimizerRule(GraftExtensions.SortSmallResultInOneTask(_))
+  }
 }
 
 object GraftExtensions {
@@ -63,6 +82,48 @@ object GraftExtensions {
     ("might_contain", classOf[BloomFilterMightContain], args => {
       arity("might_contain", 2, args); BloomFilterMightContain(args.head, args(1))
     }))
+
+  /** AQE runtime rule: sort a small, already-materialized final result
+    * in one task.
+    *
+    * Matches a global `Sort` at the plan root, with only `Project` and
+    * `Filter` above it, when every leaf under it is a materialized
+    * `LogicalQueryStage` and its input's `sizeInBytes` (the stages'
+    * runtime statistics) is at most the advisory partition size, the
+    * size AQE itself targets for one post-shuffle partition. It
+    * rewrites `Sort(global, child)` to
+    * `Sort(global, Repartition(1, shuffle = false, child))`:
+    *   - `CoalesceExec(1)` reports `SinglePartition`, so
+    *     `EnsureRequirements` plans no range exchange;
+    *   - AQE adopts the re-planned tree because it holds fewer shuffles;
+    *   - AQE re-optimizes as soon as the last child stage materializes,
+    *     before it creates the range stage, so the sampling job never
+    *     starts.
+    *
+    * The rows and their order by the sort key are unchanged. Rows with
+    * equal keys come out in the order the one task reads them; behind a
+    * range exchange that order was not fixed either.
+    */
+  private[graft] case class SortSmallResultInOneTask(session: SparkSession)
+      extends Rule[LogicalPlan] {
+
+    override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+      case s @ Sort(_, true, child, _) if fits(child) =>
+        s.copy(child = Repartition(1, shuffle = false, child))
+      case p @ (_: Project | _: Filter) => p.withNewChildren(Seq(apply(p.children.head)))
+      case other => other
+    }
+
+    private def fits(child: LogicalPlan): Boolean = child match {
+      case Repartition(1, false, _) => false // already rewritten
+      case _ =>
+        child.collectLeaves().forall {
+          case q: LogicalQueryStage => q.isMaterialized
+          case _ => false
+        } && child.stats.sizeInBytes <=
+          session.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    }
+  }
 
   private def info(name: String, cls: Class[_]): ExpressionInfo =
     new ExpressionInfo(cls.getName, name)

@@ -12,6 +12,16 @@ import org.apache.spark.sql.functions._
   * The single-task-stage bug class (the r10 winnow regression) is only
   * VISIBLE at scale, which is exactly what this surfaces.
   *
+  * What is timed: full materialization of every row and column, through
+  * the `noop` sink (`df.write.format("noop")`), not `count()`, under
+  * which Catalyst drops sorts and unused columns (the row counts come
+  * from an untimed `count()` after the timed runs). Before any timed
+  * run, each named query runs once, untimed, on a copy of the 1× corpus
+  * at another path: the JVM's first-query costs (class loading, JIT,
+  * session init) land there, and since `DataFingerprint` keys on the
+  * path, nothing the copy builds (artifacts, models, resolved tables)
+  * is reused, so the 1× and factor× cold runs stay cold.
+  *
   * Blow-up semantics per table (copy k of `factor`, k = 0 unchanged):
   *   - region/nation: DOMAIN tables, kept as-is (25 nations stay 25).
   *   - customer/supplier/part/orders/lineitem/events: entity keys shift
@@ -35,28 +45,34 @@ object ScaleProbe {
     val factor = args(2).toInt
     val names = args.drop(3)
     val spark = GraftSession.start()
-    spark.range(1000).selectExpr("sum(id)").collect()
 
     if (!new java.io.File(s"$out/lineitem.parquet").exists()) {
       println(s"== building ${factor}x corpus at $out ==")
       buildBlowup(spark, src, out, factor)
     }
 
+    /** Wall seconds of one full materialization. */
+    def materialize(name: String, dir: String): Double = {
+      val t0 = System.nanoTime()
+      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
+      val dt = (System.nanoTime() - t0) / 1e9
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
+      dt
+    }
+
+    val warmup = java.nio.file.Files.createTempDirectory("graft_scale_warmup_")
+    try {
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(src), warmup.toFile)
+      names.foreach(materialize(_, warmup.toString))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(warmup.toFile)
+
     println(f"${"query"}%-26s ${"rows1"}%9s ${"rowsF"}%9s ${"cold1"}%7s ${"coldF"}%7s ${"warm1"}%7s ${"warmF"}%7s ${"expC"}%5s ${"expW"}%5s")
     names.foreach { name =>
-      val fn = SparkEntry.queries(name)
       def time(dir: String): (Long, Double, Double) = {
-        def once(): (Long, Double) = {
-          val t0 = System.nanoTime()
-          val n = fn(spark, dir).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          (n, dt)
-        }
-        val (n, cold) = once()
-        val (_, warm) = once()
-        (n, cold, warm)
+        val cold = materialize(name, dir)
+        val warm = materialize(name, dir)
+        (SparkEntry.queries(name)(spark, dir).count(), cold, warm)
       }
       val (n1, c1, w1) = time(src)
       val (nf, cf, wf) = time(out)

@@ -1139,7 +1139,9 @@ object Analytics {
     * (cum-before + (n+1)/2), and the rank-sum is Σ n_pos(s)·midrank(s).
     * A row-level rank() would single-partition-sort the corpus; this
     * form sorts only the score domain — the agg_weighted_median
-    * discipline applied to ranking.
+    * discipline applied to ranking. The table is scanned once: every
+    * row, a NULL score included, falls into exactly one score group, so
+    * the row total is Σ n over the groups.
     *
     * Exactness: ties are decided on the ROUNDED score (bit-equal
     * across engines); counts and cum-counts are exact int64; mid-ranks
@@ -1158,13 +1160,13 @@ object Analytics {
       .rowsBetween(Window.unboundedPreceding, -1)
     val ranked = byScore
       .withColumn("cum_before", coalesce(sum(col("n")).over(cum), lit(0L)))
-      .select(col("np"),
+      .select(col("n"), col("np"),
         (col("cum_before") + (col("n") + 1) / lit(2.0)).as("midrank"))
     ranked.agg(
       sum(col("np")).as("n_pos0"),
       sum(col("np") * col("midrank")).as("rsum"),
-      count(lit(1)).as("n_scores"))
-      .crossJoin(broadcast(scored.agg(count(lit(1)).as("n_total"))))
+      count(lit(1)).as("n_scores"),
+      sum(col("n")).as("n_total"))
       .select(col("n_pos0").as("n_pos"),
         (col("n_total") - col("n_pos0")).as("n_neg"),
         col("n_scores"),

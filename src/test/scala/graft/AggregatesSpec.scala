@@ -237,34 +237,6 @@ class AggregatesSpec extends SparkTestBase {
       e.getMessage)
   }
 
-  /** `body`'s value and the number of jobs it started on this thread
-    * (tagged; a marker job run after it flushes the listener queue).
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"graft_jobs_${java.util.UUID.randomUUID()}"
-    val marker = s"${tag}_marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val tags = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-          .fold(Set.empty[String])(_.split(",").toSet)
-        if (tags(tag)) jobs.incrementAndGet()
-        if (tags(marker)) flushed.countDown()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.addJobTag(tag)
-      val out = try body finally sc.removeJobTag(tag)
-      sc.addJobTag(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(marker)
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("agg_equidepth: the statistic builds in at most 7 jobs, then serves with none") {
     // a fresh copy of orders: a new fingerprint, so this call builds
     val dir = tempDir("graft_equidepth_")

@@ -8,7 +8,9 @@ import graft.operators._
   * accidental repartition) fails here before it ships. Broadcast
   * exchanges are not counted — they move the SMALL side and are the
   * fix, not the cost. The trailing range exchange is the presentation
-  * orderBy of the final result (bounded output), budgeted separately.
+  * orderBy of the final result (bounded output), budgeted separately:
+  * GraftExtensions' runtime rule sorts a small, materialized final
+  * result in one task, so most of these read 0 at test scale.
   */
 class PlanBudgetSpec extends SparkTestBase {
 
@@ -36,7 +38,8 @@ class PlanBudgetSpec extends SparkTestBase {
   test("agg_pricing is ONE data shuffle (partial -> final aggregate)") {
     val (hash, range) = shuffles(SparkEntry.queries("agg_pricing")(spark, sf))
     assert(hash === 1, s"map-side partial agg must leave one shuffle, got $hash")
-    assert(range <= 1)
+    // the presentation sort of its few rows runs in one task
+    assert(range === 0, s"got $range")
   }
 
   test("win_topk_group is ONE data shuffle (the window partition)") {

@@ -89,6 +89,8 @@ class ScanBudgetSpec extends SparkTestBase {
   pin("analytics_new_vs_returning", "orders", 1)
   pin("analytics_conversion_window", "events", 1)
   pin("ts_cusum", "events", 1)
+  // the row total is Σ n over the score groups, not a second scan
+  pin("analytics_auc", "embeddings", 1)
 
   test("tpch_q15 reads lineitem zero times in the consumer plan (barriered)") {
     assert(scansOf(SparkEntry.queries("tpch_q15")(spark, sf),

@@ -17,6 +17,34 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** `body`'s value and the number of jobs it started on this thread
+    * (tagged; a marker job run after it flushes the listener queue).
+    */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"graft_jobs_${java.util.UUID.randomUUID()}"
+    val marker = s"${tag}_marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val tags = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .fold(Set.empty[String])(_.split(",").toSet)
+        if (tags(tag)) jobs.incrementAndGet()
+        if (tags(marker)) flushed.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.addJobTag(tag)
+      val out = try body finally sc.removeJobTag(tag)
+      sc.addJobTag(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(marker)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
 
   /** A fresh temp directory, deleted recursively after this suite. */

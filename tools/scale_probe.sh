@@ -6,7 +6,9 @@
 # FACTOR x. exp ~1.0 = linear; > ~1.3 needs a docstring justification or a
 # fix (log-factor shuffles and n·log n sorts read ~1.0-1.15 at this grain).
 # Artifacts are cleared first so COLD includes artifact builds — for
-# artifact-backed queries the cold exponent is the scaling claim.
+# artifact-backed queries the cold exponent is the scaling claim. Each
+# timed run materializes every row (a `noop` write), after one untimed
+# warm-up of the JVM on a copy of the 1x corpus (see ScaleProbe).
 # Run from /root/repo. 10x takes ~10 min (corpus build ~2 min on first
 # use); 100x takes ~30-60 min and wants SPARK_DRIVER_MEM=24g.
 #
